@@ -22,7 +22,7 @@ import sys
 import time
 
 from sentiflow_spark.queries.registry import load_all
-from sentiflow_spark.session import get_spark
+from sentiflow_spark.session import get_spark, local_cpus
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -62,9 +62,9 @@ def main() -> None:
 
     spark.range(1000).groupBy((F.col("id") % 8).alias("k")).count().count()
     # ... and the window/sort + regexp/md5 expression machinery, which
-    # otherwise lands on whichever suite query happens to run first
-    # (suite order changes with registry rotation, so without this the
-    # first query's number is not comparable round-over-round)
+    # otherwise lands on whichever suite query runs first (the suite
+    # runs in registration order; without this warm-up the first
+    # query's number would carry this one-time cost)
     from pyspark.sql import Window as _W
 
     (
@@ -151,7 +151,7 @@ def main() -> None:
     # stdout tail capture — the final line must stay well under that
     # (tools/verify.py asserts < 1500 bytes).
     detail_obj = {"init_s": init_s, "sf": sf_val, "host": {**host, **in_run},
-                  "cpus": os.environ.get("SPARK_GRAFT_CPUS", "32"),
+                  "cpus": local_cpus(),
                   "pass1_queries": cold,
                   "pass2_queries": warm, "queries": timings, "value": total}
     repo_dir = os.path.dirname(os.path.abspath(__file__))

@@ -5,7 +5,8 @@ These are the building blocks for content ids (reference:
 ``hex(sha256(topic:source:post_id))``), MinHash signatures, SimHash
 fingerprints, and LSH bucketing.
 
-Every primitive has two renderings that produce *identical values*:
+The md5-prefix primitives have two renderings that produce *identical
+values*:
 
 - a Spark ``Column`` (JVM-side, codegen'd — no Python in the hot path),
 - a DuckDB SQL fragment (for the correctness oracle).
@@ -54,17 +55,9 @@ def md5_i60(col: Column) -> Column:
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
-def sha256_hex(col: Column) -> Column:
-    return F.sha2(col, 256)
-
-
 def content_id(*cols: Column) -> Column:
     """Reference id scheme: hex(sha256(a:b:c))."""
     return F.sha2(F.concat_ws(":", *cols), 256)
-
-
-def minhash_perm(token_hash: Column, a: int, b: int) -> Column:
-    return (token_hash * F.lit(a) + F.lit(b)) % F.lit(MERSENNE_31)
 
 
 # --------------------------------------------------------------- DuckDB side
@@ -77,11 +70,3 @@ def duck_md5_i32(expr: str) -> str:
 def duck_md5_i60(expr: str) -> str:
     """DuckDB fragment equal to md5_i60."""
     return f"CAST(('0x' || substr(md5({expr}), 1, 15)) AS BIGINT)"
-
-
-def duck_content_id(*exprs: str) -> str:
-    return f"sha256(concat_ws(':', {', '.join(exprs)}))"
-
-
-def duck_minhash_perm(hash_expr: str, a: int, b: int) -> str:
-    return f"(({hash_expr}) * {a} + {b}) % {MERSENNE_31}"

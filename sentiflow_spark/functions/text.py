@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-# Whitespace tokens (reference-free); BPE-ish lexical tokens: word /
+# Word tokens; BPE-ish lexical tokens: word /
 # number / single punctuation — a deterministic proxy for subword count.
 WORD_RE = "[a-zA-Z]+"
 BPE_RE = "[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\\s]"
@@ -28,11 +28,6 @@ LANG_MARKERS: dict[str, list[str]] = {
 }
 
 STOPWORDS_EN = ["the", "a", "of", "to", "and", "in", "is", "it", "for", "on"]
-
-
-def ws_tokens(text: Column) -> Column:
-    """Whitespace tokenization, empty strings dropped."""
-    return F.filter(F.split(text, "\\s+"), lambda t: t != "")
 
 
 def token_count(text: Column) -> Column:
@@ -149,14 +144,6 @@ def shingles_from_tokens(toks: Column, n: int = 3) -> Column:
     # guard: sequence(1, m<1) would count DOWN in Spark, and element_at
     # past the end throws under ANSI — short docs yield [] instead
     return F.array_distinct(grams)
-
-
-def shingles(text: Column, n: int = 3) -> Column:
-    """Distinct word n-gram shingles straight from text (1-based
-    element_at, so the Spark and DuckDB renderings are symmetric).
-    Prefer word_tokens + shingles_from_tokens across a projection
-    boundary in hot paths — see shingles_from_tokens."""
-    return shingles_from_tokens(word_tokens(text), n)
 
 
 def duck_shingles(t: str, n: int = 3) -> str:

@@ -161,9 +161,10 @@ def duck_plane_count(
 def duck_rp_bucket_dyn(
     qvec_expr: str, planes: list[list[int]], np_expr: str
 ) -> str:
-    """Like duck_rp_bucket, but only the first ``np_expr`` (a SQL
-    integer expression, e.g. a CTE column) of ``planes`` contribute
-    bits — the dynamic half of the adaptive_plane_count contract."""
+    """DuckDB random-projection bucket id in which only the first
+    ``np_expr`` (a SQL integer expression, e.g. a CTE column) of
+    ``planes`` contribute bits — the dynamic half of the
+    adaptive_plane_count contract."""
     terms = []
     for k, h in enumerate(planes):
         arr = "[" + ",".join(f"{c}.0" for c in h) + "]"
@@ -171,13 +172,4 @@ def duck_rp_bucket_dyn(
         terms.append(
             f"CASE WHEN {k} < {np_expr} AND {dot} > 0 THEN {2**k} ELSE 0 END"
         )
-    return "(" + " + ".join(terms) + ")"
-
-
-def duck_rp_bucket(qvec_expr: str, planes: list[list[int]]) -> str:
-    terms = []
-    for k, h in enumerate(planes):
-        arr = "[" + ",".join(f"{c}.0" for c in h) + "]"
-        dot = f"list_dot_product(CAST({qvec_expr} AS DOUBLE[]), {arr})"
-        terms.append(f"CASE WHEN {dot} > 0 THEN {2**k} ELSE 0 END")
     return "(" + " + ".join(terms) + ")"

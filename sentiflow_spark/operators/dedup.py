@@ -1292,7 +1292,6 @@ def winnow_contaminated_spans(
     w: int = WINNOW_W,
     merge_gap: int = SPAN_MERGE_GAP,
     min_fps: int = SPAN_MIN_FPS,
-    bench_flag_of_id: bool = False,
 ) -> DataFrame:
     """(id, span_start, span_end, n_shared) over NON-benchmark docs —
     maximal character ranges whose content also appears in a held-out
@@ -1302,9 +1301,13 @@ def winnow_contaminated_spans(
     benchmark question; this cuts just the quote, Lee et al. ACL 2022
     style, salvaging the rest of the page for training).
 
-    ``is_bench`` is a boolean Column over ``df`` marking the held-out
-    slice. Benchmark winnowed-hash set → semi-join flags training-doc
-    positions → per-doc islands; the winnowing guarantee carries over:
+    ``is_bench`` is a boolean Column marking the held-out slice. It
+    must reference ONLY ``id_col`` (the engine's bench-holdout
+    predicates are all ``doc_id % MOD == 0``): it is evaluated directly
+    on the position stream instead of joining a one-row-per-doc flag
+    table onto it — no join, and no exchange over the O(corpus/4.5)
+    position rows (guide §2.4). Benchmark winnowed-hash set → semi-join
+    flags training-doc positions → per-doc islands; the winnowing guarantee carries over:
     any train↔bench shared run >= w + k - 1 chars selects the same
     fingerprint in both, so no quotation longer than the guarantee is
     missed. Hash collisions only OVER-flag (cut slightly more text) —
@@ -1312,22 +1315,10 @@ def winnow_contaminated_spans(
     dd_decontaminate's 60-bit doc gate. No benchmark-to-train doc
     join: the benchmark hash set is a distinct partial-agg (tiny —
     benchmarks are thousands of docs, not billions) semi-joined onto
-    the training position stream.
-
-    ``bench_flag_of_id=True`` declares that ``is_bench`` references
-    ONLY ``id_col`` (the engine's bench-holdout predicates are all
-    ``doc_id % MOD == 0``): the flag is then evaluated directly on the
-    position stream instead of joining a one-row-per-doc flag table
-    onto it — one join (and its exchange over the O(corpus/4.5)
-    position rows) removed outright (guide §2.4). Identical flags by
-    construction: the predicate is a pure function of the id column
-    both frames carry."""
-    pos = _unpacked_positions(df, text_col, id_col, k, w)
-    if bench_flag_of_id:
-        pos = pos.withColumn("_is_bench", is_bench)
-    else:
-        flags = df.select(id_col, is_bench.alias("_is_bench"))
-        pos = pos.join(flags, id_col)
+    the training position stream."""
+    pos = _unpacked_positions(df, text_col, id_col, k, w).withColumn(
+        "_is_bench", is_bench
+    )
     bench_h = pos.filter(F.col("_is_bench")).select("h").distinct()
     flagged = (
         pos.filter(~F.col("_is_bench"))

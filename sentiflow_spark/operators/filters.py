@@ -15,11 +15,6 @@ from pyspark.sql import functions as F
 ROUTER_THRESHOLD_BYTES = 1024  # reference constant
 
 
-def non_empty_text(df: DataFrame, col: str = "text") -> DataFrame:
-    """F1: drop rows with empty content."""
-    return df.filter(F.col(col) != "")
-
-
 def useful_summary(df: DataFrame, summary: str = "summary", text: str = "text") -> DataFrame:
     """F2: drop summaries that are empty or identical to the source text."""
     return df.filter((F.col(summary) != "") & (F.col(summary) != F.col(text)))

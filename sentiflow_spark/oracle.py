@@ -25,7 +25,7 @@ from dataclasses import dataclass
 
 import duckdb
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 from sentiflow_spark.tables import TABLE_NAMES
 
@@ -177,23 +177,3 @@ def compare(
         sample_diff=diff,
         type_mismatch=mismatches or None,
     )
-
-
-def run_all(
-    spark: SparkSession, sf_dir: str, names: list[str] | None = None
-) -> dict[str, ParityReport | str]:
-    """Run every registered query against its oracle; returns per-name
-    report (or 'rows-only: N' for oracle-less entries)."""
-    from sentiflow_spark.queries.registry import load_all
-
-    registry = load_all()
-    out: dict[str, ParityReport | str] = {}
-    for name, q in registry.items():
-        if names and name not in names:
-            continue
-        df = q.fn(spark, sf_dir)
-        if q.oracle is None:
-            out[name] = f"rows-only: {df.count()}"
-        else:
-            out[name] = compare(name, df, q.oracle, sf_dir)
-    return out

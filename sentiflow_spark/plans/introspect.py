@@ -83,14 +83,6 @@ def has_cartesian(df: DataFrame) -> bool:
     return "CartesianProduct" in simple_plan(df)
 
 
-def codegen_stage_count(df: DataFrame) -> int:
-    """Distinct whole-stage-codegen spans ('*(n)' markers anywhere in
-    the simple plan — including ':-' branch children of joins)."""
-    import re
-
-    return len(set(re.findall(r"\*\((\d+)\)", simple_plan(df))))
-
-
 def python_eval_count(df: DataFrame) -> int:
     """Row-at-a-time Python UDF evaluation nodes — should be 0
     everywhere. Counts BatchEvalPython AND ArrowEvalPython: with

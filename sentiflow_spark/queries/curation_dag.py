@@ -201,9 +201,7 @@ def curation_stages(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
             wsrc = wsrc.repartition(
                 spark.sparkContext.defaultParallelism
             )
-    spans = winnow_contaminated_spans(
-        wsrc, is_bench=is_bench, bench_flag_of_id=True
-    )
+    spans = winnow_contaminated_spans(wsrc, is_bench=is_bench)
     # Pinned like docs_n/s5: the decontaminated accounting is the third
     # phase boundary a production pipeline persists. Without it the
     # winnow hashing pass re-executes once inside connected_components'

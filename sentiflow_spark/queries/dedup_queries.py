@@ -1414,5 +1414,4 @@ def dd_decontaminate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     return winnow_contaminated_spans(
         docs,
         is_bench=F.col("doc_id") % DECON_SPAN_MOD == 0,
-        bench_flag_of_id=True,
     )

@@ -9,6 +9,11 @@ large-scale training-data extensions) registers here with:
   get a weaker rows-only check),
 - ``tags`` — operator families for selection in tests/bench.
 
+The registry is a plain registration table: ``load_all()`` imports the
+query modules and returns every entry in registration order. It reads
+no files. Callers that want another order sort the result themselves
+(``__spark_entry__.queries()`` orders it for the CORRECTNESS window).
+
 The driver executes both sides at sf=0.01 and compares row count,
 schema, and an order-insensitive value hash; ``sentiflow_spark.oracle``
 implements the same comparison for local tests.
@@ -26,8 +31,8 @@ Cross-engine determinism rules every registered query follows:
    never dropDuplicates (whose pick is partition-order dependent).
 4. Column names are aliased identically on both sides.
 5. Collection-typed (array/map) output columns are serialized to
-   strings on both sides (``array_join``/``to_json`` vs
-   ``array_to_string``/``to_json``) — list cells crash the driver's
+   strings on both sides (``array_join`` vs ``array_to_string``, and
+   each engine's struct-to-text function for maps) — list cells crash
    pandas ``sort_values`` canonicalization.
 6. Integer-valued oracle aggregates are cast to BIGINT: DuckDB
    ``SUM(int)`` returns HUGEINT, which pandas coerces to float64 and
@@ -41,10 +46,7 @@ because the old tuple-based sweep could not see this class.
 
 from __future__ import annotations
 
-import glob
 import importlib
-import json
-import os
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
@@ -90,68 +92,6 @@ _QUERY_MODULES = (
     "sentiflow_spark.queries.tpch_extra",
     "sentiflow_spark.queries.corpus_queries",
 )
-
-# The driver's CORRECTNESS window covers the first ~50 entries of the
-# queries() dict, so load_all() orders DRIVER-UNVERIFIED queries first —
-# the window self-rotates onto fresh families every round as the driver
-# commits CORRECTNESS_r{N}.json back into the repo.  Within the
-# unverified set, families are fronted in this fixed order (round 3:
-# corpus_queries' 48 + the 2-query pandas tail fill the window exactly;
-# round 4 inherits streaming + text + expression_extra + the rel/tpch
-# tail).  The full family→round ledger lives in COVERAGE.md.
-_ROTATION = (
-    "corpus_queries",
-    "pandas_udf_queries",
-    "streaming_queries",
-    "text_queries",
-    "expression_extra",
-    "relational",
-    "tpch_extra",
-    "pipeline_queries",
-)
-
-
-def _driver_verified() -> tuple[frozenset[str], frozenset[str]]:
-    """Query names with a green row in any committed driver
-    CORRECTNESS_r*.json, split by the strength of the check:
-    ``(hash_verified, rows_only_seen)``.  Rows-only queries (declared
-    no-oracle ops — the driver only confirms they run and produce
-    rows) never reach the hash-verified set: they stay in the driver
-    rotation at reduced priority so every round re-exercises them,
-    rather than permanently leaving the window on a weak signal."""
-    root = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
-    seen: set[str] = set()
-    rows_only: set[str] = set()
-    for path in sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))):
-        try:
-            with open(path) as fh:
-                rows = json.load(fh)
-        except (OSError, ValueError):
-            continue
-        if not isinstance(rows, dict):
-            continue
-        for name, row in rows.items():
-            if not isinstance(row, dict):
-                continue
-            if row.get("err") == "no_oracle":
-                # declared rows-only contract: the driver saw it run
-                # and produce rows — a weaker state than hash-verified
-                if (row.get("spark_rows") or 0) > 0:
-                    rows_only.add(name)
-            elif (
-                row.get("err") is None
-                and row.get("rows_match")
-                and row.get("hash_match")
-            ):
-                # hash-fail rows stay UNverified so they re-enter the
-                # driver window after their oracle/representation fix
-                # (round 3 shipped 4 value-identical hash-fails caused
-                # by pandas canonicalization; see tools/pandas_canon.py)
-                seen.add(name)
-    return frozenset(seen), frozenset(rows_only - seen)
-
 
 # ---------------------------------------------------------------------------
 # Prepared-plan memo (r12 optimization round).
@@ -288,57 +228,9 @@ def register(
     return deco
 
 
-def _reverify_front() -> dict[str, int]:
-    """name -> rank from ROTATION_PLAN.json (tools/rotation_plan.py):
-    already-verified queries whose transitive implementing sources
-    changed since their last driver row, most-recently-touched first.
-    With the registry fully driver-verified (round 5), these fill the
-    otherwise-idle CORRECTNESS window as a regression rotation."""
-    root = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
-    try:
-        with open(os.path.join(root, "ROTATION_PLAN.json")) as fh:
-            plan = json.load(fh)
-        return {name: i for i, name in enumerate(plan.get("front", []))}
-    except (OSError, ValueError):
-        return {}
-
-
 def load_all() -> dict[str, Query]:
-    """Import every query module and return the full registry, ordered
-    for the driver's ~50-entry CORRECTNESS window: never-checked first
-    (see _ROTATION), then rows-only (weak check, re-exercised every
-    round), then the ROTATION_PLAN.json regression-rotation picks
-    (verified queries whose sources changed since their driver row),
-    then the remaining verified set."""
+    """Import every query module and return the full registry in
+    registration order (the order the ``register`` decorators ran)."""
     for mod in _QUERY_MODULES:
-        try:
-            importlib.import_module(mod)
-        except ModuleNotFoundError as exc:
-            # Allow partial builds while modules are still being added.
-            if exc.name != mod:
-                raise
-    verified, rows_only = _driver_verified()
-    refront = _reverify_front()
-    insertion = {name: i for i, name in enumerate(REGISTRY)}
-
-    def key(name: str) -> tuple[int, int, int, int]:
-        q = REGISTRY[name]
-        family = q.fn.__module__.rsplit(".", 1)[-1]
-        fam_rank = (
-            _ROTATION.index(family) if family in _ROTATION else len(_ROTATION)
-        )
-        # 0 = never driver-checked, 1 = rows-only (weak check: keep in
-        # the window every round), 2 = verified but fronted for
-        # re-verification by the committed rotation plan, 3 = verified
-        if name not in verified:
-            state = 1 if name in rows_only else 0
-        elif name in refront:
-            state = 2
-            return (state, refront[name], 0, insertion[name])
-        else:
-            state = 3
-        return (state, fam_rank, 0, insertion[name])
-
-    return {name: REGISTRY[name] for name in sorted(REGISTRY, key=key)}
+        importlib.import_module(mod)
+    return dict(REGISTRY)

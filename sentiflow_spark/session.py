@@ -15,6 +15,11 @@ from pyspark.sql import SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = "32"
 
 
+def local_cpus() -> str:
+    """Core count of the local master, ``$SPARK_GRAFT_CPUS`` (default 32)."""
+    return os.environ.get("SPARK_GRAFT_CPUS", "32")
+
+
 def get_spark(app_name: str = "sentiflow_spark", **extra_conf: str) -> SparkSession:
     """Build (or reuse) a SparkSession.
 
@@ -25,9 +30,10 @@ def get_spark(app_name: str = "sentiflow_spark", **extra_conf: str) -> SparkSess
       cross-system exchange),
     - Arrow enabled for the pandas-UDF slow path.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
-        SparkSession.builder.master(os.environ.get("SPARK_MASTER", f"local[{cpus}]"))
+        SparkSession.builder.master(
+            os.environ.get("SPARK_MASTER", f"local[{local_cpus()}]")
+        )
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", os.environ.get(
             "SPARK_GRAFT_SHUFFLE_PARTITIONS", DEFAULT_SHUFFLE_PARTITIONS))

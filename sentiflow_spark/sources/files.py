@@ -1,22 +1,9 @@
-"""Schema'd file sources/sinks and small-file compaction.
+"""Small-file compaction for file-backed tables.
 
-The reference ingests JSON over HTTP (NewsAPI/Reddit:
-``internal/clients/newsapi_client.go``, ``reddit_client.go``) and has
-no file IO at all; a lakehouse engine needs file round-trips as
-first-class operators. Three rules, all about 100 TB behavior:
-
-- **Schemas are always explicit.** ``inferSchema``/sampling reads the
-  data twice and can flip types between runs; at scale that's both a
-  correctness and a cost bug. Every reader here takes a StructType.
-- **Writers never produce a million tiny files.** Small files are the
-  classic lakehouse failure mode (NameNode/listing pressure, per-file
-  open cost dominating scans). ``compact`` rewrites a directory to
-  size-targeted files, optionally sorted for min/max row-group
-  skipping.
-- **CSV is for interchange only**: it is schemaless, un-splittable
-  when compressed with gzip, and type-lossy (timestamps/decimals round
-  through text) — parquet/ORC are the storage formats; both columnar
-  writers here are symmetric with the parquet path in tables.py.
+Small files are the classic lakehouse failure mode (NameNode/listing
+pressure, per-file open cost dominating scans). ``compact`` rewrites a
+directory to size-targeted files, optionally sorted for min/max
+row-group skipping; ``jobs compact`` runs it.
 """
 
 from __future__ import annotations
@@ -24,104 +11,7 @@ from __future__ import annotations
 import math
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
-
-
-def read_json(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
-    """JSON-lines reader with a mandatory schema. Unparseable rows are
-    preserved, not dropped: mode=PERMISSIVE nulls the bad row's columns
-    so downstream quality filters can count them (silent data loss at
-    ingest is unrecoverable)."""
-    return spark.read.schema(schema).option("mode", "PERMISSIVE").json(path)
-
-
-def write_json(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    df.write.mode(mode).json(path)
-
-
-def read_csv(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType,
-    header: bool = True,
-    **options: str,
-) -> DataFrame:
-    """CSV reader with a mandatory schema (no inferSchema double-scan).
-    Defaults cover RFC-4180-ish interchange: quoted fields, escaped
-    quotes, ISO timestamps."""
-    reader = (
-        spark.read.schema(schema)
-        .option("header", str(header).lower())
-        .option("mode", "PERMISSIVE")
-        .option("escape", '"')
-        .option("timestampFormat", "yyyy-MM-dd HH:mm:ss")
-        .option("timestampNTZFormat", "yyyy-MM-dd HH:mm:ss")
-    )
-    for k, v in options.items():
-        reader = reader.option(k, v)
-    return reader.csv(path)
-
-
-def write_csv(
-    df: DataFrame, path: str, header: bool = True, mode: str = "overwrite"
-) -> None:
-    (
-        df.write.mode(mode)
-        .option("header", str(header).lower())
-        .option("escape", '"')
-        .option("timestampFormat", "yyyy-MM-dd HH:mm:ss")
-        .option("timestampNTZFormat", "yyyy-MM-dd HH:mm:ss")
-        .csv(path)
-    )
-
-
-def read_orc(spark: SparkSession, path: str) -> DataFrame:
-    """ORC is self-describing (schema in footer, like parquet) — no
-    schema argument needed; pushdown/pruning work as with parquet."""
-    return spark.read.orc(path)
-
-
-def write_orc(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    df.write.mode(mode).orc(path)
-
-
-def read_xml(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType,
-    row_tag: str = "row",
-) -> DataFrame:
-    """XML ingest via Spark 4's NATIVE xml source (no external
-    spark-xml package). Like JSON, XML is not self-describing in a
-    typed sense — the explicit schema keeps the scan single-pass (no
-    inference job) and makes malformed-row behavior deterministic."""
-    return (
-        spark.read.schema(schema)
-        .option("rowTag", row_tag)
-        .option("mode", "PERMISSIVE")
-        .format("xml")
-        .load(path)
-    )
-
-
-def write_xml(
-    df: DataFrame,
-    path: str,
-    row_tag: str = "row",
-    root_tag: str = "rows",
-    mode: str = "overwrite",
-) -> None:
-    """XML export (one <row_tag> element per row, files wrapped in
-    <root_tag>). Feed/sitemap-style interchange; still written
-    distributed, one file per partition like every other text format."""
-    (
-        df.write.mode(mode)
-        .option("rowTag", row_tag)
-        .option("rootTag", root_tag)
-        .format("xml")
-        .save(path)
-    )
+from pyspark.sql import SparkSession
 
 
 def dir_bytes(spark: SparkSession, path: str) -> int:
@@ -138,11 +28,10 @@ def compact(
     spark: SparkSession,
     src: str,
     dest: str,
-    fmt: str = "parquet",
     target_file_mb: int = 128,
     sort_by: Sequence[str] = (),
 ) -> int:
-    """Rewrite a (possibly many-small-files) directory into
+    """Rewrite a (possibly many-small-files) parquet directory into
     size-targeted files; returns the output file count.
 
     - File count = ceil(bytes / target_file_mb), so output files land
@@ -159,36 +48,11 @@ def compact(
     reason the reference's DynamoDB writer batches then commits,
     ``internal/db/dynamodb.go:36``).
     """
-    df = getattr(spark.read, fmt)(src)
+    df = spark.read.parquet(src)
     n_files = max(1, math.ceil(dir_bytes(spark, src) / (target_file_mb * 1024**2)))
     if sort_by:
         df = df.repartitionByRange(n_files, *sort_by).sortWithinPartitions(*sort_by)
     else:
         df = df.repartition(n_files)
-    getattr(df.write.mode("overwrite"), fmt)(dest)
+    df.write.mode("overwrite").parquet(dest)
     return n_files
-
-
-def read_text(
-    spark: SparkSession,
-    path: str,
-    wholetext: bool = False,
-    line_sep: str | None = None,
-) -> DataFrame:
-    """Line-oriented text source (raw crawl dumps, log files, trainer
-    line formats): one ``value`` column per line (or per file with
-    ``wholetext``). Parsing stays DOWNSTREAM and declarative
-    (regexp_extract projections) so the scan remains splittable and
-    the parse runs codegen'd — never a per-line Python loop."""
-    reader = spark.read
-    if wholetext:
-        reader = reader.option("wholetext", "true")
-    if line_sep is not None:
-        reader = reader.option("lineSep", line_sep)
-    return reader.text(path)
-
-
-def write_text(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """Single-string-column text writer (the line format tokenizer
-    pipelines consume)."""
-    df.write.mode(mode).text(path)

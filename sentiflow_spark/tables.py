@@ -83,9 +83,3 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     df = _fix_nanos(spark.read.parquet(f"{sf_dir}/{name}.parquet"), nanos_cols)
     _CACHE[key] = df
     return df
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view (for spark.sql-based operators)."""
-    for name in TABLE_NAMES:
-        load(spark, sf_dir, name).createOrReplaceTempView(name)

@@ -151,19 +151,19 @@ def test_gate_catches_negative_zero(spark, sf_dir):
 
 
 def test_registry_window_ordering():
-    """The driver window composition contract: never-checked queries
-    first, then rows-only (re-exercised every round), then the
-    ROTATION_PLAN.json regression-rotation picks in plan order, then
-    the long-verified rest."""
+    """The CORRECTNESS window composition contract of
+    ``__spark_entry__.queries()``: never-checked queries first, then
+    rows-only (re-exercised every round), then the ROTATION_PLAN.json
+    regression-rotation picks in plan order, then the long-verified
+    rest."""
     import json
     import os
 
-    from sentiflow_spark.queries.registry import (
-        _driver_verified,
-        load_all,
-    )
+    import __spark_entry__ as entry_mod
+    from __spark_entry__ import _driver_verified
+    from sentiflow_spark.queries.registry import load_all
 
-    names = list(load_all())
+    names = list(entry_mod.queries())
     verified, rows_only = _driver_verified()
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     plan_path = os.path.join(root, "ROTATION_PLAN.json")
@@ -184,3 +184,41 @@ def test_registry_window_ordering():
     # sources first)
     picked = [n for n in names if state(n) == 2]
     assert picked == [n for n in front if n in set(picked)]
+    # the window order is a permutation of the registry, nothing more
+    assert sorted(names) == sorted(load_all())
+
+
+def test_load_all_is_registration_order():
+    """load_all() is the plain registration table: all 268 declared
+    queries, in the order their ``register`` decorators ran."""
+    from sentiflow_spark.queries.registry import REGISTRY, load_all
+
+    names = list(load_all())
+    assert len(names) == 268
+    assert names == list(REGISTRY)
+
+
+def test_registry_reads_no_repo_root_files(monkeypatch):
+    """The registry reads no committed result files (CORRECTNESS_r*.json,
+    ROTATION_PLAN.json) or any other repo-root file: the window order
+    is __spark_entry__'s business."""
+    import builtins
+    import inspect
+    import os
+
+    from sentiflow_spark.queries import registry
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    opened = []
+    real_open = builtins.open
+
+    def spy(file, *a, **kw):
+        opened.append(os.path.abspath(str(file)))
+        return real_open(file, *a, **kw)
+
+    monkeypatch.setattr(builtins, "open", spy)
+    registry.load_all()
+    monkeypatch.undo()
+    assert [p for p in opened if os.path.dirname(p) == root] == []
+    src = inspect.getsource(registry)
+    assert "CORRECTNESS_r" not in src and "ROTATION_PLAN" not in src

@@ -360,59 +360,6 @@ def test_json_file_source_roundtrip(spark, sf_dir):
         shutil.rmtree(d, ignore_errors=True)
 
 
-def test_csv_roundtrip_preserves_types_and_values(spark, sf_dir):
-    """CSV interchange: quoted/escaped text, timestamps, doubles all
-    survive a write+schema'd-read cycle over the orders table."""
-    import tempfile
-
-    from pyspark.sql import types as T
-
-    from sentiflow_spark.sources.files import read_csv, write_csv
-    from sentiflow_spark.tables import load
-
-    d = tempfile.mkdtemp(prefix="sf_csv_")
-    try:
-        orders = load(spark, sf_dir, "orders").filter("o_orderkey < 500")
-        write_csv(orders, d)
-        back = read_csv(
-            spark,
-            d,
-            T.StructType(
-                [
-                    T.StructField("o_orderkey", T.LongType()),
-                    T.StructField("o_custkey", T.LongType()),
-                    T.StructField("o_orderstatus", T.StringType()),
-                    T.StructField("o_totalprice", T.DoubleType()),
-                    T.StructField("o_orderdate", T.TimestampNTZType()),
-                    T.StructField("o_orderpriority", T.StringType()),
-                ]
-            ),
-        )
-        assert back.schema == orders.schema
-        assert back.exceptAll(orders).count() == 0
-        assert orders.exceptAll(back).count() == 0
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-
-
-def test_orc_roundtrip(spark, sf_dir):
-    import tempfile
-
-    from sentiflow_spark.sources.files import read_orc, write_orc
-    from sentiflow_spark.tables import load
-
-    d = tempfile.mkdtemp(prefix="sf_orc_")
-    try:
-        li = load(spark, sf_dir, "lineitem").filter("l_orderkey < 200")
-        write_orc(li, d)
-        back = read_orc(spark, d)
-        assert back.schema == li.schema
-        assert back.exceptAll(li).count() == 0
-        assert li.exceptAll(back).count() == 0
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-
-
 def test_compact_fixes_small_files_and_preserves_rows(spark, sf_dir):
     """200 tiny input files -> size-targeted output; row multiset
     unchanged; sorted variant writes disjoint key ranges per file."""
@@ -511,45 +458,6 @@ def test_streaming_checkpoint_incremental_recovery(spark, sf_dir):
         shutil.rmtree(ckpt, ignore_errors=True)
 
 
-def test_json_source_preserves_malformed_rows(spark):
-    """Ingest must never silently drop undecodable records (the
-    reference logs-and-continues on JSON errors, e.g.
-    internal/consumers/summary_consumer.go unmarshal paths; at scale
-    a dropped row is unrecoverable). PERMISSIVE mode nulls the
-    columns instead; rescue the raw line via _corrupt_record so bad
-    input stays countable AND re-processable."""
-    import tempfile
-
-    from pyspark.sql import types as T
-
-    d = tempfile.mkdtemp(prefix="sf_badjson_")
-    try:
-        good = ['{"id": 1, "v": "a"}', '{"id": 2, "v": "b"}']
-        bad = ['{"id": 3, "v": ', "not json at all"]
-        with open(f"{d}/data.json", "w") as f:
-            f.write("\n".join(good + bad))
-        schema = T.StructType(
-            [
-                T.StructField("id", T.LongType()),
-                T.StructField("v", T.StringType()),
-                T.StructField("_corrupt_record", T.StringType()),
-            ]
-        )
-        from sentiflow_spark.sources.files import read_json
-
-        back = read_json(spark, d, schema).cache()
-        assert back.count() == 4  # nothing dropped
-        ok_rows = back.filter(F.col("_corrupt_record").isNull())
-        assert sorted(r["id"] for r in ok_rows.collect()) == [1, 2]
-        corrupt = back.filter(F.col("_corrupt_record").isNotNull())
-        assert corrupt.count() == 2
-        # the raw text survives for quarantine/replay
-        assert sorted(r["_corrupt_record"] for r in corrupt.collect()) == sorted(bad)
-        back.unpersist()
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-
-
 def test_running_totals_tws_gate(spark, sf_dir):
     """running_user_totals_tws is the transformWithStateInPandas twin
     of the oracle-checked applyInPandasWithState operator. Its Python
@@ -619,39 +527,6 @@ def test_merge_upsert_migrates_legacy_flat_table(spark):
     assert ("k2", 2) not in got2
 
 
-def test_text_source_roundtrip_and_declarative_log_parse(spark, sf_dir):
-    """Line-oriented text IO: document texts round-trip through the
-    line format losslessly (newlines sanitized, as a trainer line
-    format requires), and a log-style parse is a pure regexp
-    projection over the value column — no Python loop."""
-    import tempfile
-
-    from sentiflow_spark.sources.files import read_text, write_text
-    from sentiflow_spark.tables import load
-
-    d = tempfile.mkdtemp(prefix="sf_text_")
-    try:
-        docs = load(spark, sf_dir, "documents").filter("doc_id < 100")
-        lines = docs.select(
-            F.concat(
-                F.col("doc_id").cast("string"), F.lit("\t"),
-                F.col("lang"), F.lit("\t"),
-                F.regexp_replace("text", "[\\r\\n\\t]", " "),
-            ).alias("value")
-        )
-        write_text(lines, d)
-        back = read_text(spark, d)
-        assert back.count() == 100
-        parsed = back.select(
-            F.regexp_extract("value", "^([0-9]+)\\t", 1).cast("long").alias("doc_id"),
-            F.regexp_extract("value", "^[0-9]+\\t([a-z]+)\\t", 1).alias("lang"),
-        )
-        orig = {(r.doc_id, r.lang) for r in docs.select("doc_id", "lang").collect()}
-        assert {(r.doc_id, r.lang) for r in parsed.collect()} == orig
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-
-
 def test_parquet_schema_evolution_merge_on_read(spark):
     """Schema evolution on an append-only parquet table: a later batch
     adds a column; mergeSchema reads the union schema with NULL
@@ -681,44 +556,6 @@ def test_parquet_schema_evolution_merge_on_read(spark):
         narrow = spark.read.schema("doc_id long, text string").parquet(d)
         assert set(narrow.columns) == {"doc_id", "text"}
         assert narrow.count() == 3
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-
-
-def test_xml_roundtrip(spark, sf_dir):
-    """Spark 4 native XML source: typed schema'd read back of a
-    distributed XML export equals the source rows exactly."""
-    import tempfile
-
-    from pyspark.sql import types as T
-
-    from sentiflow_spark.sources.files import read_xml, write_xml
-    from sentiflow_spark.tables import load
-
-    d = tempfile.mkdtemp(prefix="sf_xml_")
-    try:
-        src = (
-            load(spark, sf_dir, "nation")
-            .select("n_nationkey", "n_name", "n_regionkey")
-        )
-        write_xml(src, d, row_tag="nation", root_tag="nations")
-        schema = T.StructType(
-            [
-                T.StructField("n_nationkey", T.LongType()),
-                T.StructField("n_name", T.StringType()),
-                T.StructField("n_regionkey", T.LongType()),
-            ]
-        )
-        back = read_xml(spark, d, schema, row_tag="nation").select(
-            "n_nationkey", "n_name", "n_regionkey"
-        )
-        src_l = src.select(
-            src.n_nationkey.cast("long").alias("n_nationkey"),
-            "n_name",
-            src.n_regionkey.cast("long").alias("n_regionkey"),
-        )
-        assert back.exceptAll(src_l).count() == 0
-        assert src_l.exceptAll(back).count() == 0
     finally:
         shutil.rmtree(d, ignore_errors=True)
 

@@ -3,6 +3,10 @@ queries (shuffle/broadcast counts, scan pruning, pushed filters) plus
 the full formatted plan for a few exemplars.
 
 Run: python tools/dump_plans.py   (writes PLANS.md at the repo root)
+     python tools/dump_plans.py <round_dir> <suffix> <query> [...]
+       (writes ``.explain("formatted")`` of each named query to
+       plans/<round_dir>/<query>_<suffix>.txt, e.g.
+       ``python tools/dump_plans.py r13 before dd_boilerplate_lines``)
 
 This is the human-readable companion to tests/test_plans.py — the
 tests FAIL when a plan regresses; this file lets a reviewer see the
@@ -14,7 +18,8 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from sentiflow_spark.plans import introspect as I  # noqa: E402
 from sentiflow_spark.queries.registry import load_all  # noqa: E402
@@ -24,7 +29,25 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 EXEMPLARS = ("pl_e2e_results", "rel_q3_shipping_priority", "dd_minhash_lsh_pairs")
 
 
-def main() -> None:
+def dump_formatted(round_dir: str, suffix: str, names: list[str]) -> None:
+    out_dir = os.path.join(ROOT, "plans", round_dir)
+    os.makedirs(out_dir, exist_ok=True)
+    spark = get_spark("dump-plans")
+    registry = load_all()
+    for n in names:
+        df = registry[n].fn(spark, SF_DIR)
+        plan = df._jdf.queryExecution().explainString(
+            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+                "formatted"
+            )
+        )
+        path = os.path.join(out_dir, f"{n}_{suffix}.txt")
+        with open(path, "w") as fh:
+            fh.write(plan)
+        print(path)
+
+
+def write_plans_md() -> None:
     spark = get_spark("dump-plans")
     registry = load_all()
     names = sorted(
@@ -83,10 +106,20 @@ def main() -> None:
         "`tests/test_sinks.py::test_merge_upsert_leaves_untouched_buckets_alone`",
         "pins the property (untouched bucket files byte- and mtime-identical).",
     ]
-    out = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md")
+    out = os.path.join(ROOT, "PLANS.md")
     with open(out, "w") as f:
         f.write("\n".join(lines) + "\n")
     print(f"wrote {out} ({len(names)} queries)")
+
+
+def main() -> None:
+    if len(sys.argv) == 1:
+        write_plans_md()
+    elif len(sys.argv) >= 4:
+        round_dir, suffix, *names = sys.argv[1:]
+        dump_formatted(round_dir, suffix, names)
+    else:
+        raise SystemExit(__doc__)
 
 
 if __name__ == "__main__":

@@ -7,13 +7,13 @@ use of it is guarding against regressions: a query verified in round N
 whose transitive implementing sources changed in a LATER commit is
 running code the driver has never hash-checked. This tool derives that
 set mechanically and writes ROTATION_PLAN.json (repo root), which
-``queries.registry.load_all`` fronts between the rows-only queries and
+``__spark_entry__.queries()`` fronts between the rows-only queries and
 the rest of the verified set.
 
 Derivation:
 1. last-verified round per query <- committed CORRECTNESS_r*.json
    (green hash rows only; rows-only stays in the window every round
-   via the registry's own state machine),
+   via ``__spark_entry__``'s window ordering),
 2. verified-at date per query <- the driver's "round N:" boundary
    commit timestamps,
 3. per-query source set <- the query family module plus its TRANSITIVE
