@@ -20,6 +20,13 @@ transactions. (With a Delta/Iceberg runtime this function becomes a
 single ``MERGE INTO`` — the bucket layout maps 1:1 onto their
 clustered-write story.)
 
+Execution: the batch's plan runs once per merge — one eager pin of
+the incoming rows whose ``observe`` names the touched buckets, then an
+in-place dynamic-overwrite write straight from the merge plan whose own
+``observe`` names the buckets still holding rows. Into an existing
+table that is 5 Spark jobs: table listing, parquet schema, the pin, and
+the write's shuffle map and result stages (see ``merge_upsert``).
+
 TTL (W2): rows are stamped ``created_at``/``ttl`` on write
 (dynamodb.go:34,200-201 parity) and a retention sweep drops expired
 rows on each merge — DynamoDB-TTL semantics without a background
@@ -28,9 +35,7 @@ scanner.
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
@@ -55,19 +60,24 @@ def _bucket_of(key: str, n_buckets: int):
     return F.pmod(F.hash(F.col(key)), F.lit(n_buckets))
 
 
-def _drop_partition_dirs(
-    spark: SparkSession, table_path: str, buckets: list[int], pcol: str = "_bucket"
-) -> None:
-    """Remove bucket partition dirs whose merged content became empty
-    (dynamic overwrite only replaces partitions that receive output
-    rows). Goes through the Hadoop FileSystem API so it works on any
-    supported filesystem, not just local paths."""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    for b in buckets:
-        p = jvm.org.apache.hadoop.fs.Path(f"{table_path}/{pcol}={b}")
-        fs = p.getFileSystem(conf)
-        fs.delete(p, True)
+class _TableDir:
+    """The table's root directory on its Hadoop FileSystem. Existence
+    checks and deletes go through the FileSystem API so a merge works
+    the same on a plain local path, a ``file://`` URI or any other
+    supported filesystem."""
+
+    def __init__(self, spark: SparkSession, table_path: str) -> None:
+        self._path = spark._jvm.org.apache.hadoop.fs.Path
+        self._root = self._path(table_path)
+        self._fs = self._root.getFileSystem(spark._jsc.hadoopConfiguration())
+
+    def exists(self) -> bool:
+        return self._fs.isDirectory(self._root)
+
+    def delete(self, pattern: str) -> None:
+        """Recursively delete every root entry matching glob ``pattern``."""
+        for status in self._fs.globStatus(self._path(self._root, pattern)) or []:
+            self._fs.delete(status.getPath(), True)
 
 
 def merge_upsert(
@@ -103,6 +113,16 @@ def merge_upsert(
     incremental path. Pinned by
     tests/test_sinks.py::test_merge_upsert_partition_col_converges_to_fold.
 
+    Execution: ``new_rows`` runs exactly once. Into an existing
+    bucketed table the incoming batch is pinned with one eager
+    ``localCheckpoint`` whose ``observe`` yields the touched partition
+    set; the merged plan (pinned batch ∪ touched partitions, first row
+    per key) is written in place by dynamic partition overwrite, and
+    an ``observe`` on that write yields the surviving partitions, so a
+    touched partition left empty can be deleted. No other scan runs
+    apart from the retention probe. A new table or a one-time legacy
+    migration is written straight from ``new_rows`` with no pin.
+
     Scale shape: only buckets present in the batch (plus buckets
     holding expired rows during a retention sweep) are read and
     rewritten — partition pruning keeps the read side to those
@@ -117,7 +137,8 @@ def merge_upsert(
         if partition_col
         else new_rows.withColumn("_bucket", _bucket_of(key, n_buckets))
     ).withColumn("_pri", F.lit(0))
-    exists = os.path.isdir(table_path)
+    table = _TableDir(spark, table_path)
+    exists = table.exists()
     touched: set[int] = set()
     migrating = False
     if exists:
@@ -138,9 +159,14 @@ def merge_upsert(
                 "_bucket", _bucket_of(key, n_buckets)
             ).withColumn("_pri", F.lit(1))
         else:
-            touched = {
-                r[pcol] for r in incoming.select(pcol).distinct().collect()
-            }
+            # One job runs the batch's plan: the pin keeps its rows for
+            # the write below and the observation names the partitions
+            # they land in.
+            seen = Observation()
+            incoming = incoming.observe(
+                seen, F.collect_set(pcol).alias("p")
+            ).localCheckpoint(eager=True)
+            touched = set(seen.get["p"])
             if retention_cutoff_expr:
                 expired = (
                     current.filter(F.col("ttl") < F.expr(retention_cutoff_expr))
@@ -163,10 +189,16 @@ def merge_upsert(
     )
     if retention_cutoff_expr:
         merged = merged.filter(F.col("ttl") >= F.expr(retention_cutoff_expr))
-    # Materialize before overwriting: the plan reads the same partition
-    # files the write replaces. localCheckpoint is O(touched buckets),
-    # unlike the previous full-table staging write-then-swap.
-    merged = merged.localCheckpoint(eager=True)
+    if touched:
+        written = Observation()
+        merged = merged.observe(written, F.collect_set(pcol).alias("p"))
+    # The plan reads the partitions this write replaces, yet needs no
+    # materialized copy: the key window's exchange makes every read of
+    # the old files happen in the shuffle map stage, and the dynamic-
+    # overwrite commit writes into a staging directory and swaps the
+    # partitions in only at job commit, after that stage has finished.
+    # A retried write task re-reads shuffle output; a lost map output
+    # is recomputed from old files still in place until that commit.
     (
         merged.write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
@@ -177,18 +209,13 @@ def merge_upsert(
         # The legacy table's flat part-files live at the table root;
         # dynamic overwrite only replaced _bucket=* partitions, so
         # remove the old files or reads would double-count.
-        jvm = spark._jvm
-        conf = spark._jsc.hadoopConfiguration()
-        root = jvm.org.apache.hadoop.fs.Path(table_path)
-        fs = root.getFileSystem(conf)
-        for status in fs.globStatus(jvm.org.apache.hadoop.fs.Path(f"{table_path}/part-*")):
-            fs.delete(status.getPath(), False)
-    elif exists:
+        table.delete("part-*")
+    elif touched:
         # A touched bucket whose merged content is now empty produces
         # no output rows, so dynamic overwrite leaves its stale files
         # in place — clear those partitions explicitly.
-        survivors = {r[pcol] for r in merged.select(pcol).distinct().collect()}
-        _drop_partition_dirs(spark, table_path, sorted(touched - survivors), pcol)
+        for p in sorted(touched - set(written.get["p"])):
+            table.delete(f"{pcol}={p}")
 
 
 def results_sink(table_path: str, key: str = "content_id"):

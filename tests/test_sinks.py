@@ -130,6 +130,131 @@ def test_merge_upsert_partition_col_converges_to_fold(spark):
         assert {(r.key, r.part, r.v) for r in _read(spark, path).collect()} == want
 
 
+def _bucket_count(df, key="content_id"):
+    return df.select(F.pmod(F.hash(key), F.lit(64))).distinct().count()
+
+
+def _tree(path):
+    """Every file under ``path`` (hidden ones too) → (size, mtime)."""
+    return {
+        os.path.join(d, f): (os.path.getsize(os.path.join(d, f)),
+                             os.path.getmtime(os.path.join(d, f)))
+        for d, _, fs in os.walk(path)
+        for f in fs
+    }
+
+
+def test_merge_upsert_file_uri_table_path(spark):
+    """A ``file://`` table path is recognised as an existing table: the
+    second merge folds into the first instead of overwriting the
+    batch's buckets with only its own rows."""
+    path = "file://" + os.path.join(tempfile.mkdtemp(), "tbl")
+    keys = [f"k{i}" for i in range(200)]
+    merge_upsert(
+        spark, spark.createDataFrame([(k, 1) for k in keys], ["content_id", "v"]),
+        path, "content_id",
+    )
+    merge_upsert(
+        spark, spark.createDataFrame([("k0", 2), ("new", 3)], ["content_id", "v"]),
+        path, "content_id",
+    )
+    got = {(r.content_id, r.v) for r in _read(spark, path).collect()}
+    assert got == {(k, 1) for k in keys[1:]} | {("k0", 2), ("new", 3)}
+
+
+def test_merge_upsert_single_pass_job_budget(spark):
+    """A merge into an existing 64-bucket table, with a batch touching
+    every bucket, runs at most 5 Spark jobs (listing, schema, the pin of
+    the batch, the write's shuffle map and result stages) and evaluates
+    the batch's plan exactly once: a Python UDF in ``new_rows`` sees
+    each input row one time."""
+    import uuid
+
+    sc = spark.sparkContext
+    path = os.path.join(tempfile.mkdtemp(), "tbl")
+    merge_upsert(
+        spark,
+        spark.createDataFrame([(f"k{i}", 1) for i in range(2000)], ["content_id", "v"]),
+        path,
+        "content_id",
+    )
+    rows = [(f"k{i}", 2) for i in range(0, 2000, 2)] + [(f"n{i}", 3) for i in range(200)]
+    batch = spark.createDataFrame(rows, ["content_id", "v"])
+    assert _bucket_count(batch) == 64
+
+    calls = sc.accumulator(0)
+
+    def tap(k):
+        calls.add(1)
+        return k
+
+    # the key goes through the UDF, so no plan that needs the touched
+    # buckets can prune it away
+    new_rows = batch.withColumn("content_id", F.udf(tap, "string")("content_id"))
+    group = f"merge-budget-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "merge_upsert job budget")
+    try:
+        merge_upsert(spark, new_rows, path, "content_id")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert n_jobs <= 5, f"merge ran {n_jobs} Spark jobs"
+    assert calls.value == len(rows), f"flow ran {calls.value / len(rows):g}x"
+    got = dict(_read(spark, path).select("content_id", "v").collect())
+    assert len(got) == 2200 and got["k0"] == 2 and got["k1"] == 1 and got["n0"] == 3
+
+
+def test_merge_upsert_empty_batch_leaves_table_untouched(spark):
+    """An empty batch rewrites nothing: every file of the table — part
+    files, markers and checksums — keeps its name, size and mtime. The
+    batch is empty only at run time, as a micro-batch whose rows were
+    all filtered out is, so the merge's write path runs."""
+    path = os.path.join(tempfile.mkdtemp(), "tbl")
+    merge_upsert(
+        spark,
+        spark.createDataFrame([(f"k{i}", 1) for i in range(300)], ["content_id", "v"]),
+        path,
+        "content_id",
+    )
+    before = _tree(path)
+    empty = spark.range(10).selectExpr("cast(id as string) content_id", "id v")
+    merge_upsert(spark, empty.filter("v > 100"), path, "content_id")
+    assert _tree(path) == before
+    assert _read(spark, path).count() == 300
+
+
+def test_merge_upsert_default_buckets_converges_to_fold(spark):
+    """The in-place rewrite of every bucket at once (a batch touching
+    all 64 default buckets, as a busy stream's micro-batch does) still
+    equals the last-write-wins fold of the batches, replaying the last
+    batch changes nothing, and no dynamic-overwrite staging directory
+    is left behind."""
+    import random
+
+    rng = random.Random(0x5EED)
+    keys = [f"k{i}" for i in range(1500)]
+    path = os.path.join(tempfile.mkdtemp(), "tbl")
+    model: dict[str, int] = {}
+    batches = []
+    for _ in range(3):
+        rows = [(k, rng.randrange(10**6)) for k in rng.sample(keys, rng.randint(400, 900))]
+        batches.append(rows)
+        model.update(rows)
+    for rows in batches:
+        batch = spark.createDataFrame(rows, ["content_id", "v"])
+        assert _bucket_count(batch) == 64
+        merge_upsert(spark, batch, path, "content_id")
+    got = sorted(map(tuple, _read(spark, path).select("content_id", "v").collect()))
+    assert got == sorted(model.items())
+    merge_upsert(
+        spark, spark.createDataFrame(batches[-1], ["content_id", "v"]), path, "content_id"
+    )
+    again = sorted(map(tuple, _read(spark, path).select("content_id", "v").collect()))
+    assert again == got
+    assert not [n for n in os.listdir(path) if n.startswith(".spark-staging")]
+
+
 def test_managed_ivf_index_reuse_and_rebuild(spark, sf_dir):
     """sim_ivf_served's managed index lifecycle: the first build
     commits Spark's _SUCCESS marker; a second invocation REUSES the

@@ -99,8 +99,10 @@ def write_plans_md() -> None:
         "read side is pruned to the buckets present in the batch (plus buckets",
         "holding expired rows when a retention sweep runs) via a partition",
         "filter on `_bucket`; the write side rewrites only those partitions",
-        "(`partitionOverwriteMode=dynamic`), after a `localCheckpoint` cuts the",
-        "self-read lineage. Per-batch I/O is O(touched buckets) ≈ O(batch keys)",
+        "(`partitionOverwriteMode=dynamic`) straight from the merge plan: the",
+        "key window's shuffle reads the old files before the staged commit swaps",
+        "them, and the incoming batch is pinned once so its plan runs once.",
+        "Per-batch I/O is O(touched buckets) ≈ O(batch keys)",
         "— previously the whole table was read, shuffled through a global",
         "row_number window, and written twice per batch.",
         "`tests/test_sinks.py::test_merge_upsert_leaves_untouched_buckets_alone`",
