@@ -15,10 +15,10 @@ SURVEY §3) as one CLI:
   summarize → score → shape → TTL stamp → idempotent MERGE into the
   serving table (streaming/sinks.py) — replayable: re-running converges
   to the same table state.
-- **stream** (consumer DAG, streaming deployment): the same transforms
-  under Structured Streaming with an ``availableNow`` trigger and a
-  ``foreachBatch`` MERGE sink; swap the file source for Kafka via
-  ``--kafka-brokers`` in production.
+- **stream** (consumer DAG, streaming deployment): the same
+  ``sentiment_pipeline`` function under Structured Streaming with an
+  ``availableNow`` trigger and a ``foreachBatch`` MERGE sink; swap the
+  file source for Kafka via ``--kafka-brokers`` in production.
 - **topics** (topic-generator analog): headlines → stub/LLM topic
   extraction → dedup → anti-join vs the stored snapshot (read-once, the
   reference's staleness semantics) → MERGE upsert.
@@ -126,8 +126,11 @@ def run_gated_rounds(
 def job_stream(args: argparse.Namespace) -> dict:
     import tempfile
 
-    from sentiflow_spark.pipeline.batch import documents_as_raw_content
-    from sentiflow_spark.streaming.dag import load_stream, streaming_sentiment_flow
+    from sentiflow_spark.pipeline.batch import (
+        documents_as_raw_content,
+        sentiment_pipeline,
+    )
+    from sentiflow_spark.streaming.dag import load_stream
     from sentiflow_spark.streaming.sinks import results_sink
 
     spark = _spark("sentiflow-stream")
@@ -135,7 +138,7 @@ def job_stream(args: argparse.Namespace) -> dict:
 
     def make_query():
         docs = load_stream(spark, args.sf_dir, "documents")
-        flow = streaming_sentiment_flow(
+        flow = sentiment_pipeline(
             documents_as_raw_content(docs), router_threshold=args.router_threshold
         )
         return (
@@ -161,12 +164,13 @@ def job_stream(args: argparse.Namespace) -> dict:
 
 def job_topics(args: argparse.Namespace) -> dict:
     from sentiflow_spark.pipeline.topics import generate_topics
+    from sentiflow_spark.sources.files import TableDir
     from sentiflow_spark.streaming.sinks import merge_upsert
     from sentiflow_spark.tables import load
 
     spark = _spark("sentiflow-topics")
     headlines = load(spark, args.sf_dir, "documents")
-    if args.stored and os.path.isdir(args.stored):
+    if args.stored and TableDir(spark, args.stored).exists():
         stored = spark.read.parquet(args.stored)
     else:  # first run: empty snapshot with the right schema
         stored = spark.createDataFrame([], "url STRING")
@@ -408,7 +412,7 @@ def job_compact(args: argparse.Namespace) -> dict:
     """Small-file maintenance as a runnable job: rewrite --src into
     size-targeted files at --out (sources/files.py::compact), sorted
     by --sort-by when given for min/max file skipping."""
-    from sentiflow_spark.sources.files import compact, dir_bytes
+    from sentiflow_spark.sources.files import TableDir, compact
 
     spark = _spark("sentiflow-compact")
     if not args.src:
@@ -419,7 +423,7 @@ def job_compact(args: argparse.Namespace) -> dict:
         target_file_mb=args.target_file_mb, sort_by=sort_by,
     )
     return {"job": "compact", "files_out": n,
-            "bytes": dir_bytes(spark, args.out), "sink": args.out}
+            "bytes": TableDir(spark, args.out).size_bytes(), "sink": args.out}
 
 
 def job_audit(args: argparse.Namespace) -> dict:

@@ -1,7 +1,6 @@
-"""Filters and the length router (SURVEY §2.4, F1–F3/F5).
+"""The length router (SURVEY §2.4, F3). The F2 summary filter and F5
+zero-value fill live in ``pipeline.batch.sentiment_pipeline``.
 
-- F1 empty-content filter: ``internal/producer/fetch.go:157``.
-- F2 low-value summary filter: ``internal/consumers/summary_consumer.go:100-104``.
 - F3 length router (>1024 **bytes** — Go ``len`` counts bytes, so the
   Spark expression is ``octet_length``, not ``length``):
   ``internal/consumers/raw_content_consumer.go:55-58``.
@@ -13,11 +12,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 ROUTER_THRESHOLD_BYTES = 1024  # reference constant
-
-
-def useful_summary(df: DataFrame, summary: str = "summary", text: str = "text") -> DataFrame:
-    """F2: drop summaries that are empty or identical to the source text."""
-    return df.filter((F.col(summary) != "") & (F.col(summary) != F.col(text)))
 
 
 def needs_summary(col: Column, threshold: int = ROUTER_THRESHOLD_BYTES) -> Column:

@@ -7,7 +7,6 @@ shuffles the big side:
 
 - J1 score join-back (left outer + zero-value fill, the F5 quirk):
   ``internal/consumers/sentiment_analysis_consumer.go:64-79,117-125``.
-- J2 summary join-back (inner): ``internal/consumers/summary_consumer.go:95-119``.
 - J3 category→subreddits dim expansion: ``internal/producer/fetch.go:49-57,77-90``.
 - J4/J5 anti-joins (stored topics / processed posts):
   ``internal/topic_generation/topic_generation.go:219-236``,
@@ -31,12 +30,6 @@ def score_join_back(requests: DataFrame, scores: DataFrame) -> DataFrame:
         .withColumn("sentiment_label", F.coalesce("sentiment_label", F.lit("")))
         .withColumn("confidence", F.coalesce("confidence", F.lit(0.0)))
     )
-
-
-def summary_join_back(batch: DataFrame, summaries: DataFrame) -> DataFrame:
-    """J2: inner join — rows without a summary are dropped (the F2
-    quality filter runs after)."""
-    return batch.join(F.broadcast(summaries), "content_id", "inner")
 
 
 def expand_topics_by_category(topics: DataFrame, category_dim: DataFrame) -> DataFrame:

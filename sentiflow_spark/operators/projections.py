@@ -3,8 +3,6 @@
 Reference parity notes (citations into /root/reference):
 - P2 RedditPost→RawContent: ``internal/producer/fetch.go:184-198`` —
   deterministic sha256 content id + nested metadata struct.
-- P3 RawContent→SentimentAnalysisInput: ``internal/utils/raw_to_sa_input.go:7-13``.
-- P4 summarized-input rebuild: ``internal/consumers/summary_consumer.go:184-197``.
 - P6 JSON (de)serialization: ``internal/utils/kafka_helpers.go:8-26``.
 - K3 row shaping for the serving store: ``internal/db/dynamodb.go:191-236``
   (optional fields elided — empty string stored as absent → NULL here).
@@ -45,23 +43,6 @@ def to_raw_content(
     if metadata:
         cols.append(F.struct(*[c.alias(k) for k, c in metadata.items()]).alias("metadata"))
     return df.select(*cols)
-
-
-def to_sentiment_input(df: DataFrame) -> DataFrame:
-    """P3: RawContent → analysis input (``was_summarized`` = false)."""
-    return df.withColumn("was_summarized", F.lit(False)).withColumn(
-        "original_text", F.lit(None).cast("string")
-    )
-
-
-def rebuild_summarized_input(df: DataFrame, summary_col: str = "summary") -> DataFrame:
-    """P4: swap summary into ``text``, keep the original, flag the row."""
-    return (
-        df.withColumn("original_text", F.col("text"))
-        .withColumn("text", F.col(summary_col))
-        .withColumn("was_summarized", F.lit(True))
-        .drop(summary_col)
-    )
 
 
 def request_batch(df: DataFrame) -> DataFrame:

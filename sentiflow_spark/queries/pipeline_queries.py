@@ -24,7 +24,11 @@ from sentiflow_spark.operators.joins import (
     score_join_back,
 )
 from sentiflow_spark.operators.projections import request_batch
-from sentiflow_spark.pipeline.batch import documents_as_raw_content, sentiment_pipeline
+from sentiflow_spark.pipeline.batch import (
+    DUCK_RAW,
+    documents_as_raw_content,
+    sentiment_pipeline,
+)
 from sentiflow_spark.pipeline.stubs import (
     DUCK_LABEL,
     DUCK_SCORE,
@@ -34,12 +38,6 @@ from sentiflow_spark.queries.registry import register
 from sentiflow_spark.tables import load
 
 ROUTER_T = 256
-
-# Reused oracle CTE: documents → RawContent records.
-DUCK_RAW = (
-    "SELECT sha256(concat_ws(':', lang, source, doc_id)) AS content_id, "
-    "source, lang AS topic, text FROM documents"
-)
 
 
 @register(

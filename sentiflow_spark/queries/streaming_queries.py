@@ -8,13 +8,16 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from sentiflow_spark.operators.projections import to_raw_content
+from sentiflow_spark.pipeline.batch import (
+    DUCK_RAW,
+    documents_as_raw_content,
+    sentiment_pipeline,
+)
 from sentiflow_spark.pipeline.stubs import DUCK_LABEL, DUCK_SCORE
 from sentiflow_spark.queries.registry import register
 from sentiflow_spark.streaming.dag import (
     load_stream,
     run_to_table,
-    streaming_sentiment_flow,
     watermarked_dedup,
     windowed_counts,
 )
@@ -22,16 +25,12 @@ from sentiflow_spark.streaming.dag import (
 from pyspark.sql import functions as F
 
 ROUTER_T = 256
-_DUCK_RAW = (
-    "SELECT sha256(concat_ws(':', lang, source, doc_id)) AS content_id, "
-    "source, lang AS topic, text FROM documents"
-)
 
 
 @register(
     "st_pipeline_e2e",
     oracle=f"""
-    WITH raw AS ({_DUCK_RAW}),
+    WITH raw AS ({DUCK_RAW}),
     long_b AS (SELECT * FROM raw WHERE strlen(text) > {ROUTER_T}),
     united AS (
       SELECT content_id, source, topic, text, FALSE AS was_summarized,
@@ -60,15 +59,8 @@ _DUCK_RAW = (
     "(file source, availableNow) — streaming results hash-match batch SQL.",
 )
 def st_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_stream(spark, sf_dir, "documents")
-    raw = to_raw_content(
-        docs,
-        topic=F.col("lang"),
-        source=F.col("source"),
-        post_id=F.col("doc_id"),
-        text=F.col("text"),
-    )
-    return run_to_table(streaming_sentiment_flow(raw, router_threshold=ROUTER_T))
+    raw = documents_as_raw_content(load_stream(spark, sf_dir, "documents"))
+    return run_to_table(sentiment_pipeline(raw, router_threshold=ROUTER_T))
 
 
 @register(

@@ -1,4 +1,9 @@
-"""Small-file compaction for file-backed tables.
+"""Hadoop-FileSystem access to table directories, and small-file
+compaction for file-backed tables.
+
+``TableDir`` is the one place the engine asks the filesystem about a
+table path, so every caller behaves the same on a plain local path, a
+``file://`` URI or any other scheme Spark can read.
 
 Small files are the classic lakehouse failure mode (NameNode/listing
 pressure, per-file open cost dominating scans). ``compact`` rewrites a
@@ -14,14 +19,29 @@ from collections.abc import Sequence
 from pyspark.sql import SparkSession
 
 
-def dir_bytes(spark: SparkSession, path: str) -> int:
-    """Total byte size of a data directory via the Hadoop FS API (works
-    for any scheme Spark can read: file://, hdfs://, s3a://...)."""
-    jvm = spark.sparkContext._jvm
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(hconf)
-    return fs.getContentSummary(p).getLength()
+class TableDir:
+    """A table's root path on its Hadoop FileSystem. Existence checks,
+    sizes and deletes go through the FileSystem API, never ``os.path``
+    (which knows nothing of URIs: ``os.path.isdir("file:///t")`` is
+    false for an existing directory)."""
+
+    def __init__(self, spark: SparkSession, table_path: str) -> None:
+        self._path = spark._jvm.org.apache.hadoop.fs.Path
+        self._root = self._path(table_path)
+        self._fs = self._root.getFileSystem(spark._jsc.hadoopConfiguration())
+
+    def exists(self) -> bool:
+        """True when the path is a directory (a directory-of-parts table)."""
+        return self._fs.isDirectory(self._root)
+
+    def size_bytes(self) -> int:
+        """Total byte size of everything under the path."""
+        return self._fs.getContentSummary(self._root).getLength()
+
+    def delete(self, pattern: str) -> None:
+        """Recursively delete every root entry matching glob ``pattern``."""
+        for status in self._fs.globStatus(self._path(self._root, pattern)) or []:
+            self._fs.delete(status.getPath(), True)
 
 
 def compact(
@@ -49,7 +69,8 @@ def compact(
     ``internal/db/dynamodb.go:36``).
     """
     df = spark.read.parquet(src)
-    n_files = max(1, math.ceil(dir_bytes(spark, src) / (target_file_mb * 1024**2)))
+    src_bytes = TableDir(spark, src).size_bytes()
+    n_files = max(1, math.ceil(src_bytes / (target_file_mb * 1024**2)))
     if sort_by:
         df = df.repartitionByRange(n_files, *sort_by).sortWithinPartitions(*sort_by)
     else:

@@ -1,6 +1,6 @@
-"""Structured Streaming realization of the reference's 4-stage DAG
-(SURVEY §3.2) plus the streaming-native operators (watermarked dedup,
-event-time windows).
+"""Structured Streaming side of the engine: the file-source reader the
+sentiment dataflow streams from, plus the streaming-native operators
+(watermarked dedup, event-time windows, custom stateful operators).
 
 The reference wires four consumer processes through Kafka topics with
 hand-built transactions, offset tracking, retries, and micro-batch
@@ -11,9 +11,11 @@ In Spark all of that collapses into checkpointed streaming queries:
   idempotent MERGE sink (K1/K2 parity without any custom code),
 - the count-or-time flush buffers (W1) become trigger intervals,
 - Valkey TTL dedup (A3/J5) becomes ``dropDuplicatesWithinWatermark``,
-- the model join-backs (J1/J2) disappear: the model UDF runs in-process
-  inside the stage, so scores are computed on-row. (The reference only
-  joins because its models sit behind an async HTTP boundary.)
+- the 4-stage sentiment DAG is the batch function itself
+  (``pipeline.batch.sentiment_pipeline``, bound here as
+  ``streaming_sentiment_flow``): one stateless map stage that scores
+  on-row, so it scales over Kafka partitions with no shuffle and no
+  state store, and the checkpoint only tracks offsets.
 
 Tests drive everything with file sources + ``availableNow`` triggers —
 no broker needed; the Kafka source/sink wiring lives in
@@ -28,13 +30,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from sentiflow_spark.operators.filters import route_by_length
-from sentiflow_spark.operators.projections import shape_result, to_sentiment_input
-from sentiflow_spark.pipeline.stubs import (
-    stub_label_col,
-    stub_score_col,
-    stub_summary_col,
-)
+from sentiflow_spark.pipeline.batch import sentiment_pipeline
+from sentiflow_spark.sources.files import TableDir
 
 
 def load_stream(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -42,14 +39,12 @@ def load_stream(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     analog of the Kafka source S1)."""
     from sentiflow_spark.tables import _NANOS_TS_COLS, _fix_nanos
 
-    import os
-
     nanos_cols = _NANOS_TS_COLS.get(name, ())
     if nanos_cols:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     path = f"{sf_dir}/{name}.parquet"
     schema = spark.read.parquet(path).schema
-    if os.path.isdir(path):
+    if TableDir(spark, path).exists():
         # directory-of-parts table layout (what any real writer
         # produces): stream the directory itself
         df = spark.readStream.schema(schema).parquet(path)
@@ -140,36 +135,8 @@ def warm_streaming_engine(spark: SparkSession) -> None:
         shutil.rmtree(scratch, ignore_errors=True)
 
 
-def streaming_sentiment_flow(raw: DataFrame, router_threshold: int = 1024) -> DataFrame:
-    """The full dataflow as ONE streaming stage: route → (stub)
-    summarize → union → (stub) score on-row → shape. Stateless, so it
-    scales as a pure map over Kafka partitions — no shuffle, no state
-    store, checkpoint only tracks offsets."""
-    sa = to_sentiment_input(raw)
-    long_b, short_b = route_by_length(sa, threshold=router_threshold)
-    summarized = (
-        long_b.withColumn("summary", stub_summary_col(F.col("text")))
-        .filter((F.col("summary") != "") & (F.col("summary") != F.col("text")))
-        .withColumn("original_text", F.col("text"))
-        .withColumn("text", F.col("summary"))
-        .withColumn("was_summarized", F.lit(True))
-        .drop("summary")
-    )
-    united = short_b.unionByName(summarized)
-    score = stub_score_col(F.col("text"))
-    missing = F.length("text") % 47 == 0
-    scored = (
-        united.withColumn(
-            "sentiment_score", F.when(missing, F.lit(0.0)).otherwise(score)
-        )
-        .withColumn(
-            "sentiment_label", F.when(missing, F.lit("")).otherwise(stub_label_col(score))
-        )
-        .withColumn(
-            "confidence", F.when(missing, F.lit(0.0)).otherwise(F.abs(score))
-        )
-    )
-    return shape_result(scored)
+# One function serves batch and stream; streaming callers use this name.
+streaming_sentiment_flow = sentiment_pipeline
 
 
 def watermarked_dedup(
@@ -253,48 +220,6 @@ def count_flush_batches(
     )
 
 
-def _running_totals_schemas(key_col: str, id_col: str):
-    from pyspark.sql import types as T
-
-    out_schema = T.StructType(
-        [
-            T.StructField(key_col, T.LongType()),
-            T.StructField(id_col, T.LongType()),
-            T.StructField("seq", T.LongType()),
-            T.StructField("cum_cents", T.LongType()),
-        ]
-    )
-    state_schema = T.StructType(
-        [
-            T.StructField("n", T.LongType()),
-            T.StructField("cents", T.LongType()),
-        ]
-    )
-    return out_schema, state_schema
-
-
-def _running_totals_emit(pdf, n, cents, key_col, id_col, value_col):
-    """Shared micro-batch body for both stateful backends: sort by
-    ``id_col`` (deterministic within a batch), assign lifetime seq
-    numbers starting at ``n+1``, accumulate exact integer cents."""
-    import pandas as pd
-
-    pdf = pdf.sort_values(id_col, kind="mergesort", ignore_index=True)
-    row_cents = pdf[value_col].mul(100).round().astype("int64")
-    cum = row_cents.cumsum() + cents
-    seq = pd.RangeIndex(n + 1, n + 1 + len(pdf)).to_series(index=pdf.index)
-    out = pd.DataFrame(
-        {
-            key_col: pdf[key_col],
-            id_col: pdf[id_col],
-            "seq": seq,
-            "cum_cents": cum,
-        }
-    )
-    new_state = (n + len(pdf), int(cum.iloc[-1]) if len(pdf) else cents)
-    return out, new_state
-
-
 def running_user_totals(
     stream: DataFrame,
     key_col: str = "user_id",
@@ -312,22 +237,42 @@ def running_user_totals(
 
     State size is 16 bytes/key — at 1B users that's 16 GB across the
     cluster's RocksDB instances, far below state-store limits.
-    See :func:`running_user_totals_tws` for the Spark 4
-    ``transformWithStateInPandas`` form of the same operator.
     """
     import pandas as pd
+    from pyspark.sql import types as T
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    out_schema, state_schema = _running_totals_schemas(key_col, id_col)
+    out_schema = T.StructType(
+        [
+            T.StructField(key_col, T.LongType()),
+            T.StructField(id_col, T.LongType()),
+            T.StructField("seq", T.LongType()),
+            T.StructField("cum_cents", T.LongType()),
+        ]
+    )
+    state_schema = T.StructType(
+        [
+            T.StructField("n", T.LongType()),
+            T.StructField("cents", T.LongType()),
+        ]
+    )
 
     def assign(key, pdfs, state: GroupState):
         n, cents = state.get if state.exists else (0, 0)
         pdf = pd.concat(list(pdfs), ignore_index=True)
-        out, new_state = _running_totals_emit(
-            pdf, n, cents, key_col, id_col, value_col
+        pdf = pdf.sort_values(id_col, kind="mergesort", ignore_index=True)
+        row_cents = pdf[value_col].mul(100).round().astype("int64")
+        cum = row_cents.cumsum() + cents
+        seq = pd.RangeIndex(n + 1, n + 1 + len(pdf)).to_series(index=pdf.index)
+        state.update((n + len(pdf), int(cum.iloc[-1]) if len(pdf) else cents))
+        yield pd.DataFrame(
+            {
+                key_col: pdf[key_col],
+                id_col: pdf[id_col],
+                "seq": seq,
+                "cum_cents": cum,
+            }
         )
-        state.update(new_state)
-        yield out
 
     return stream.groupBy(key_col).applyInPandasWithState(
         assign,
@@ -335,58 +280,6 @@ def running_user_totals(
         state_schema,
         "append",
         GroupStateTimeout.NoTimeout,
-    )
-
-
-def running_user_totals_tws(
-    stream: DataFrame,
-    key_col: str = "user_id",
-    id_col: str = "event_id",
-    value_col: str = "value",
-) -> DataFrame:
-    """:func:`running_user_totals` on ``transformWithStateInPandas`` —
-    the Spark 4 arbitrary-stateful API (typed state handles, RocksDB
-    ValueState, timers; the successor to ``applyInPandasWithState``).
-    Identical semantics and output schema; on a cluster this is the
-    preferred form because state is schema'd and evolvable.
-
-    The TWS Python driver worker requires ``google.protobuf``, which
-    this container does not ship — callers without protobuf get an
-    ImportError here (at plan time, not mid-stream). The test suite
-    skips accordingly; the applyInPandasWithState twin above carries
-    the correctness contract.
-    """
-    import google.protobuf  # noqa: F401 — fail fast if TWS can't run
-
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    out_schema, state_schema = _running_totals_schemas(key_col, id_col)
-
-    class RunningTotals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._totals = handle.getValueState("totals", state_schema)
-
-        def handleInputRows(self, key, rows, timerValues):
-            n, cents = self._totals.get() if self._totals.exists() else (0, 0)
-            pdf = pd.concat(list(rows), ignore_index=True)
-            out, new_state = _running_totals_emit(
-                pdf, n, cents, key_col, id_col, value_col
-            )
-            self._totals.update(new_state)
-            yield out
-
-        def close(self) -> None:
-            pass
-
-    return stream.groupBy(key_col).transformWithStateInPandas(
-        statefulProcessor=RunningTotals(),
-        outputStructType=out_schema,
-        outputMode="Append",
-        timeMode="None",
     )
 
 

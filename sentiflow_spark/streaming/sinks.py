@@ -39,6 +39,8 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from sentiflow_spark.sources.files import TableDir
+
 TTL_HOURS = 24
 
 
@@ -58,26 +60,6 @@ def _bucket_of(key: str, n_buckets: int):
     """Stable bucket id for a key: pmod(murmur3, N). Deterministic
     across batches/sessions, so a key always lives in one partition."""
     return F.pmod(F.hash(F.col(key)), F.lit(n_buckets))
-
-
-class _TableDir:
-    """The table's root directory on its Hadoop FileSystem. Existence
-    checks and deletes go through the FileSystem API so a merge works
-    the same on a plain local path, a ``file://`` URI or any other
-    supported filesystem."""
-
-    def __init__(self, spark: SparkSession, table_path: str) -> None:
-        self._path = spark._jvm.org.apache.hadoop.fs.Path
-        self._root = self._path(table_path)
-        self._fs = self._root.getFileSystem(spark._jsc.hadoopConfiguration())
-
-    def exists(self) -> bool:
-        return self._fs.isDirectory(self._root)
-
-    def delete(self, pattern: str) -> None:
-        """Recursively delete every root entry matching glob ``pattern``."""
-        for status in self._fs.globStatus(self._path(self._root, pattern)) or []:
-            self._fs.delete(status.getPath(), True)
 
 
 def merge_upsert(
@@ -137,7 +119,7 @@ def merge_upsert(
         if partition_col
         else new_rows.withColumn("_bucket", _bucket_of(key, n_buckets))
     ).withColumn("_pri", F.lit(0))
-    table = _TableDir(spark, table_path)
+    table = TableDir(spark, table_path)
     exists = table.exists()
     touched: set[int] = set()
     migrating = False

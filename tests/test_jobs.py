@@ -66,6 +66,24 @@ def test_topics_job_anti_join_semantics(spark, sf_dir):
         shutil.rmtree(d, ignore_errors=True)
 
 
+def test_topics_job_reads_file_uri_stored_snapshot(spark, sf_dir):
+    """A ``file://`` stored snapshot is read, not taken for a missing
+    one: its 10 urls are anti-joined out of the new run's output."""
+    d = tempfile.mkdtemp(prefix="sf_jobs_")
+    try:
+        r1 = _run(["topics", "--sf-dir", sf_dir, "--out", f"{d}/all"])
+        spark.read.parquet(f"{d}/all").select("url").limit(10).write.parquet(
+            f"{d}/stored"
+        )
+        r2 = _run([
+            "topics", "--sf-dir", sf_dir, "--out", f"{d}/rest",
+            "--stored", f"file://{d}/stored",
+        ])
+        assert r2["rows"] == r1["rows"] - 10
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
+
+
 def test_compact_job_rewrites_fragmented_dir(spark, sf_dir):
     """CLI wiring for the maintenance job: a 64-file fragmented copy of
     lineitem is rewritten to size-targeted files with rows preserved."""

@@ -18,11 +18,12 @@ def q(spark, sf_dir, name):
 
 
 def test_flagship_pipeline_shuffle_free(spark, sf_dir):
-    """The whole 4-stage sentiment dataflow is map-side only: model
-    micro-batches broadcast, nothing repartitions the content stream."""
+    """The whole 4-stage sentiment dataflow is one map stage: the model
+    stubs score on-row, so nothing joins or repartitions the content
+    stream."""
     df = q(spark, sf_dir, "pl_e2e_results")
     assert I.count_exchanges(df) == 0
-    assert I.count_broadcast_joins(df) == 3
+    assert "Join" not in I.simple_plan(df)
     assert not I.has_cartesian(df)
 
 
@@ -815,7 +816,7 @@ SCAN_FANOUT_BASELINE = {
     # design — it is the method under evaluation)
     "dd_substring_recall": {"documents": 1},
     "dd_threshold_curve": {"documents": 0},
-    "pl_e2e_results": {"documents": 6},
+    "pl_e2e_results": {"documents": 1},
     "rel_column_stats": {"lineitem": 3},
     "ret_bm25_topk": {"documents": 3},
     "ret_hybrid_rrf": {"documents": 3},

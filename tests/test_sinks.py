@@ -162,6 +162,66 @@ def test_merge_upsert_file_uri_table_path(spark):
     assert got == {(k, 1) for k in keys[1:]} | {("k0", 2), ("new", 3)}
 
 
+def test_load_stream_file_uri_parts_table(spark, sf_dir):
+    """A ``file://`` directory-of-parts table streams every row: the
+    layout check asks the Hadoop FileSystem, not ``os.path``."""
+    from sentiflow_spark.streaming.dag import run_to_table
+    from sentiflow_spark.tables import load
+
+    root = tempfile.mkdtemp(prefix="sf_uri_parts_")
+    try:
+        docs = load(spark, sf_dir, "documents")
+        docs.repartition(3).write.parquet(f"{root}/documents.parquet")
+        uri = "file://" + root
+        n = docs.count()
+        assert load(spark, uri, "documents").count() == n
+        assert run_to_table(load_stream(spark, uri, "documents")).count() == n
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+
+
+def test_sentiment_pipeline_one_row_per_kept_input(spark):
+    """Each routing case of the flow on hand-built rows, at a 150-byte
+    threshold: a short row is scored as is; a long row carries its
+    128-char summary; a long row whose summary equals its text is
+    dropped (F2: 100 two-byte chars are 200 bytes but only 100 chars);
+    a 47-char row gets the zero-value fill (F5); and a content_id sent
+    twice yields one output row per input row, not a join fan-out."""
+    from sentiflow_spark.pipeline.batch import sentiment_pipeline
+
+    def scored(n):
+        s = ((n * 37 + 11) % 2001 - 1000) / 1000.0
+        label = "positive" if s > 0.05 else "negative" if s < -0.05 else "neutral"
+        return s, label, abs(s)
+
+    rows = [
+        ("short", "good day"),
+        ("long", "a" * 300),
+        ("f2", "\u00e9" * 100),
+        ("f5", "x" * 47),
+        ("dup", "one"),
+        ("dup", "three"),
+    ]
+    raw = spark.createDataFrame(
+        [(cid, "src", "topic", text) for cid, text in rows],
+        ["content_id", "source", "topic", "text"],
+    )
+    got = sentiment_pipeline(raw, router_threshold=150).collect()
+    want = {
+        ("short", "good day", None, False, *scored(8)),
+        ("long", "a" * 128, "a" * 300, True, *scored(128)),
+        ("f5", "x" * 47, None, False, 0.0, None, 0.0),
+        ("dup", "one", None, False, *scored(3)),
+        ("dup", "three", None, False, *scored(5)),
+    }
+    assert len(got) == len(want)
+    assert {
+        (r.content_id, r.text, r.original_text, r.was_summarized,
+         r.sentiment_score, r.sentiment_label, r.confidence)
+        for r in got
+    } == want
+
+
 def test_merge_upsert_single_pass_job_budget(spark):
     """A merge into an existing 64-bucket table, with a batch touching
     every bucket, runs at most 5 Spark jobs (listing, schema, the pin of
@@ -583,41 +643,6 @@ def test_streaming_checkpoint_incremental_recovery(spark, sf_dir):
         shutil.rmtree(ckpt, ignore_errors=True)
 
 
-def test_running_totals_tws_gate(spark, sf_dir):
-    """running_user_totals_tws is the transformWithStateInPandas twin
-    of the oracle-checked applyInPandasWithState operator. Its Python
-    driver worker needs google.protobuf: without it the wrapper must
-    fail fast at plan time (ImportError, not a mid-stream crash); with
-    it, the TWS output must equal the twin's."""
-    import pytest
-
-    from sentiflow_spark.streaming.dag import (
-        load_stream,
-        run_to_table,
-        running_user_totals,
-        running_user_totals_tws,
-    )
-
-    try:
-        import google.protobuf  # noqa: F401
-
-        have_protobuf = True
-    except ImportError:
-        have_protobuf = False
-
-    ev = load_stream(spark, sf_dir, "events")
-    if not have_protobuf:
-        with pytest.raises(ImportError):
-            running_user_totals_tws(ev)
-        return
-    twin = run_to_table(running_user_totals(ev))
-    tws = run_to_table(running_user_totals_tws(ev))
-    cols = ["user_id", "event_id", "seq", "cum_cents"]
-    assert sorted(map(tuple, twin.select(cols).collect())) == sorted(
-        map(tuple, tws.select(cols).collect())
-    )
-
-
 def test_merge_upsert_migrates_legacy_flat_table(spark):
     """A pre-bucketed (flat parquet) table is migrated in one merge:
     rows survive exactly once, the update lands, and the table is now
@@ -757,7 +782,7 @@ def test_streaming_crash_resume_exactly_once_vs_batch(spark, sf_dir):
     import time
 
     from sentiflow_spark.operators.projections import to_raw_content
-    from sentiflow_spark.streaming.dag import streaming_sentiment_flow
+    from sentiflow_spark.pipeline.batch import sentiment_pipeline
     from sentiflow_spark.tables import load
 
     src = tempfile.mkdtemp(prefix="sf_crash_src_")
@@ -788,7 +813,7 @@ def test_streaming_crash_resume_exactly_once_vs_batch(spark, sf_dir):
                 post_id=F.col("doc_id"),
                 text=F.col("text"),
             )
-            return streaming_sentiment_flow(raw, router_threshold=1024)
+            return sentiment_pipeline(raw, router_threshold=1024)
 
         def start(available_now: bool):
             reader = (
