@@ -32,6 +32,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import urllib.parse
 
 from pyspark.sql import SparkSession
 
@@ -265,6 +266,26 @@ def job_curate(args: argparse.Namespace) -> dict:
             "sink": args.out}
 
 
+def _local_dir(out: str) -> str:
+    """``--out`` as a local directory path: a ``file:`` URI maps to its
+    path, and any other scheme is refused. The curation state under it
+    is host-local by design — its writer fence is a kernel flock and
+    its generation ids come from a directory listing — so the job
+    reaches it with ``os``/``shutil``, which would read a URI as a
+    relative path."""
+    url = urllib.parse.urlparse(out)
+    if url.scheme == "file":
+        return url.path
+    if url.scheme:
+        raise SystemExit(
+            f"curate-delta: --out {out}: the curation state must be on a "
+            "local filesystem (its single-writer fence is a kernel flock "
+            "and generation ids come from a directory listing); pass a "
+            "local path or a file: URI"
+        )
+    return out
+
+
 def job_curate_delta(args: argparse.Namespace) -> dict:
     """The INCREMENTAL form of job_curate — the steady-state production
     arrangement (reference: the 300 s fetch loop,
@@ -329,8 +350,8 @@ def job_curate_delta(args: argparse.Namespace) -> dict:
             "during ingestion; the closing --compact would refuse — "
             "raise --horizon (or drop it for a full compact)"
         )
+    state = os.path.join(_local_dir(args.out), "state")
     spark = _spark("sentiflow-curate-delta")
-    state = f"{args.out}/state"
     shutil.rmtree(state, ignore_errors=True)
     stats = run_delta_batches(
         spark, args.sf_dir, state, n_batches=args.batches,

@@ -29,6 +29,8 @@ results are engine-reproducible.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
@@ -891,6 +893,34 @@ WINNOW_W = 8   # window of consecutive gram hashes
 WINNOW_POS_BASE = 2 ** 21
 
 
+def widen_small_input(df: DataFrame, sized_by: DataFrame) -> DataFrame:
+    """Repartition ``df`` to the default parallelism when ``sized_by``
+    is a SMALL file input (<= 64 files, < 256 MB in total); otherwise
+    return it unchanged. For CPU-bound per-row stages: a single-row-
+    group parquet file lands every row in one task no matter how many
+    byte-range splits the scan plans (partition count lies — only one
+    is non-empty), and shuffling a few MB of text costs far less than
+    hashing it on one core (measured 3.7 s -> 0.4 s warm at sf0.1 for
+    winnow extraction). At real corpus scale (many files, >> 256 MB)
+    the guard is a no-op and the stage stays map-side on the scan's
+    own partitions. Non-file inputs are left alone."""
+    try:
+        files = sized_by.inputFiles()
+    except Exception:  # non-file sources: leave the plan alone
+        return df
+    if not files or len(files) > 64:
+        return df
+    try:
+        total = sum(
+            os.path.getsize(f[7:] if f.startswith("file:") else f) for f in files
+        )
+    except OSError:
+        return df
+    if total >= (256 << 20):
+        return df
+    return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
+
+
 def winnow_fingerprints(
     df: DataFrame,
     text_col: str = "text",
@@ -935,30 +965,8 @@ def winnow_fingerprints(
         1,
     )
     # extraction is CPU-bound (O(L) md5 per doc), so it must be as wide
-    # as the cluster: a SMALL input is repartitioned first, because a
-    # single-row-group parquet file lands every row in one task no
-    # matter how many byte-range splits the scan plans (partition
-    # count lies — only one is non-empty), and shuffling a few MB of
-    # text costs far less than hashing it on one core (measured 3.7 s
-    # -> 0.4 s warm at sf0.1). The guard is total input SIZE, so at
-    # real corpus scale (many files, >> 256 MB) it is a no-op and the
-    # extraction stays purely map-side on the scan's own partitions.
-    try:
-        files = df.inputFiles()
-    except Exception:  # non-file sources: leave the plan alone
-        files = []
-    if files and len(files) <= 64:
-        import os as _os
-
-        try:
-            total = sum(
-                _os.path.getsize(f[7:] if f.startswith("file:") else f)
-                for f in files
-            )
-        except OSError:
-            total = None
-        if total is not None and total < (256 << 20):
-            df = df.repartition(df.sparkSession.sparkContext.defaultParallelism)
+    # as the cluster
+    df = widen_small_input(df, df)
     # Packing-limit guard: key = h*BASE - i is only injective (and the
     # rightmost-tie min only correct) while every gram position
     # i = 1..L-k+1 stays under BASE, i.e. L <= BASE + k - 2. A longer

@@ -23,6 +23,13 @@ minhash_signatures + lsh_candidate_pairs, winnow_contaminated_spans +
 cut_spans, lsh_star_edges + connected_components), so the composition
 cannot drift from the parts.
 
+The decision layer — the gate (dag_gate / DUCK_DAG_GATE), the post-cut
+accounting (cut_accounting), the cap → grouped split → packing tail
+(pack) and the stage label (dispose) — is stated once, here. The
+incremental publish (curation_delta.py) calls the same four functions
+over manifest-resident features, so the two paths differ only in where
+their per-doc features come from.
+
 Scale shape (the 100 TB argument is the SUM of the parts', all
 documented on their standalone queries): the corpus text is touched by
 map-side stages and doc_id-keyed joins only; every cross-doc structure
@@ -41,7 +48,10 @@ domain policy, Schleimer SIGMOD 2003 (winnowing).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import operator
+from functools import reduce
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
@@ -62,6 +72,7 @@ from sentiflow_spark.operators.dedup import (
     lsh_candidate_pairs,
     lsh_star_edges,
     minhash_signatures,
+    widen_small_input,
     winnow_contaminated_spans,
 )
 from sentiflow_spark.queries.curation_queries import (
@@ -101,13 +112,146 @@ DAG_GOPHER_RULES = (
 )
 
 
+# ------------------------ the decision layer (see the module docstring)
+
+DUCK_DAG_GATE = " AND ".join(f"({GOPHER_RULES_SQL[r]})" for r in DAG_GOPHER_RULES)
+
+
+def dag_gate() -> Column:
+    """The DAG's quality gate over gopher_flags' rule columns: the AND
+    of DAG_GOPHER_RULES. DUCK_DAG_GATE is the same predicate in SQL."""
+    return reduce(operator.and_, (F.col(r) for r in DAG_GOPHER_RULES))
+
+
+def cut_accounting(docs: DataFrame, spans: DataFrame) -> DataFrame:
+    """Cut ``spans`` out of ``docs`` (doc_id, text) and keep only the
+    per-doc numbers the rest of the funnel reads: (doc_id, n_tokens,
+    cut_chars, clean_len). The post-cut text itself is not carried —
+    the corpus write re-derives it map-side (see jobs.py)."""
+    return cut_spans(docs, spans).select(
+        "doc_id",
+        token_count(F.col("clean_text")).cast("long").alias("n_tokens"),
+        (F.col("orig_len") - F.col("clean_len")).cast("long").alias("cut_chars"),
+        F.col("clean_len").cast("long").alias("clean_len"),
+    )
+
+
+def pack(cut: DataFrame, sigs: DataFrame, langs: DataFrame) -> DataFrame:
+    """The funnel's tail over the post-cut accounting ``cut``: drop
+    fully-cut docs → per-domain cap → leakage-safe grouped split →
+    token-budget packing. ``sigs`` are the survivors' MinHash
+    signatures (doc_id, sig_*), ``langs`` is (doc_id, lang). Returns
+    (doc_id, split, n_tokens, cut_chars, seq_id) for the kept docs."""
+    alive = cut.filter(F.col("n_tokens") > 0)
+
+    # per-domain cap: longest-clean-text-first within each registered
+    # domain. Domains are the synthetic doc_id % 40 hosts (canonical
+    # lowercase registered domain — the URL parse itself is exercised
+    # by txt_domain_cap; the composition keys the cap on the derived
+    # domain so both engines state it identically).
+    domain = F.concat(
+        F.lit("example"), (F.col("doc_id") % 40).cast("string"), F.lit(".com")
+    )
+    w_dom = W.partitionBy("domain").orderBy(F.col("clean_len").desc(), "doc_id")
+    capped = (
+        alive.withColumn("domain", domain)
+        .withColumn("cap_rank", F.row_number().over(w_dom))
+        .filter(F.col("cap_rank") <= DOMAIN_CAP)
+        .select("doc_id", "n_tokens", "cut_chars")
+    )
+
+    # leakage-safe grouped split: cluster over banding-trusted STAR
+    # edges among the capped survivors (sub-0.9 near-material shares a
+    # cluster via band collisions and lands on one side), then the
+    # deterministic salted-hash-mod split on the CLUSTER id
+    sigs_kept = sigs.join(capped.select("doc_id"), "doc_id", "left_semi")
+    cc = connected_components(lsh_star_edges(sigs_kept))
+    clustered = capped.join(cc, capped.doc_id == cc.node, "left").select(
+        capped.doc_id.alias("doc_id"),
+        "n_tokens",
+        "cut_chars",
+        F.coalesce("lbl", capped.doc_id).alias("cluster_id"),
+    )
+    bucket = (
+        md5_i32(F.concat(F.lit(SPLIT_SALT), F.col("cluster_id").cast("string")))
+        % 100
+    )
+    split_df = clustered.withColumn(
+        "split", F.when(bucket < TRAIN_PCT, "train").otherwise("val")
+    )
+
+    # token-budget packing, per (split, lang) shard — the way a real
+    # corpus is packed (per shard/file, never one global ordering)
+    w_pack = (
+        W.partitionBy("split", "lang")
+        .orderBy("doc_id")
+        .rowsBetween(W.unboundedPreceding, W.currentRow)
+    )
+    return (
+        split_df.join(langs, "doc_id")
+        .withColumn("cum", F.sum("n_tokens").over(w_pack))
+        .select(
+            "doc_id",
+            "split",
+            "n_tokens",
+            "cut_chars",
+            F.expr(f"(cum - n_tokens) div {SEQ_BUDGET}").alias("seq_id"),
+        )
+    )
+
+
+def dispose(
+    docs: DataFrame,
+    gates: DataFrame,
+    survivors: DataFrame,
+    near_losers: DataFrame,
+    cut: DataFrame,
+    packed: DataFrame,
+) -> DataFrame:
+    """One disposition row per doc_id of ``docs``: the stage where it
+    left the funnel ('kept' if it did not) plus its shard assignment
+    and accounting when kept. ``gates`` is (doc_id, bp_kept,
+    passes_all); ``survivors`` the exact-dedup winners' doc_ids;
+    ``near_losers`` the near-dup losers' doc_ids; ``cut`` carries the
+    post-cut n_tokens; ``packed`` is pack()'s output. A stage is
+    inferred from ABSENCE where the funnel keeps no reject row (an
+    exact-dup loser is a gated doc missing from ``survivors``)."""
+    out = (
+        docs.join(gates, "doc_id", "left")
+        .join(survivors.withColumn("_ex", F.lit(True)), "doc_id", "left")
+        .join(near_losers.withColumn("_nd", F.lit(True)), "doc_id", "left")
+        .join(cut.select("doc_id", F.col("n_tokens").alias("_tok")), "doc_id", "left")
+        .join(packed, "doc_id", "left")
+    )
+    is_bench = F.col("doc_id") % DECON_SPAN_MOD == 0
+    kept = F.col("seq_id").isNotNull()
+    stage = (
+        F.when(is_bench, "bench")
+        .when(~F.col("bp_kept"), "boilerplate")
+        .when(~F.col("passes_all"), "quality")
+        .when(F.col("_ex").isNull(), "exact_dup")
+        .when(F.col("_nd").isNotNull(), "near_dup")
+        .when(F.col("_tok") == 0, "decontaminated")
+        .when(~kept, "domain_cap")
+        .otherwise("kept")
+    )
+    return out.select(
+        "doc_id",
+        stage.alias("stage"),
+        "split",
+        "seq_id",
+        F.when(kept, F.col("n_tokens")).alias("n_tokens"),
+        F.when(kept, F.col("cut_chars")).alias("cut_chars"),
+    )
+
+
 def curation_stages(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """Run the DAG and return every stage boundary (for the job and the
     disposition query). Keys: docs_n, gq, exact_ranked, near_losers,
     s5 (post-dedup survivors w/ normalized text), spans (the
     decontamination cut-list — with s5 this reconstructs post-cut text
     map-side, see jobs.py), cut (per-doc post-cut accounting: n_tokens,
-    cut_chars, clean_len — no text), capped, packed."""
+    cut_chars, clean_len — no text), packed."""
     docs = load(spark, sf_dir, "documents")
     # One Arrow NFC pass, pinned: six downstream stages consume the
     # normalized corpus and would each re-run the Python stage.
@@ -139,11 +283,7 @@ def curation_stages(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
         .select("doc_id", F.col("text_clean").alias("text"))
         .join(docs_n.select("doc_id", "lang"), "doc_id")
     )
-    flags = gopher_flags(cand)
-    passes = None
-    for r in DAG_GOPHER_RULES:
-        passes = F.col(r) if passes is None else (passes & F.col(r))
-    gq = flags.select("doc_id", passes.alias("passes_all"))
+    gq = gopher_flags(cand).select("doc_id", dag_gate().alias("passes_all"))
     quality = cand.join(
         gq.filter(F.col("passes_all")).select("doc_id"), "doc_id"
     )
@@ -157,7 +297,7 @@ def curation_stages(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     # near dedup among exact survivors: verified pairs, lowest-id wins.
     # The signature table is pinned HERE (not inside lsh_candidate_pairs)
     # because it has a FOURTH consumer: the grouped-split star edges
-    # below re-ran the whole tokenize→explode→16-min-agg lineage (and
+    # in pack() re-ran the whole tokenize→explode→16-min-agg lineage (and
     # its quality/dedup upstream) when the checkpoint lived inside the
     # pair builder (r12 profile: part of the CC edge job's 1.2 s).
     sigs = minhash_signatures(exact_ranked).localCheckpoint(eager=False)
@@ -179,28 +319,9 @@ def curation_stages(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     # (wsrc is a union of checkpointed frames, not a file scan), and
     # the inherited partitioning is 2-3 partitions (single-file scan +
     # AQE-coalesced join output), so the extraction ran as ONE 2.5 s
-    # task at sf0.1 while 31 cores idled. Guarded exactly like
-    # winnow_fingerprints: only a small corpus (the original documents
-    # input < 256 MB in <= 64 files) is repartitioned — at real corpus
-    # scale wsrc arrives wide already and no text shuffle is added.
-    try:
-        _files = docs.inputFiles()
-    except Exception:
-        _files = []
-    if _files and len(_files) <= 64:
-        import os as _os
-
-        try:
-            _total = sum(
-                _os.path.getsize(f[7:] if f.startswith("file:") else f)
-                for f in _files
-            )
-        except OSError:
-            _total = None
-        if _total is not None and _total < (256 << 20):
-            wsrc = wsrc.repartition(
-                spark.sparkContext.defaultParallelism
-            )
+    # task at sf0.1 while 31 cores idled. The guard is therefore sized
+    # by the original documents scan.
+    wsrc = widen_small_input(wsrc, docs)
     spans = winnow_contaminated_spans(wsrc, is_bench=is_bench)
     # Pinned like docs_n/s5: the decontaminated accounting is the third
     # phase boundary a production pipeline persists. Without it the
@@ -218,80 +339,10 @@ def curation_stages(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     # pins are reused) instead of materializing the whole post-cut
     # corpus inside this pin and shuffling it through the domain-cap
     # window (guide §2.3 "project before the exchange"/§8).
-    cut = (
-        cut_spans(s5.select("doc_id", "text"), spans)
-        .select(
-            "doc_id",
-            token_count(F.col("clean_text")).cast("long").alias("n_tokens"),
-            (F.col("orig_len") - F.col("clean_len")).cast("long").alias(
-                "cut_chars"
-            ),
-            F.col("clean_len").cast("long").alias("clean_len"),
-        )
-        .localCheckpoint(eager=False)
+    cut = cut_accounting(s5.select("doc_id", "text"), spans).localCheckpoint(
+        eager=False
     )
-
-    alive = cut.filter(F.col("n_tokens") > 0)
-
-    # per-domain cap: longest-clean-text-first within each registered
-    # domain. Domains are the synthetic doc_id % 40 hosts (canonical
-    # lowercase registered domain — the URL parse itself is exercised
-    # by txt_domain_cap; the composition keys the cap on the derived
-    # domain so both engines state it identically).
-    domain = F.concat(
-        F.lit("example"), (F.col("doc_id") % 40).cast("string"), F.lit(".com")
-    )
-    w_dom = W.partitionBy("domain").orderBy(
-        F.col("clean_len").desc(), "doc_id"
-    )
-    capped = (
-        alive.withColumn("domain", domain)
-        .withColumn("cap_rank", F.row_number().over(w_dom))
-        .filter(F.col("cap_rank") <= DOMAIN_CAP)
-    )
-
-    # leakage-safe grouped split: cluster over banding-trusted STAR
-    # edges among the capped survivors (sub-0.9 near-material shares a
-    # cluster via band collisions and lands on one side), then the
-    # deterministic salted-hash-mod split on the CLUSTER id
-    sigs_kept = sigs.join(capped.select("doc_id"), "doc_id")
-    cc = connected_components(lsh_star_edges(sigs_kept))
-    clustered = (
-        capped.join(cc, capped.doc_id == cc.node, "left")
-        .select(
-            capped.doc_id.alias("doc_id"),
-            "n_tokens",
-            "cut_chars",
-            F.coalesce("lbl", capped.doc_id).alias("cluster_id"),
-        )
-    )
-    bucket = (
-        md5_i32(
-            F.concat(F.lit(SPLIT_SALT), F.col("cluster_id").cast("string"))
-        )
-        % 100
-    )
-    split_df = clustered.withColumn(
-        "split", F.when(bucket < TRAIN_PCT, "train").otherwise("val")
-    )
-
-    # token-budget packing, per (split, lang) shard — the way a real
-    # corpus is packed (per shard/file, never one global ordering)
-    with_lang = split_df.join(docs_n.select("doc_id", "lang"), "doc_id")
-    w_pack = (
-        W.partitionBy("split", "lang")
-        .orderBy("doc_id")
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
-    )
-    packed = with_lang.withColumn(
-        "cum", F.sum("n_tokens").over(w_pack)
-    ).select(
-        "doc_id",
-        "split",
-        "n_tokens",
-        "cut_chars",
-        F.expr(f"(cum - n_tokens) div {SEQ_BUDGET}").alias("seq_id"),
-    )
+    packed = pack(cut, sigs, docs_n.select("doc_id", "lang"))
 
     return {
         "docs": docs,
@@ -303,7 +354,6 @@ def curation_stages(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
         "s5": s5,
         "spans": spans,
         "cut": cut,
-        "capped": capped,
         "packed": packed,
     }
 
@@ -365,7 +415,7 @@ def _duck_dag_oracle(source: str = "documents") -> str:
     ),
     {duck_gopher_m_cte(source="cand")},
     gq AS MATERIALIZED (SELECT doc_id,
-           {" AND ".join(f"({GOPHER_RULES_SQL[r]})" for r in DAG_GOPHER_RULES)}
+           {DUCK_DAG_GATE}
              AS passes_all FROM gm),
     quality AS MATERIALIZED (
       SELECT c.* FROM cand c JOIN gq USING (doc_id) WHERE gq.passes_all
@@ -564,42 +614,16 @@ def disposition(st: dict[str, DataFrame]) -> DataFrame:
     """Per-doc disposition from an already-built stage dict — split out
     so jobs.py curate can write the corpus AND the audit table from ONE
     curation_stages pass instead of running the pipeline twice."""
-    docs, gq = st["docs"], st["gq"]
-    bp_kept = st["bp"].select("doc_id", F.col("doc_kept").alias("_bpk"))
-    exact_keep = st["exact_ranked"].select("doc_id").withColumn(
-        "_ex", F.lit(True)
+    gates = (
+        st["bp"]
+        .select("doc_id", F.col("doc_kept").alias("bp_kept"))
+        .join(st["gq"], "doc_id", "left")
     )
-    # quality docs that LOST exact dedup: in quality, not in survivors
-    near = st["near_losers"].withColumn("_nd", F.lit(True))
-    tok = st["cut"].select("doc_id", F.col("n_tokens").alias("_tok"))
-    packed = st["packed"]
-
-    out = (
-        docs.select("doc_id")
-        .join(bp_kept, "doc_id", "left")
-        .join(gq, "doc_id", "left")
-        .join(exact_keep, "doc_id", "left")
-        .join(near, "doc_id", "left")
-        .join(tok, "doc_id", "left")
-        .join(packed, "doc_id", "left")
-    )
-    is_bench = F.col("doc_id") % DECON_SPAN_MOD == 0
-    kept = F.col("seq_id").isNotNull()
-    stage = (
-        F.when(is_bench, "bench")
-        .when(~F.col("_bpk"), "boilerplate")
-        .when(~F.col("passes_all"), "quality")
-        .when(F.col("_ex").isNull(), "exact_dup")
-        .when(F.col("_nd").isNotNull(), "near_dup")
-        .when(F.col("_tok") == 0, "decontaminated")
-        .when(~kept, "domain_cap")
-        .otherwise("kept")
-    )
-    return out.select(
-        "doc_id",
-        stage.alias("stage"),
-        "split",
-        "seq_id",
-        F.when(kept, F.col("n_tokens")).alias("n_tokens"),
-        F.when(kept, F.col("cut_chars")).alias("cut_chars"),
+    return dispose(
+        st["docs"].select("doc_id"),
+        gates,
+        st["exact_ranked"].select("doc_id"),
+        st["near_losers"],
+        st["cut"],
+        st["packed"],
     )

@@ -27,11 +27,14 @@ therefore provable against the same DuckDB oracle):
   recomputes features for (delta ∪ stale) only and MERGEs them into
   the feature manifest, so after the last batch every stored feature
   row equals the one-shot value computed against the FINAL sets.
-* The decision layer (quality gate, first-wins exact winners, LSH
-  near-dup losers, decontamination spans + cut, domain cap, grouped
-  split, packing) is derived AT PUBLISH from the manifests — narrow
-  columns, no raw text except re-cutting the contaminated docs — so
-  it trivially agrees with the one-shot run over the same state.
+* The decision layer is derived AT PUBLISH from the manifests —
+  narrow columns, no raw text except re-cutting the contaminated docs.
+  First-wins exact winners, LSH near-dup losers and the
+  decontamination spans come from stored fingerprints, signatures and
+  winnow keys; the gate, the post-cut accounting, the cap → grouped
+  split → packing tail and the stage label are the one-shot DAG's own
+  functions (curation_dag.dag_gate / cut_accounting / pack / dispose),
+  so the two agree by construction over the same features.
 
 Cost shape at 100 TB: per-batch work is O(delta + stale) corpus text
 (normalize/segment/hash/sign/winnow only the affected docs) plus
@@ -78,7 +81,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from sentiflow_spark.functions.hashing import md5_i32
 from sentiflow_spark.functions.text import fingerprint, token_count
 from sentiflow_spark.operators.dedup import (
     BP_MIN_DOCS,
@@ -89,29 +91,22 @@ from sentiflow_spark.operators.dedup import (
     WINNOW_POS_BASE,
     _position_islands,
     boiler_segments,
-    connected_components,
-    cut_spans,
     lsh_candidate_pairs,
-    lsh_star_edges,
     minhash_signatures,
     strip_with_boiler,
     winnow_fingerprints,
 )
 from sentiflow_spark.queries.curation_dag import (
-    DAG_GOPHER_RULES,
     NEAR_DUP_JACCARD,
-    SPLIT_SALT,
-    TRAIN_PCT,
     _duck_dag_oracle,
+    cut_accounting,
+    dag_gate,
+    dispose,
+    pack,
 )
-from sentiflow_spark.queries.curation_queries import (
-    DOMAIN_CAP,
-    gopher_flags,
-    nfc_norm_expr,
-)
+from sentiflow_spark.queries.curation_queries import gopher_flags, nfc_norm_expr
 from sentiflow_spark.queries.dedup_queries import DECON_SPAN_MOD
 from sentiflow_spark.queries.registry import register
-from sentiflow_spark.queries.text_queries import SEQ_BUDGET
 from sentiflow_spark.tables import load
 
 DELTA_BATCHES = 3
@@ -539,11 +534,7 @@ def _recompute_features(
         .join(aff_n.select("doc_id", "lang"), "doc_id")
         .localCheckpoint(eager=False)
     )
-    flags = gopher_flags(kept)
-    passes = None
-    for r in DAG_GOPHER_RULES:
-        passes = F.col(r) if passes is None else (passes & F.col(r))
-    gq = flags.select("doc_id", passes.alias("passes_all"))
+    gq = gopher_flags(kept).select("doc_id", dag_gate().alias("passes_all"))
     sigs = minhash_signatures(kept)
     wfps = winnow_fingerprints(kept).select(
         "doc_id", F.col("fps").alias("wfps")
@@ -888,14 +879,7 @@ def publish(
     cut_in = feat.join(spanned, "doc_id", "left_semi").select(
         "doc_id", F.col("text_bp").alias("text")
     )
-    cut_spanned = cut_spans(cut_in, spans).select(
-        "doc_id",
-        token_count(F.col("clean_text")).cast("long").alias("n_tokens"),
-        (F.col("orig_len") - F.col("clean_len")).cast("long").alias(
-            "cut_chars"
-        ),
-        F.col("clean_len").cast("long").alias("clean_len"),
-    )
+    cut_spanned = cut_accounting(cut_in, spans)
     cut_rest = (
         feat.join(s5, "doc_id", "left_semi")
         .join(spanned, "doc_id", "left_anti")
@@ -908,49 +892,7 @@ def publish(
     )
     cut_all = cut_spanned.unionByName(cut_rest).localCheckpoint(eager=False)
 
-    alive = cut_all.filter(F.col("n_tokens") > 0)
-    domain = F.concat(
-        F.lit("example"), (F.col("doc_id") % 40).cast("string"), F.lit(".com")
-    )
-    w_dom = W.partitionBy("domain").orderBy(F.col("clean_len").desc(), "doc_id")
-    capped = (
-        alive.withColumn("domain", domain)
-        .withColumn("cap_rank", F.row_number().over(w_dom))
-        .filter(F.col("cap_rank") <= DOMAIN_CAP)
-        .select("doc_id", "n_tokens", "cut_chars")
-    )
-    sigs_kept = sigs.join(capped.select("doc_id"), "doc_id", "left_semi")
-    cc = connected_components(lsh_star_edges(sigs_kept))
-    clustered = capped.join(cc, capped.doc_id == cc.node, "left").select(
-        capped.doc_id.alias("doc_id"),
-        "n_tokens",
-        "cut_chars",
-        F.coalesce("lbl", capped.doc_id).alias("cluster_id"),
-    )
-    bucket = (
-        md5_i32(
-            F.concat(F.lit(SPLIT_SALT), F.col("cluster_id").cast("string"))
-        )
-        % 100
-    )
-    split_df = clustered.withColumn(
-        "split", F.when(bucket < TRAIN_PCT, "train").otherwise("val")
-    )
-    with_lang = split_df.join(feat.select("doc_id", "lang"), "doc_id")
-    w_pack = (
-        W.partitionBy("split", "lang")
-        .orderBy("doc_id")
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
-    )
-    packed = with_lang.withColumn(
-        "cum", F.sum("n_tokens").over(w_pack)
-    ).select(
-        "doc_id",
-        "split",
-        "n_tokens",
-        "cut_chars",
-        F.expr(f"(cum - n_tokens) div {SEQ_BUDGET}").alias("seq_id"),
-    )
+    packed = pack(cut_all, sigs, feat.select("doc_id", "lang"))
 
     # ``universe``: the doc set the release enumerates — defaults to
     # the full raw table (correct once every batch is admitted). An
@@ -960,38 +902,13 @@ def publish(
     docs = (universe if universe is not None else load(
         spark, sf_dir, "documents"
     )).select("doc_id")
-    out = (
-        docs.join(
-            feat.select("doc_id", "bp_kept", "passes_all"), "doc_id", "left"
-        )
-        .join(s4.withColumn("_ex", F.lit(True)), "doc_id", "left")
-        .join(near_losers.withColumn("_nd", F.lit(True)), "doc_id", "left")
-        .join(
-            cut_all.select("doc_id", F.col("n_tokens").alias("_tok")),
-            "doc_id",
-            "left",
-        )
-        .join(packed, "doc_id", "left")
-    )
-    is_bench = F.col("doc_id") % DECON_SPAN_MOD == 0
-    kept = F.col("seq_id").isNotNull()
-    stage = (
-        F.when(is_bench, "bench")
-        .when(~F.col("bp_kept"), "boilerplate")
-        .when(~F.col("passes_all"), "quality")
-        .when(F.col("_ex").isNull(), "exact_dup")
-        .when(F.col("_nd").isNotNull(), "near_dup")
-        .when(F.col("_tok") == 0, "decontaminated")
-        .when(~kept, "domain_cap")
-        .otherwise("kept")
-    )
-    return out.select(
-        "doc_id",
-        stage.alias("stage"),
-        "split",
-        "seq_id",
-        F.when(kept, F.col("n_tokens")).alias("n_tokens"),
-        F.when(kept, F.col("cut_chars")).alias("cut_chars"),
+    return dispose(
+        docs,
+        feat.select("doc_id", "bp_kept", "passes_all"),
+        s4,
+        near_losers,
+        cut_all,
+        packed,
     )
 
 

@@ -663,7 +663,7 @@ def st_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     "oracle is the same batch SQL the DAG's quality stage states.",
 )
 def st_curation_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from sentiflow_spark.queries.curation_dag import DAG_GOPHER_RULES
+    from sentiflow_spark.queries.curation_dag import dag_gate
     from sentiflow_spark.queries.curation_queries import (
         gopher_flags,
         nfc_norm_expr,
@@ -674,31 +674,24 @@ def st_curation_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", nfc_norm_expr(F.col("text")).alias("text")
     )
     flags = gopher_flags(docs_n)
-    admitted = None
-    for r in DAG_GOPHER_RULES:
-        admitted = F.col(r) if admitted is None else (admitted & F.col(r))
     return run_to_table(
-        flags.select("doc_id", "n_words", admitted.alias("admitted"))
+        flags.select("doc_id", "n_words", dag_gate().alias("admitted"))
     )
 
 
 def _st_gate_oracle() -> str:
-    from sentiflow_spark.queries.curation_dag import DAG_GOPHER_RULES
+    from sentiflow_spark.queries.curation_dag import DUCK_DAG_GATE
     from sentiflow_spark.queries.curation_queries import (
-        GOPHER_RULES_SQL,
         duck_gopher_m_cte,
         duck_norm_sql,
     )
 
-    pass_sql = " AND ".join(
-        f"({GOPHER_RULES_SQL[r]})" for r in DAG_GOPHER_RULES
-    )
     return f"""
     WITH docs_n AS (
       SELECT doc_id, {duck_norm_sql('text')} AS text FROM documents
     ),
     {duck_gopher_m_cte(source="docs_n")}
-    SELECT doc_id, n_words, {pass_sql} AS admitted FROM gm
+    SELECT doc_id, n_words, {DUCK_DAG_GATE} AS admitted FROM gm
     """
 
 
@@ -729,7 +722,7 @@ def curation_admit_gate(docs: DataFrame) -> DataFrame:
     mark-by-content-hash (internal/clients/valkey_client.go:126-159).
     """
     from sentiflow_spark.functions.text import fingerprint_canon
-    from sentiflow_spark.queries.curation_dag import DAG_GOPHER_RULES
+    from sentiflow_spark.queries.curation_dag import dag_gate
     from sentiflow_spark.queries.curation_queries import (
         gopher_flags,
         nfc_norm_expr,
@@ -754,10 +747,7 @@ def curation_admit_gate(docs: DataFrame) -> DataFrame:
     b = flags.select(
         F.explode(F.array(F.struct(*flags.columns))).alias("s")
     ).select("s.*")
-    admitted = None
-    for r in DAG_GOPHER_RULES:
-        admitted = F.col(r) if admitted is None else (admitted & F.col(r))
-    return b.filter(admitted).select(
+    return b.filter(dag_gate()).select(
         F.col("doc_id").alias("fp"), "n_words"
     )
 
@@ -874,16 +864,12 @@ def st_curation_admit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _st_admit_oracle() -> str:
     from sentiflow_spark.functions.text import duck_fingerprint_canon
-    from sentiflow_spark.queries.curation_dag import DAG_GOPHER_RULES
+    from sentiflow_spark.queries.curation_dag import DUCK_DAG_GATE
     from sentiflow_spark.queries.curation_queries import (
-        GOPHER_RULES_SQL,
         duck_gopher_m_cte,
         duck_norm_sql,
     )
 
-    pass_sql = " AND ".join(
-        f"({GOPHER_RULES_SQL[r]})" for r in DAG_GOPHER_RULES
-    )
     return f"""
     WITH norm AS (
       SELECT {duck_norm_sql('text')} AS t0 FROM documents
@@ -895,7 +881,7 @@ def _st_admit_oracle() -> str:
       SELECT md5(text) AS doc_id, text FROM canon
     ),
     {duck_gopher_m_cte(source="docs_n")}
-    SELECT DISTINCT doc_id AS fp, n_words FROM gm WHERE {pass_sql}
+    SELECT DISTINCT doc_id AS fp, n_words FROM gm WHERE {DUCK_DAG_GATE}
     """
 
 

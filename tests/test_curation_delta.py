@@ -5,7 +5,9 @@ threshold AFTER its holder docs were already admitted."""
 
 from __future__ import annotations
 
+import random
 import shutil
+import string
 
 from sentiflow_spark.queries.curation_delta import (
     _state_root,
@@ -72,29 +74,87 @@ def test_stale_recompute_on_late_threshold_cross(spark, tmp_path):
     assert _canon(publish(spark, sf, state)) == _canon(oneshot)
 
 
-def test_delta_result_is_batch_count_invariant(spark, tmp_path):
+def _words(seed: int, n: int) -> str:
+    """n random lowercase words: unique per seed, so no 16-char
+    boilerplate segment or near-dup band is shared by accident, and
+    every Gopher rule of the DAG gate passes once n >= 50."""
+    rnd = random.Random(seed)
+    return " ".join(
+        "".join(rnd.choice(string.ascii_lowercase) for _ in range(rnd.randint(4, 8)))
+        for _ in range(n)
+    )
+
+
+def _all_stages_corpus() -> list[tuple[int, str]]:
+    """A corpus in which every one of the eight dispositions occurs,
+    with the docs that decide a stage spread over the delta batches."""
+    block = _words(1000, 45)  # > 30% of each holder's chars
+    pad = "\n" * 8  # survives normalization; no token when left uncut
+    bench_text = pad + _words(1001, 60) + pad
+    docs = {
+        0: _words(0, 60),  # bench (doc_id % 97 == 0)
+        194: bench_text,  # bench, admitted after doc 2
+        2: bench_text,  # decontaminated: the whole text is a bench span
+        3: block + _words(3, 60),  # boilerplate: the block's third
+        150: block + _words(150, 60),  # holder arrives last, so docs 3
+        300: block + _words(300, 60),  # and 150 go stale
+        6: _words(6, 10),  # quality: too few words
+        7: _words(7, 60),
+        250: _words(7, 60).upper(),  # exact_dup of 7 (same fingerprint)
+        9: _words(9, 120),
+        290: _words(9, 120) + " zq",  # near_dup of 9
+    }
+    # domain example1.com (doc_id % 40 == 1): one doc over DOMAIN_CAP,
+    # the shortest, exits domain_cap
+    for k in range(11):
+        docs[1 + 40 * k] = _words(1 + 40 * k, 50 + 3 * k)
+    return sorted(docs.items())
+
+
+def test_delta_result_is_batch_count_invariant(spark, sf_dir, tmp_path):
     """The disposition is a pure function of the FINAL manifests, so
-    the batch partitioning must not matter: the crafted corpus pushed
-    through as 1, 2, and 3 delta batches publishes identical rows —
-    the property that makes 'how often does the crawl deliver' an
-    operational knob instead of a correctness parameter."""
-    rows = [
-        (i, f"x{i:02d}body " * 8 if i % 3 else "Q" * 16 + f"q{i:02d}tail " * 6,
-         "en", "t", 0)
-        for i in range(9)
-    ]
-    rows = [(i, t, lg, s, len(t)) for (i, t, lg, s, _) in rows]
-    spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string, n_chars long"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{tmp_path}/documents.parquet")
+    the batch partitioning must not matter: a crafted corpus that
+    reaches all eight stages, pushed through as 1, 2, and 3 delta
+    batches, publishes exactly the one-shot DAG's rows — and the
+    one-shot rows hash-match the DuckDB oracle. This exercises every
+    branch of the shared disposition on both paths, the property that
+    makes 'how often does the crawl deliver' an operational knob
+    instead of a correctness parameter."""
+    import os
+
+    import pandas as pd
+
+    from sentiflow_spark.oracle import compare
+    from sentiflow_spark.queries.curation_dag import _duck_dag_oracle
+    from sentiflow_spark.tables import TABLE_NAMES
+
+    corpus = _all_stages_corpus()
+    # one parquet FILE, like the fixtures, so DuckDB reads it too
+    pd.DataFrame({
+        "doc_id": [i for i, _ in corpus],
+        "text": [t for _, t in corpus],
+        "lang": "en",
+        "source": "t",
+        "n_chars": [len(t) for _, t in corpus],
+    }).to_parquet(f"{tmp_path}/documents.parquet", index=False)
+    for t in TABLE_NAMES:  # the oracle connection views every table
+        if t != "documents":
+            os.symlink(f"{sf_dir}/{t}.parquet", f"{tmp_path}/{t}.parquet")
     sf = str(tmp_path)
 
-    results = []
+    oneshot = load_all()["txt_curation_dag"].fn(spark, sf).localCheckpoint()
+    stages = {r["stage"] for r in oneshot.select("stage").distinct().collect()}
+    assert stages == {
+        "bench", "boilerplate", "quality", "exact_dup", "near_dup",
+        "decontaminated", "domain_cap", "kept",
+    }
+    report = compare("txt_curation_dag", oneshot, _duck_dag_oracle(), sf)
+    assert report.ok, report.sample_diff
+
     for n in (1, 2, 3):
         state = f"{tmp_path}/state{n}"
         run_delta_batches(spark, sf, state, n_batches=n)
-        results.append(_canon(publish(spark, sf, state)))
-    assert results[0] == results[1] == results[2]
+        assert _canon(publish(spark, sf, state)) == _canon(oneshot), n
 
 
 def test_publish_as_of_generation(spark, tmp_path):

@@ -881,6 +881,58 @@ def test_curate_delta_job_auto_compact_flag(spark, sf_dir):
         shutil.rmtree(d, ignore_errors=True)
 
 
+def test_curate_delta_job_file_uri_out_uses_its_state_root(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """--out file://<dir> puts the state at <dir>/state, and the job
+    empties, lists and fences THAT directory: a stale generation-0
+    feature partition planted there is removed before admission, so
+    the funnel equals the one-shot DAG's. (Read as a relative path, the
+    URI left the stale rows in place — two disposition rows per doc —
+    and created a ./file: tree in the working directory.) Any other
+    scheme is refused before Spark starts."""
+    from pyspark.sql import functions as F
+
+    from sentiflow_spark.queries.curation_delta import _SIG_COLS
+    from sentiflow_spark.queries.registry import load_all
+
+    out = tmp_path / "out"
+    ids = [r[0] for r in spark.read.parquet(f"{sf_dir}/documents.parquet")
+           .select("doc_id").collect()]
+    ddl = (
+        "doc_id bigint, lang string, bp_kept boolean, passes_all boolean, "
+        "fp string, " + ", ".join(f"{c} bigint" for c in _SIG_COLS)
+        + ", wfps array<bigint>, text_bp string, len_bp bigint, "
+        "n_tokens_bp bigint"
+    )
+    n_null = len(_SIG_COLS) + 6
+    spark.createDataFrame(
+        [(i, "en", False, *([None] * n_null)) for i in ids], ddl
+    ).write.parquet(f"{out}/state/features/_gen=0")
+    cwd = tmp_path / "cwd"
+    cwd.mkdir()
+    monkeypatch.chdir(cwd)
+
+    r = _run([
+        "curate-delta", "--sf-dir", sf_dir, "--out", f"file://{out}",
+        "--batches", "1",
+    ])
+    disp = load_all()["txt_curation_dag"].fn(spark, sf_dir)
+    expected = {
+        row["stage"]: row["n"]
+        for row in disp.groupBy("stage").agg(F.count(F.lit(1)).alias("n")).collect()
+    }
+    assert r["funnel"] == expected
+    written = spark.read.parquet(f"{out}/disposition")
+    assert written.count() == written.select("doc_id").distinct().count() == len(ids)
+    assert os.listdir(cwd) == []
+
+    with pytest.raises(SystemExit, match="local filesystem"):
+        _run([
+            "curate-delta", "--sf-dir", sf_dir, "--out", "s3a://bucket/cd",
+        ])
+
+
 def test_curate_delta_job_prevalidates_asof_vs_auto_compact(sf_dir):
     """--auto-compact-gens K with --as-of-gen G below the final rolling
     horizon (batches-1-K) fails UP FRONT with SystemExit, not with
