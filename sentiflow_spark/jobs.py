@@ -17,14 +17,23 @@ SURVEY §3) as one CLI:
   to the same table state.
 - **stream** (consumer DAG, streaming deployment): the same
   ``sentiment_pipeline`` function under Structured Streaming with an
-  ``availableNow`` trigger and a ``foreachBatch`` MERGE sink; swap the
-  file source for Kafka via ``--kafka-brokers`` in production.
+  ``availableNow`` trigger and a ``foreachBatch`` MERGE sink, over the
+  ``--sf-dir`` file source. It refuses ``--kafka-brokers``: no Kafka
+  source is wired into it, and pyspark ships no ``spark-sql-kafka``
+  connector.
 - **topics** (topic-generator analog): headlines → stub/LLM topic
   extraction → dedup → anti-join vs the stored snapshot (read-once, the
   reference's staleness semantics) → MERGE upsert.
 
 Every job prints one JSON line with row counts so orchestrators can
-assert on output.
+assert on output. Each output is written by one execution of its
+dataflow, and its count rides that write as an ``Observation`` on the
+frame being written, not a second execution or a re-read. The
+exceptions are deliberate: pipeline, stream and topics re-read their
+table, because they report its size after a MERGE that sees only part
+of it; curate counts its input on its own scan, the independent side
+of its funnel balance, and groups its pinned disposition for the
+funnel.
 """
 
 from __future__ import annotations
@@ -34,7 +43,8 @@ import json
 import os
 import urllib.parse
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 DEFAULT_SF_DIR = "/root/testdata/sf0.001"
 
@@ -50,7 +60,10 @@ def job_ingest(args: argparse.Namespace) -> dict:
     from sentiflow_spark.tables import load
 
     spark = _spark("sentiflow-ingest")
-    raw = documents_as_raw_content(load(spark, args.sf_dir, "documents"))
+    written = Observation()
+    raw = documents_as_raw_content(load(spark, args.sf_dir, "documents")).observe(
+        written, F.count(F.lit(1)).alias("rows")
+    )
     if args.kafka_brokers:
         from sentiflow_spark.sources.kafka_io import TOPIC_RAW_CONTENT, keyed_json_payload
 
@@ -63,8 +76,7 @@ def job_ingest(args: argparse.Namespace) -> dict:
             .option("topic", TOPIC_RAW_CONTENT)
             .save()
         )
-        return {"job": "ingest", "rows": raw.count(), "sink": "kafka"}
-    n_batch = raw.count()
+        return {"job": "ingest", "rows": written.get["rows"], "sink": "kafka"}
     raw.write.mode("append").parquet(args.out)
     # "rows" is ALWAYS this run's batch size (same semantics as the
     # Kafka branch). Append mirrors the producer's at-least-once publish
@@ -72,7 +84,7 @@ def job_ingest(args: argparse.Namespace) -> dict:
     # (SURVEY §3.1). The cumulative table count costs a full re-scan of
     # the output, so it's opt-in (--report-total); the default path
     # never reads the table it just wrote.
-    result = {"job": "ingest", "rows": n_batch, "sink": args.out}
+    result = {"job": "ingest", "rows": written.get["rows"], "sink": args.out}
     if args.report_total:
         result["rows_total"] = spark.read.parquet(args.out).count()
     return result
@@ -134,6 +146,12 @@ def job_stream(args: argparse.Namespace) -> dict:
     from sentiflow_spark.streaming.dag import load_stream
     from sentiflow_spark.streaming.sinks import results_sink
 
+    if args.kafka_brokers:
+        raise SystemExit(
+            "stream: --kafka-brokers is not supported; no Kafka source is "
+            "wired into the stream job, and this pyspark ships no "
+            "spark-sql-kafka connector. The job streams --sf-dir files."
+        )
     spark = _spark("sentiflow-stream")
     ckpt = args.checkpoint or tempfile.mkdtemp(prefix="sf_ckpt_")
 
@@ -182,43 +200,33 @@ def job_topics(args: argparse.Namespace) -> dict:
 
 
 def job_dedup(args: argparse.Namespace) -> dict:
-    """Corpus dedup as a runnable job (the training-data-pipeline
-    extension, SURVEY §7.2 M5): exact fingerprint dedup, then
-    MinHash-LSH near-pair graph, connected-component clusters,
-    keep-lowest-id-per-cluster; survivors written out with their
-    cluster id for audit."""
-    from pyspark.sql import functions as F
-
-    from sentiflow_spark.operators.dedup import (
-        connected_components,
-        lsh_candidate_pairs,
-        minhash_signatures,
-    )
+    """Corpus near-duplicate removal as a runnable job (the
+    training-data-pipeline extension, SURVEY §7.2 M5): the
+    oracle-checked dd_duplicate_clusters query (MinHash-LSH near pairs
+    at Jaccard >= 0.9, connected components, cluster id = smallest
+    member doc_id) is the whole pipeline. The survivor of each cluster
+    is the doc whose doc_id equals its cluster_id; survivors are
+    written with every document column plus the cluster id for
+    audit."""
+    from sentiflow_spark.queries.dedup_queries import dd_duplicate_clusters
     from sentiflow_spark.tables import load
 
     spark = _spark("sentiflow-dedup")
+    seen, written = Observation(), Observation()
     docs = load(spark, args.sf_dir, "documents")
-    n_in = docs.count()
-    pairs = lsh_candidate_pairs(minhash_signatures(docs)).filter(
-        F.col("est_jaccard") >= args.jaccard
+    heads = dd_duplicate_clusters(spark, args.sf_dir).filter(
+        F.col("doc_id") == F.col("cluster_id")
     )
-    clusters = connected_components(pairs)
-    labeled = docs.join(
-        clusters, docs.doc_id == clusters.node, "left"
-    ).withColumn("cluster_id", F.coalesce("lbl", "doc_id"))
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("cluster_id").orderBy("doc_id")
     survivors = (
-        labeled.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
+        docs.observe(seen, F.count(F.lit(1)).alias("n"))
+        .join(heads, "doc_id")
         .select(*docs.columns, "cluster_id")
+        .observe(written, F.count(F.lit(1)).alias("n"))
     )
     survivors.write.mode("overwrite").parquet(args.out)
-    n_out = spark.read.parquet(args.out).count()
+    n_in, n_out = seen.get["n"], written.get["n"]
     return {"job": "dedup", "rows_in": n_in, "rows_out": n_out,
             "removed": n_in - n_out, "sink": args.out}
-
 
 
 def job_curate(args: argparse.Namespace) -> dict:
@@ -230,8 +238,7 @@ def job_curate(args: argparse.Namespace) -> dict:
     Writes TWO artifacts under --out: corpus/ (kept docs' clean text +
     shard assignment, partitioned by split) and disposition/ (one
     audit row per input doc), and returns the funnel counts."""
-    from pyspark.sql import functions as F
-
+    from sentiflow_spark.operators.dedup import cut_spans
     from sentiflow_spark.queries.curation_dag import (
         curation_stages,
         disposition,
@@ -239,31 +246,41 @@ def job_curate(args: argparse.Namespace) -> dict:
     from sentiflow_spark.tables import load
 
     spark = _spark("sentiflow-curate")
+    # counted on its own scan, not from the funnel: it is the
+    # independent side of the check sum(funnel) == rows_in
     n_in = load(spark, args.sf_dir, "documents").count()
     st = curation_stages(spark, args.sf_dir)  # ONE pipeline pass
     disp = disposition(st).localCheckpoint()
-    # post-cut text is re-derived map-side from the shared spans + s5
-    # stage objects (their winnow pins are reused): the query path's
-    # cut pin is numbers-only, so the corpus text is materialized
-    # exactly once, here at the write, instead of riding through the
-    # domain-cap window for every disposition-only caller
-    from sentiflow_spark.operators.dedup import cut_spans
-
+    # The kept rows come from the pinned disposition, so the packing
+    # tail runs once. Their post-cut text is re-derived map-side from
+    # the shared spans + s5 stage objects (their winnow pins are
+    # reused): the query path's cut pin is numbers-only, so the corpus
+    # text is materialized exactly once, here at the write.
     corpus_text = cut_spans(
         st["s5"].select("doc_id", "text"), st["spans"]
     ).select("doc_id", "clean_text")
-    corpus = st["packed"].join(corpus_text, "doc_id")
+    corpus = (
+        disp.filter(F.col("stage") == "kept")
+        .join(corpus_text, "doc_id")
+        .select("doc_id", "split", "n_tokens", "cut_chars", "seq_id", "clean_text")
+    )
     corpus.write.mode("overwrite").partitionBy("split").parquet(
         f"{args.out}/corpus"
     )
-    disp.write.mode("overwrite").parquet(f"{args.out}/disposition")
-    funnel = {
-        r["stage"]: r["n"]
-        for r in disp.groupBy("stage").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
+    funnel = _write_disposition(disp, args.out)
     return {"job": "curate", "rows_in": n_in,
             "rows_out": funnel.get("kept", 0), "funnel": funnel,
             "sink": args.out}
+
+
+def _write_disposition(disp: DataFrame, out: str) -> dict[str, int]:
+    """Write the pinned disposition under ``out`` and return its funnel:
+    the row count per stage."""
+    disp.write.mode("overwrite").parquet(f"{out}/disposition")
+    return {
+        r["stage"]: r["n"]
+        for r in disp.groupBy("stage").agg(F.count(F.lit(1)).alias("n")).collect()
+    }
 
 
 def _local_dir(out: str) -> str:
@@ -299,8 +316,6 @@ def job_curate_delta(args: argparse.Namespace) -> dict:
     job_curate exactly — proved by txt_curation_delta's oracle entry
     hash-matching the one-shot DAG oracle."""
     import shutil
-
-    from pyspark.sql import functions as F
 
     from sentiflow_spark.queries.curation_delta import (
         compact_state,
@@ -379,11 +394,7 @@ def job_curate_delta(args: argparse.Namespace) -> dict:
         spark, args.sf_dir, state, as_of_gen=args.as_of_gen,
         universe=universe,
     ).localCheckpoint()
-    disp.write.mode("overwrite").parquet(f"{args.out}/disposition")
-    funnel = {
-        r["stage"]: r["n"]
-        for r in disp.groupBy("stage").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
+    funnel = _write_disposition(disp, args.out)
     out = {"job": "curate-delta", "batches": stats, "funnel": funnel,
            "rows_out": funnel.get("kept", 0), "sink": args.out}
     if compacted is not None:
@@ -403,15 +414,20 @@ def job_gate_media(args: argparse.Namespace) -> dict:
     modality) and a rejects/ summary (drop counts per
     modality × reason — what a crawl operator tunes thresholds from).
     Returns the admission funnel."""
-    from pyspark.sql import functions as F
-
     from sentiflow_spark.queries.multimodal_queries import mm_gate_flow
     from sentiflow_spark.tables import load
 
     spark = _spark("sentiflow-gate-media")
-    docs = load(spark, args.sf_dir, "documents").select("doc_id")
+    seen, written = Observation(), Observation()
+    docs = (
+        load(spark, args.sf_dir, "documents")
+        .select("doc_id")
+        .observe(seen, F.count(F.lit(1)).alias("n"))
+    )
     gate = mm_gate_flow(docs).localCheckpoint()
-    gate.write.mode("overwrite").partitionBy("modality").parquet(
+    gate.observe(
+        written, F.count_if(F.col("admitted")).alias("n")
+    ).write.mode("overwrite").partitionBy("modality").parquet(
         f"{args.out}/manifest"
     )
     rejects = (
@@ -423,9 +439,8 @@ def job_gate_media(args: argparse.Namespace) -> dict:
     funnel = {
         f"{r['modality']}/{r['reason']}": r["n"] for r in rejects.collect()
     }
-    n_in = gate.count()
-    n_ok = gate.filter(F.col("admitted")).count()
-    return {"job": "gate-media", "rows_in": n_in, "rows_out": n_ok,
+    return {"job": "gate-media", "rows_in": seen.get["n"],
+            "rows_out": written.get["n"],
             "rejected": funnel, "sink": args.out}
 
 
@@ -483,11 +498,14 @@ def job_sql(args: argparse.Namespace) -> dict:
     if not args.execute:
         raise SystemExit("sql job requires -e/--execute STATEMENT")
     spark = _spark("sentiflow-sql")
+    written = Observation()
     df = run_sql(spark, args.sf_dir, args.execute)
-    df.write.mode("overwrite").parquet(args.out)
+    df.observe(written, F.count(F.lit(1)).alias("rows")).write.mode(
+        "overwrite"
+    ).parquet(args.out)
     return {
         "job": "sql",
-        "rows": spark.read.parquet(args.out).count(),
+        "rows": written.get["rows"],
         "columns": df.columns,
         "sink": args.out,
     }
@@ -523,7 +541,6 @@ def main(argv: list[str] | None = None) -> dict:
                     help="number of gated availableNow rounds (stream job)")
     ap.add_argument("--report-total", action="store_true",
                     help="ingest: also report cumulative table count (extra scan)")
-    ap.add_argument("--jaccard", type=float, default=0.9, help="near-dup threshold (dedup job)")
     ap.add_argument("--batches", type=int, default=3,
                     help="delta batches (curate-delta job)")
     ap.add_argument("--as-of-gen", type=int, default=None,

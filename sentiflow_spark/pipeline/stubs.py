@@ -61,7 +61,6 @@ def stub_sentiment(requests: DataFrame) -> DataFrame:
 
 # Shared DuckDB fragments (kept adjacent to the Spark definitions so the
 # two renderings cannot drift).
-DUCK_SUMMARY = f"substr(text, 1, {SUMMARY_PREFIX_LEN})"
 DUCK_SCORE = "((length(text) * 37 + 11) % 2001 - 1000) / 1000.0"
 DUCK_LABEL = (
     "CASE WHEN {s} > 0.05 THEN 'positive' "

@@ -278,10 +278,8 @@ def curation_stages(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
         .select("doc_id", "text_clean", "doc_kept")
         .localCheckpoint(eager=False)
     )
-    cand = (
-        bp.filter(F.col("doc_kept"))
-        .select("doc_id", F.col("text_clean").alias("text"))
-        .join(docs_n.select("doc_id", "lang"), "doc_id")
+    cand = bp.filter(F.col("doc_kept")).select(
+        "doc_id", F.col("text_clean").alias("text")
     )
     gq = gopher_flags(cand).select("doc_id", dag_gate().alias("passes_all"))
     quality = cand.join(
@@ -292,7 +290,7 @@ def curation_stages(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     # keeps only rn==1 survivors; the disposition infers exact_dup by
     # ABSENCE from this survivor set (quality minus s4), not from a
     # threaded rank column.
-    exact_ranked = dedup_exact(quality).select("doc_id", "text", "lang")
+    exact_ranked = dedup_exact(quality).select("doc_id", "text")
 
     # near dedup among exact survivors: verified pairs, lowest-id wins.
     # The signature table is pinned HERE (not inside lsh_candidate_pairs)

@@ -224,10 +224,10 @@ def st_session_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     "because the interval bounds event time in both directions.",
 )
 def st_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from sentiflow_spark.streaming.dag import interval_self_join
+    from sentiflow_spark.streaming.dag import interval_join
 
     ev = load_stream(spark, sf_dir, "events")
-    return run_to_table(interval_self_join(ev, interval="4 hours"))
+    return run_to_table(interval_join(ev, "inner", interval="4 hours"))
 
 
 @register(
@@ -346,10 +346,10 @@ def st_chained_hourly_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     "condition.",
 )
 def st_interval_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from sentiflow_spark.streaming.dag import interval_left_outer_join
+    from sentiflow_spark.streaming.dag import interval_join
 
     ev = load_stream(spark, sf_dir, "events")
-    return run_to_table(interval_left_outer_join(ev, interval="4 hours"))
+    return run_to_table(interval_join(ev, "left_outer", interval="4 hours"))
 
 
 @register(

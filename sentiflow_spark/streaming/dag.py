@@ -344,11 +344,12 @@ def session_counts(
     )
 
 
-def interval_self_join(
+def interval_join(
     events: DataFrame,
+    how: str,
     left_type: str = "click",
     right_type: str = "error",
-    interval: str = "10 minutes",
+    interval: str = "4 hours",
     ts_col: str = "ts",
 ) -> DataFrame:
     """Stream-stream join with an event-time interval bound: each
@@ -356,7 +357,15 @@ def interval_self_join(
     [ts, ts + interval]. Both sides carry watermarks and the join
     condition bounds event time in BOTH directions, so the state store
     can expire buffered rows — the only way a stream-stream join stays
-    bounded-memory at 100 TB/day."""
+    bounded-memory at 100 TB/day.
+
+    ``how`` is the join type. With ``"left_outer"`` every left-type
+    event is emitted, paired or once with nulls when the watermark
+    proves no match can arrive. The null-side row cannot be emitted
+    eagerly (a match may still come); it materializes only when the
+    global watermark passes ``left_ts + interval``, i.e. the state
+    store can discard the row. That is the semantics the oracle must
+    model — see st_interval_left_outer."""
     a = (
         events.filter(F.col("event_type") == left_type)
         .select(
@@ -380,6 +389,7 @@ def interval_self_join(
         (F.col("user_id") == F.col("b_user_id"))
         & (F.col("right_ts") >= F.col("left_ts"))
         & (F.col("right_ts") <= F.col("left_ts") + F.expr(f"INTERVAL {interval}")),
+        how,
     ).select(
         "user_id",
         "left_id",
@@ -414,54 +424,6 @@ def chained_hourly_daily(events: DataFrame, ts_col: str = "ts") -> DataFrame:
         "event_type",
         "max_hourly",
         "n_total",
-    )
-
-
-def interval_left_outer_join(
-    events: DataFrame,
-    left_type: str = "click",
-    right_type: str = "error",
-    interval: str = "4 hours",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """Stream-stream LEFT OUTER interval join: every left-type event,
-    paired with same-user right-type events in [ts, ts + interval] —
-    or emitted once with nulls when the watermark proves no match can
-    arrive. The null-side row cannot be emitted eagerly (a match may
-    still come); it materializes only when the global watermark passes
-    ``left_ts + interval``, i.e. the state store can discard the row.
-    That is the semantics the oracle must model — see
-    st_interval_left_outer."""
-    a = (
-        events.filter(F.col("event_type") == left_type)
-        .select(
-            F.col("user_id"),
-            F.col("event_id").alias("left_id"),
-            F.col(ts_col).alias("left_ts"),
-        )
-        .withWatermark("left_ts", "1 hour")
-    )
-    b = (
-        events.filter(F.col("event_type") == right_type)
-        .select(
-            F.col("user_id").alias("b_user_id"),
-            F.col("event_id").alias("right_id"),
-            F.col(ts_col).alias("right_ts"),
-        )
-        .withWatermark("right_ts", "1 hour")
-    )
-    return a.join(
-        b,
-        (F.col("user_id") == F.col("b_user_id"))
-        & (F.col("right_ts") >= F.col("left_ts"))
-        & (F.col("right_ts") <= F.col("left_ts") + F.expr(f"INTERVAL {interval}")),
-        "left_outer",
-    ).select(
-        "user_id",
-        "left_id",
-        "right_id",
-        F.date_format("left_ts", "yyyy-MM-dd HH:mm:ss").alias("left_ts_s"),
-        F.date_format("right_ts", "yyyy-MM-dd HH:mm:ss").alias("right_ts_s"),
     )
 
 

@@ -17,6 +17,22 @@ def _run(argv):
     return main(argv)
 
 
+def _run_counting_jobs(spark, argv):
+    """(result, Spark jobs launched) of one in-process job call, counted
+    in its own job group through Spark's status tracker."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-budget-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, argv[0])
+    try:
+        result = main(argv)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return result, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_ingest_then_pipeline(spark, sf_dir):
     d = tempfile.mkdtemp(prefix="sf_jobs_")
     try:
@@ -45,6 +61,22 @@ def test_stream_job_matches_batch(spark, sf_dir):
         )
         assert b.exceptAll(s).count() == 0
         assert s.exceptAll(b).count() == 0
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
+
+
+def test_stream_job_refuses_kafka_brokers(spark, sf_dir):
+    """--kafka-brokers has no Kafka source behind it in the stream job:
+    the call fails and says so, instead of streaming the --sf-dir files
+    as if the flag had been honoured, and nothing is written."""
+    d = tempfile.mkdtemp(prefix="sf_jobs_")
+    try:
+        with pytest.raises(SystemExit, match="spark-sql-kafka"):
+            _run([
+                "stream", "--sf-dir", sf_dir, "--out", f"{d}/stream",
+                "--checkpoint", f"{d}/ckpt", "--kafka-brokers", "b:9092",
+            ])
+        assert os.listdir(d) == []
     finally:
         shutil.rmtree(d, ignore_errors=True)
 
@@ -118,6 +150,7 @@ def test_dedup_job_matches_cluster_query(spark, sf_dir):
     d = tempfile.mkdtemp(prefix="sf_jobs_")
     try:
         r = _run(["dedup", "--sf-dir", sf_dir, "--out", f"{d}/dedup"])
+        assert r["rows_in"] == 500
         assert r["rows_in"] == r["rows_out"] + r["removed"]
 
         clusters = load_all()["dd_duplicate_clusters"].fn(spark, sf_dir)
@@ -198,12 +231,16 @@ def test_health_gated_stream_skips_then_resumes(spark, sf_dir):
 
 
 def test_ingest_total_is_opt_in(spark, sf_dir):
-    """Default ingest must not re-scan its own output; --report-total
-    restores the cumulative count."""
+    """Default ingest must not re-scan its own output, nor run its
+    projection a second time to count it: the write is its one Spark
+    job. --report-total restores the cumulative count."""
     d = tempfile.mkdtemp(prefix="sf_jobs_")
     try:
-        r1 = _run(["ingest", "--sf-dir", sf_dir, "--out", f"{d}/raw"])
+        r1, n_jobs = _run_counting_jobs(
+            spark, ["ingest", "--sf-dir", sf_dir, "--out", f"{d}/raw"]
+        )
         assert r1["rows"] == 500 and "rows_total" not in r1
+        assert n_jobs == 1, f"ingest ran {n_jobs} Spark jobs"
         r2 = _run(["ingest", "--sf-dir", sf_dir, "--out", f"{d}/raw", "--report-total"])
         assert r2["rows"] == 500 and r2["rows_total"] == 1000  # appended twice
     finally:
@@ -291,6 +328,23 @@ def test_curate_job_writes_partitioned_corpus(spark, sf_dir):
         corpus = spark.read.parquet(f"{d}/cur/corpus")
         assert corpus.count() == r["rows_out"]
         assert "clean_text" in corpus.columns
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
+
+
+def test_curate_job_spark_job_budget(spark, sf_dir):
+    """One warm curate call runs at most 75 Spark jobs. The corpus is
+    written from the pinned disposition's kept rows, so the packing
+    tail (domain-cap window, cluster-label join, packing window) runs
+    once per call, not a second time for the corpus write."""
+    d = tempfile.mkdtemp(prefix="sf_jobs_")
+    try:
+        _run(["curate", "--sf-dir", sf_dir, "--out", f"{d}/warm"])
+        r, n_jobs = _run_counting_jobs(
+            spark, ["curate", "--sf-dir", sf_dir, "--out", f"{d}/cur"]
+        )
+        assert sum(r["funnel"].values()) == r["rows_in"] == 500
+        assert n_jobs <= 75, f"curate ran {n_jobs} Spark jobs"
     finally:
         shutil.rmtree(d, ignore_errors=True)
 
