@@ -137,6 +137,7 @@ def run_gated_rounds(
 
 
 def job_stream(args: argparse.Namespace) -> dict:
+    import contextlib
     import tempfile
 
     from sentiflow_spark.pipeline.batch import (
@@ -153,32 +154,38 @@ def job_stream(args: argparse.Namespace) -> dict:
             "spark-sql-kafka connector. The job streams --sf-dir files."
         )
     spark = _spark("sentiflow-stream")
-    ckpt = args.checkpoint or tempfile.mkdtemp(prefix="sf_ckpt_")
+    # Without --checkpoint the run resumes nothing, so its checkpoint is
+    # scratch: removed when the job returns, and reported as null.
+    with (
+        contextlib.nullcontext(args.checkpoint)
+        if args.checkpoint
+        else tempfile.TemporaryDirectory(prefix="sf_ckpt_")
+    ) as ckpt:
 
-    def make_query():
-        docs = load_stream(spark, args.sf_dir, "documents")
-        flow = sentiment_pipeline(
-            documents_as_raw_content(docs), router_threshold=args.router_threshold
-        )
-        return (
-            flow.writeStream.foreachBatch(results_sink(args.out))
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
+        def make_query():
+            docs = load_stream(spark, args.sf_dir, "documents")
+            flow = sentiment_pipeline(
+                documents_as_raw_content(docs), router_threshold=args.router_threshold
+            )
+            return (
+                flow.writeStream.foreachBatch(results_sink(args.out))
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+            )
 
-    if args.health_url:
-        from sentiflow_spark.pipeline.model_udfs import probe_health
+        if args.health_url:
+            from sentiflow_spark.pipeline.model_udfs import probe_health
 
-        outcomes = run_gated_rounds(
-            make_query,
-            probe=lambda: probe_health(args.health_url),
-            rounds=args.health_rounds,
-        )
-    else:
-        outcomes = run_gated_rounds(make_query, probe=lambda: True, rounds=1)
+            outcomes = run_gated_rounds(
+                make_query,
+                probe=lambda: probe_health(args.health_url),
+                rounds=args.health_rounds,
+            )
+        else:
+            outcomes = run_gated_rounds(make_query, probe=lambda: True, rounds=1)
     return {"job": "stream", "rows": spark.read.parquet(args.out).count(),
-            "sink": args.out, "checkpoint": ckpt, "rounds": outcomes}
+            "sink": args.out, "checkpoint": args.checkpoint, "rounds": outcomes}
 
 
 def job_topics(args: argparse.Namespace) -> dict:

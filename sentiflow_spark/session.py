@@ -58,6 +58,16 @@ def get_spark(app_name: str = "sentiflow_spark", **extra_conf: str) -> SparkSess
         # ~8.2 -> ~6.8 s, dd_duplicate_clusters ~2.0 -> ~1.5 s,
         # dd_minhash_lsh_pairs ~1.3 -> ~1.0 s warm.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        # List partition directories on the driver up to 1024 leaves
+        # (Spark's default is 32). The serving table has N_BUCKETS = 64
+        # bucket directories, so at the default every merge's read of it
+        # launched a 64-task listing job — 64 of a stream micro-batch's
+        # ~78 tasks, and one of its 5 jobs (local[4], 10k-row table,
+        # 200 docs/s). Tables with more leaf directories than this keep
+        # Spark's distributed listing, its scale path. Session-wide on
+        # purpose: merges run on the stream's foreachBatch thread, where
+        # a set-and-restore around the read would race other threads.
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
         # RocksDB state store: the scale path for streaming dedup state
         # (24h watermarked dedup over high-volume streams; SURVEY §7.4).
         .config(

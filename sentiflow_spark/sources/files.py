@@ -26,13 +26,35 @@ class TableDir:
     false for an existing directory)."""
 
     def __init__(self, spark: SparkSession, table_path: str) -> None:
+        self._jvm = spark._jvm
         self._path = spark._jvm.org.apache.hadoop.fs.Path
         self._root = self._path(table_path)
-        self._fs = self._root.getFileSystem(spark._jsc.hadoopConfiguration())
+        self._conf = spark._jsc.hadoopConfiguration()
+        self._fs = self._root.getFileSystem(self._conf)
 
     def exists(self) -> bool:
         """True when the path is a directory (a directory-of-parts table)."""
         return self._fs.isDirectory(self._root)
+
+    def partition_file_columns(self, partition_col: str) -> list[str] | None:
+        """Column names stored in one parquet file of the table's
+        ``<partition_col>=*`` directories (the partition column itself
+        lives in the path, not the file), or None when the table has no
+        such file. Reads one footer on the driver: no Spark job."""
+        files = self._fs.globStatus(
+            self._path(self._root, f"{partition_col}=*/*.parquet")
+        )
+        if not files:
+            return None
+        parquet = self._jvm.org.apache.parquet.hadoop
+        reader = parquet.ParquetFileReader.open(
+            parquet.util.HadoopInputFile.fromPath(files[0].getPath(), self._conf)
+        )
+        try:
+            fields = reader.getFooter().getFileMetaData().getSchema().getFields()
+            return [f.getName() for f in fields]
+        finally:
+            reader.close()
 
     def size_bytes(self) -> int:
         """Total byte size of everything under the path."""

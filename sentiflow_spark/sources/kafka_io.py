@@ -13,16 +13,17 @@ every one of those concerns is subsumed:
   (the reference's own design: sha256 content ids + PK-overwrite),
 - ``isolation.level=read_committed`` is the Spark Kafka default.
 
-This module is pure configuration: no broker runs in the test
-environment, so correctness tests drive the same transforms through
-file sources (streaming/dag.py) — the reference itself ships the same
+This module is pure configuration plus the wire projections: no
+broker runs in the test environment and pyspark ships no
+``spark-sql-kafka`` connector, so the jobs stream file sources
+(streaming/dag.py) — the reference itself ships the same
 escape hatch (``GetTopHeadlinesFromFile``,
 ``internal/clients/newsapi_client.go:279-297``).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -54,54 +55,16 @@ def kafka_source_options(
     return opts
 
 
-def read_kafka_json(
-    spark: SparkSession,
-    brokers: str,
-    topic: str,
-    schema: T.StructType,
-    starting_offsets: str = "earliest",
-    max_offsets_per_trigger: int | None = None,
-) -> DataFrame:
-    """S1: subscribe and decode JSON message values (P6) into columns.
-    ``minPartitions`` can be raised above the topic partition count to
-    fan wide on a big cluster."""
-    reader = spark.readStream.format("kafka").options(
-        **kafka_source_options(brokers, topic, starting_offsets, max_offsets_per_trigger)
-    )
-    return parse_kafka_json(reader.load(), schema)
-
-
 def parse_kafka_json(raw: DataFrame, schema: T.StructType) -> DataFrame:
     """P6 decode of Kafka's wire shape (key/value binary + timestamp)
-    into typed columns. Factored from read_kafka_json so the projection
-    is unit-testable without a broker — any DataFrame with Kafka's
-    column layout works."""
+    into typed columns: apply it to ``spark.readStream.format("kafka")
+    .options(**kafka_source_options(...)).load()``. Unit-testable
+    without a broker — any DataFrame with Kafka's column layout works."""
     return raw.select(
         F.col("key").cast("string").alias("kafka_key"),
         F.from_json(F.col("value").cast("string"), schema).alias("v"),
         "timestamp",
     ).select("kafka_key", "v.*", F.col("timestamp").alias("kafka_ts"))
-
-
-def write_kafka_json(
-    df: DataFrame,
-    brokers: str,
-    topic: str,
-    key_col: str,
-    checkpoint: str,
-    trigger_seconds: int = 5,
-):
-    """K1: keyed JSON publish. The reference's per-message transaction +
-    idempotent producer (producer.go:97-208) maps to at-least-once
-    delivery with deterministic keys; downstream dedups by key, which
-    is exactly how the reference recovers too (SURVEY §3.1)."""
-    payload = keyed_json_payload(df, key_col)
-    return (
-        payload.writeStream.format("kafka")
-        .options(**kafka_sink_options(brokers, topic, checkpoint))
-        .trigger(processingTime=f"{trigger_seconds} seconds")
-        .start()
-    )
 
 
 def kafka_sink_options(brokers: str, topic: str, checkpoint: str) -> dict[str, str]:
@@ -117,9 +80,10 @@ def kafka_sink_options(brokers: str, topic: str, checkpoint: str) -> dict[str, s
 def keyed_json_payload(df: DataFrame, key_col: str) -> DataFrame:
     """Kafka wire projection for K1 writes: key = the deterministic
     content key (reference keys messages by content_id so downstream
-    consumers/serving dedup by PK), value = full-row JSON. Factored out
-    of write_kafka_json so batch publishes (jobs.py ingest) share the
-    exact wire shape and tests can drive it without a broker."""
+    consumers/serving dedup by PK), value = full-row JSON. Batch
+    publishes (jobs.py ingest) and a ``writeStream.format("kafka")``
+    with ``kafka_sink_options`` share this wire shape, and tests drive
+    it without a broker."""
     return df.select(
         F.col(key_col).cast("string").alias("key"),
         F.to_json(F.struct(*[c for c in df.columns])).alias("value"),

@@ -24,8 +24,11 @@ Execution: the batch's plan runs once per merge — one eager pin of
 the incoming rows whose ``observe`` names the touched buckets, then an
 in-place dynamic-overwrite write straight from the merge plan whose own
 ``observe`` names the buckets still holding rows. Into an existing
-table that is 5 Spark jobs: table listing, parquet schema, the pin, and
-the write's shuffle map and result stages (see ``merge_upsert``).
+table that is 3 Spark jobs: the pin, and the write's shuffle map and
+result stages. The table is read with the batch's own columns (checked
+against one stored parquet footer on the driver), so no job infers its
+schema, and its bucket directories are listed on the driver (see
+``merge_upsert`` and ``session.get_spark``).
 
 TTL (W2): rows are stamped ``created_at``/``ttl`` on write
 (dynamodb.go:34,200-201 parity) and a retention sweep drops expired
@@ -95,6 +98,16 @@ def merge_upsert(
     incremental path. Pinned by
     tests/test_sinks.py::test_merge_upsert_partition_col_converges_to_fold.
 
+    COLUMN CONTRACT: a batch merged into an existing table carries
+    exactly the table's columns (compared as a set, the partition
+    column aside). The table is read with the batch's schema, which
+    would silently drop a stored column or null-fill a new one, so the
+    merge checks first: the column names stored in one parquet footer
+    are compared with the batch's, and a difference raises
+    ``ValueError`` naming both lists before anything is pinned or
+    written. Pinned by
+    tests/test_sinks.py::test_merge_upsert_column_mismatch_raises.
+
     Execution: ``new_rows`` runs exactly once. Into an existing
     bucketed table the incoming batch is pinned with one eager
     ``localCheckpoint`` whose ``observe`` yields the touched partition
@@ -102,8 +115,11 @@ def merge_upsert(
     per key) is written in place by dynamic partition overwrite, and
     an ``observe`` on that write yields the surviving partitions, so a
     touched partition left empty can be deleted. No other scan runs
-    apart from the retention probe. A new table or a one-time legacy
-    migration is written straight from ``new_rows`` with no pin.
+    apart from the retention probe, so a merge runs 3 Spark jobs (pin,
+    shuffle map, result): the table's schema is declared and its
+    directories are listed on the driver. A new table or a
+    one-time legacy migration (whose flat table is read with schema
+    inference) is written straight from ``new_rows`` with no pin.
 
     Scale shape: only buckets present in the batch (plus buckets
     holding expired rows during a retention sweep) are read and
@@ -114,17 +130,31 @@ def merge_upsert(
     parquet min/max stats skip files with no expired rows.
     """
     pcol = partition_col or "_bucket"
-    incoming = (
+    rows = (
         new_rows
         if partition_col
         else new_rows.withColumn("_bucket", _bucket_of(key, n_buckets))
-    ).withColumn("_pri", F.lit(0))
+    )
+    incoming = rows.withColumn("_pri", F.lit(0))
     table = TableDir(spark, table_path)
     exists = table.exists()
     touched: set[int] = set()
     migrating = False
     if exists:
-        current = spark.read.parquet(table_path)
+        stored = table.partition_file_columns(pcol)
+        if stored is None:
+            # no partition directory yet: a legacy table, inferred
+            current = spark.read.parquet(table_path)
+        else:
+            want = set(rows.columns) - {pcol}
+            if set(stored) - {pcol} != want:
+                raise ValueError(
+                    f"merge into {table_path}: the table stores columns "
+                    f"{sorted(stored)} but the batch has {sorted(want)}"
+                )
+            # The batch's columns are the table's, so the read needs no
+            # schema-inference job.
+            current = spark.read.schema(rows.schema).parquet(table_path)
         if pcol not in current.columns:
             if partition_col:
                 # a domain partition column cannot be derived here —

@@ -65,6 +65,22 @@ def test_stream_job_matches_batch(spark, sf_dir):
         shutil.rmtree(d, ignore_errors=True)
 
 
+def test_stream_job_without_checkpoint_leaves_no_temp_dir(spark, sf_dir, monkeypatch):
+    """Without --checkpoint the stream job's checkpoint is scratch: it is
+    removed when the job returns, so the temp dir is left as it was,
+    and the result reports no checkpoint path."""
+    d = tempfile.mkdtemp(prefix="sf_jobs_")
+    tmp = os.path.join(d, "tmp")
+    os.mkdir(tmp)
+    try:
+        monkeypatch.setattr(tempfile, "tempdir", tmp)
+        rs = _run(["stream", "--sf-dir", sf_dir, "--out", f"{d}/stream"])
+        assert rs["rows"] > 0 and rs["checkpoint"] is None
+        assert os.listdir(tmp) == []
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
+
+
 def test_stream_job_refuses_kafka_brokers(spark, sf_dir):
     """--kafka-brokers has no Kafka source behind it in the stream job:
     the call fails and says so, instead of streaming the --sf-dir files

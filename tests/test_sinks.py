@@ -224,10 +224,12 @@ def test_sentiment_pipeline_one_row_per_kept_input(spark):
 
 def test_merge_upsert_single_pass_job_budget(spark):
     """A merge into an existing 64-bucket table, with a batch touching
-    every bucket, runs at most 5 Spark jobs (listing, schema, the pin of
-    the batch, the write's shuffle map and result stages) and evaluates
-    the batch's plan exactly once: a Python UDF in ``new_rows`` sees
-    each input row one time."""
+    every bucket, runs exactly 3 Spark jobs (the pin of the batch, the
+    write's shuffle map and result stages; the table's 64 directories
+    are listed on the driver and its columns come from the batch, so
+    neither the listing nor the schema runs a job) and evaluates the
+    batch's plan exactly once: a Python UDF in ``new_rows`` sees each
+    input row one time."""
     import uuid
 
     sc = spark.sparkContext
@@ -259,10 +261,39 @@ def test_merge_upsert_single_pass_job_budget(spark):
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
-    assert n_jobs <= 5, f"merge ran {n_jobs} Spark jobs"
+    assert n_jobs == 3, f"merge ran {n_jobs} Spark jobs"
     assert calls.value == len(rows), f"flow ran {calls.value / len(rows):g}x"
     got = dict(_read(spark, path).select("content_id", "v").collect())
     assert len(got) == 2200 and got["k0"] == 2 and got["k1"] == 1 and got["n0"] == 3
+
+
+def test_merge_upsert_column_mismatch_raises(spark):
+    """A batch whose columns differ from the table's — one extra, one
+    missing — is refused before anything is written: the merge raises,
+    and every file of the table keeps its bytes and mtime."""
+    import pytest
+    from pyspark.errors import AnalysisException
+
+    path = os.path.join(tempfile.mkdtemp(), "tbl")
+    merge_upsert(
+        spark,
+        spark.createDataFrame([(f"k{i}", 1) for i in range(300)], ["content_id", "v"]),
+        path,
+        "content_id",
+    )
+
+    def contents():
+        tree = _tree(path)
+        return {f: (stat, open(f, "rb").read()) for f, stat in tree.items()}
+
+    before = contents()
+    extra = spark.createDataFrame([("k1", 2, "x")], ["content_id", "v", "extra"])
+    missing = spark.createDataFrame([("k2",), ("new",)], ["content_id"])
+    for batch in (extra, missing):
+        with pytest.raises((ValueError, AnalysisException)):
+            merge_upsert(spark, batch, path, "content_id")
+        assert contents() == before
+    assert dict(_read(spark, path).select("content_id", "v").collect())["k1"] == 1
 
 
 def test_merge_upsert_empty_batch_leaves_table_untouched(spark):

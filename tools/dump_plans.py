@@ -102,6 +102,10 @@ def write_plans_md() -> None:
         "(`partitionOverwriteMode=dynamic`) straight from the merge plan: the",
         "key window's shuffle reads the old files before the staged commit swaps",
         "them, and the incoming batch is pinned once so its plan runs once.",
+        "The table is read with the batch's schema, checked against one",
+        "stored footer on the driver, and its 64 bucket directories are",
+        "listed on the driver: into an existing table a merge runs 3 Spark",
+        "jobs (the pin, the write's shuffle map and result stages).",
         "Per-batch I/O is O(touched buckets) ≈ O(batch keys)",
         "— previously the whole table was read, shuffled through a global",
         "row_number window, and written twice per batch.",
