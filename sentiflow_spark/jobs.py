@@ -32,13 +32,13 @@ frame being written, not a second execution or a re-read. The
 exceptions are deliberate: pipeline, stream and topics re-read their
 table, because they report its size after a MERGE that sees only part
 of it; curate counts its input on its own scan, the independent side
-of its funnel balance, and groups its pinned disposition for the
-funnel.
+of its funnel balance. Its funnel rides the disposition write.
 """
 
 from __future__ import annotations
 
 import argparse
+import contextlib
 import json
 import os
 import urllib.parse
@@ -255,9 +255,12 @@ def job_curate(args: argparse.Namespace) -> dict:
     spark = _spark("sentiflow-curate")
     # counted on its own scan, not from the funnel: it is the
     # independent side of the check sum(funnel) == rows_in
-    n_in = load(spark, args.sf_dir, "documents").count()
-    st = curation_stages(spark, args.sf_dir)  # ONE pipeline pass
-    disp = disposition(st).localCheckpoint()
+    with _job_description(spark, "curate: rows_in"):
+        n_in = load(spark, args.sf_dir, "documents").count()
+    with _job_description(spark, "curate: curation_stages"):
+        st = curation_stages(spark, args.sf_dir)  # ONE pipeline pass
+    with _job_description(spark, "curate: disposition"):
+        disp = disposition(st).localCheckpoint()
     # The kept rows come from the pinned disposition, so the packing
     # tail runs once. Their post-cut text is re-derived map-side from
     # the shared spans + s5 stage objects (their winnow pins are
@@ -271,23 +274,54 @@ def job_curate(args: argparse.Namespace) -> dict:
         .join(corpus_text, "doc_id")
         .select("doc_id", "split", "n_tokens", "cut_chars", "seq_id", "clean_text")
     )
-    corpus.write.mode("overwrite").partitionBy("split").parquet(
-        f"{args.out}/corpus"
-    )
-    funnel = _write_disposition(disp, args.out)
+    with _job_description(spark, "curate: corpus_write"):
+        corpus.write.mode("overwrite").partitionBy("split").parquet(
+            f"{args.out}/corpus"
+        )
+    with _job_description(spark, "curate: disposition_write"):
+        funnel = _write_disposition(disp, args.out)
     return {"job": "curate", "rows_in": n_in,
             "rows_out": funnel.get("kept", 0), "funnel": funnel,
             "sink": args.out}
 
 
+@contextlib.contextmanager
+def _job_description(spark: SparkSession, text: str):
+    """Name the Spark jobs this thread launches inside the block, then
+    restore the caller's description. The job group is left alone:
+    callers count a whole call by it."""
+    sc = spark.sparkContext
+    caller = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(text)
+    try:
+        yield
+    finally:
+        sc.setJobDescription(caller)
+
+
 def _write_disposition(disp: DataFrame, out: str) -> dict[str, int]:
-    """Write the pinned disposition under ``out`` and return its funnel:
-    the row count per stage."""
-    disp.write.mode("overwrite").parquet(f"{out}/disposition")
-    return {
-        r["stage"]: r["n"]
-        for r in disp.groupBy("stage").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
+    """Write the disposition under ``out`` and return its funnel: the
+    row count per stage, stages with no rows left out. The counts ride
+    the write as an ``Observation``, with the total row count beside
+    them; a row whose stage is not a funnel label breaks the balance
+    and raises ``ValueError`` once the write is done (the check runs no
+    job of its own)."""
+    from sentiflow_spark.queries.curation_dag import STAGES
+
+    seen = Observation()
+    disp.observe(
+        seen,
+        F.count(F.lit(1)).alias("_rows"),
+        *(F.count_if(F.col("stage") == s).alias(s) for s in STAGES),
+    ).write.mode("overwrite").parquet(f"{out}/disposition")
+    counts = seen.get
+    funnel = {s: counts[s] for s in STAGES if counts[s]}
+    if sum(funnel.values()) != counts["_rows"]:
+        raise ValueError(
+            f"disposition funnel {funnel} does not balance: "
+            f"{counts['_rows']} rows written under {out}/disposition"
+        )
+    return funnel
 
 
 def _local_dir(out: str) -> str:

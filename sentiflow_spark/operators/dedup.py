@@ -522,9 +522,12 @@ def connected_components(
             )
             .localCheckpoint(eager=False)
         )
-        changed = jumped.filter(F.col("_chg")).limit(1).count()
+        # isEmpty takes one row: one job while a label still changes in
+        # the first partition scanned; a converged round scans the
+        # partitions in growing batches (spark.sql.limit.scaleUpFactor).
+        converged = jumped.filter(F.col("_chg")).isEmpty()
         labels = jumped.select("node", "lbl")
-        if changed == 0:
+        if converged:
             break
     return labels
 

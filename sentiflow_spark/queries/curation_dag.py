@@ -25,10 +25,14 @@ cannot drift from the parts.
 
 The decision layer — the gate (dag_gate / DUCK_DAG_GATE), the post-cut
 accounting (cut_accounting), the cap → grouped split → packing tail
-(pack) and the stage label (dispose) — is stated once, here. The
-incremental publish (curation_delta.py) calls the same four functions
-over manifest-resident features, so the two paths differ only in where
-their per-doc features come from.
+(pack) and the stage label (dispose, over the STAGES labels) — is
+stated once, here. The incremental publish (curation_delta.py) calls
+the same four functions over manifest-resident features, so the two
+paths differ only in where their per-doc features come from.
+
+Stage boundaries read more than once are pinned once (curation_stages
+lists them); pins carry no size statistics, so dispose folds them with
+one union and one doc_id aggregation instead of joining them.
 
 Scale shape (the 100 TB argument is the SUM of the parts', all
 documented on their standalone queries): the corpus text is touched by
@@ -200,6 +204,13 @@ def pack(cut: DataFrame, sigs: DataFrame, langs: DataFrame) -> DataFrame:
     )
 
 
+# The funnel's stage labels, in the order dispose()'s when chain tests
+# them ('kept' is its otherwise). The disposition write counts one per
+# label (jobs.py::_write_disposition).
+STAGES = ("bench", "boilerplate", "quality", "exact_dup", "near_dup",
+          "decontaminated", "domain_cap", "kept")
+
+
 def dispose(
     docs: DataFrame,
     gates: DataFrame,
@@ -210,34 +221,52 @@ def dispose(
 ) -> DataFrame:
     """One disposition row per doc_id of ``docs``: the stage where it
     left the funnel ('kept' if it did not) plus its shard assignment
-    and accounting when kept. ``gates`` is (doc_id, bp_kept,
-    passes_all); ``survivors`` the exact-dedup winners' doc_ids;
-    ``near_losers`` the near-dup losers' doc_ids; ``cut`` carries the
-    post-cut n_tokens; ``packed`` is pack()'s output. A stage is
-    inferred from ABSENCE where the funnel keeps no reject row (an
-    exact-dup loser is a gated doc missing from ``survivors``)."""
+    and accounting when kept. ``gates`` carries bp_kept and passes_all
+    per doc_id, as one row or as one row per column; ``survivors`` the
+    exact-dedup winners' doc_ids; ``near_losers`` the near-dup losers'
+    doc_ids; ``cut`` carries the post-cut n_tokens; ``packed`` is
+    pack()'s output. A stage is inferred from ABSENCE where the funnel
+    keeps no reject row (an exact-dup loser is a gated doc missing from
+    ``survivors``).
+
+    The per-doc facts are unioned and folded with one doc_id
+    aggregation (each column is set by at most one input, so max picks
+    it), not joined: most inputs are pins, which carry no size
+    statistics, so a join of them plans as a sort-merge join whose two
+    shuffles AQE runs before it switches to a broadcast. The union is
+    one doc_id exchange of narrow, text-free rows."""
+    facts = reduce(
+        lambda a, b: a.unionByName(b, allowMissingColumns=True),
+        (
+            docs.select("doc_id", F.lit(True).alias("_in")),
+            gates,
+            survivors.select("doc_id", F.lit(True).alias("_ex")),
+            near_losers.select("doc_id", F.lit(True).alias("_nd")),
+            cut.select("doc_id", F.col("n_tokens").alias("_tok")),
+            packed,
+        ),
+    )
     out = (
-        docs.join(gates, "doc_id", "left")
-        .join(survivors.withColumn("_ex", F.lit(True)), "doc_id", "left")
-        .join(near_losers.withColumn("_nd", F.lit(True)), "doc_id", "left")
-        .join(cut.select("doc_id", F.col("n_tokens").alias("_tok")), "doc_id", "left")
-        .join(packed, "doc_id", "left")
+        facts.groupBy("doc_id")
+        .agg(*(F.max(c).alias(c) for c in facts.columns if c != "doc_id"))
+        .filter(F.col("_in"))
     )
-    is_bench = F.col("doc_id") % DECON_SPAN_MOD == 0
     kept = F.col("seq_id").isNotNull()
-    stage = (
-        F.when(is_bench, "bench")
-        .when(~F.col("bp_kept"), "boilerplate")
-        .when(~F.col("passes_all"), "quality")
-        .when(F.col("_ex").isNull(), "exact_dup")
-        .when(F.col("_nd").isNotNull(), "near_dup")
-        .when(F.col("_tok") == 0, "decontaminated")
-        .when(~kept, "domain_cap")
-        .otherwise("kept")
+    rules = (
+        F.col("doc_id") % DECON_SPAN_MOD == 0,
+        ~F.col("bp_kept"),
+        ~F.col("passes_all"),
+        F.col("_ex").isNull(),
+        F.col("_nd").isNotNull(),
+        F.col("_tok") == 0,
+        ~kept,
     )
+    stage = F.when(rules[0], STAGES[0])
+    for rule, label in zip(rules[1:], STAGES[1:-1], strict=True):
+        stage = stage.when(rule, label)
     return out.select(
         "doc_id",
-        stage.alias("stage"),
+        stage.otherwise(STAGES[-1]).alias("stage"),
         "split",
         "seq_id",
         F.when(kept, F.col("n_tokens")).alias("n_tokens"),
@@ -247,11 +276,16 @@ def dispose(
 
 def curation_stages(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """Run the DAG and return every stage boundary (for the job and the
-    disposition query). Keys: docs_n, gq, exact_ranked, near_losers,
-    s5 (post-dedup survivors w/ normalized text), spans (the
-    decontamination cut-list — with s5 this reconstructs post-cut text
-    map-side, see jobs.py), cut (per-doc post-cut accounting: n_tokens,
-    cut_chars, clean_len — no text), packed."""
+    disposition query). Keys: docs, docs_n, bp, gq, exact_ranked,
+    near_losers, s5 (post-dedup survivors w/ normalized text), spans
+    (the decontamination cut-list — with s5 this reconstructs post-cut
+    text map-side, see jobs.py), cut (per-doc post-cut accounting:
+    n_tokens, cut_chars, clean_len — no text), packed.
+
+    Pinned with localCheckpoint, each because more than one later
+    stage reads it: docs_n, bp, exact_ranked, sigs, near_losers, s5,
+    spans and cut. Under AQE a lazy pin runs the exchanges of its
+    lineage when it is taken, so building the stages runs them."""
     docs = load(spark, sf_dir, "documents")
     # One Arrow NFC pass, pinned: six downstream stages consume the
     # normalized corpus and would each re-run the Python stage.
@@ -290,7 +324,12 @@ def curation_stages(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     # keeps only rn==1 survivors; the disposition infers exact_dup by
     # ABSENCE from this survivor set (quality minus s4), not from a
     # threaded rank column.
-    exact_ranked = dedup_exact(quality).select("doc_id", "text")
+    # Pinned: the signatures, s5 and the disposition all read it, and
+    # each would re-run the fingerprint window. It stores the exact
+    # survivors' text, next to s5's copy of the same rows.
+    exact_ranked = (
+        dedup_exact(quality).select("doc_id", "text").localCheckpoint(eager=False)
+    )
 
     # near dedup among exact survivors: verified pairs, lowest-id wins.
     # The signature table is pinned HERE (not inside lsh_candidate_pairs)
@@ -304,6 +343,7 @@ def curation_stages(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
         .filter(F.col("est_jaccard") >= NEAR_DUP_JACCARD)
         .select(F.col("doc_b").alias("doc_id"))
         .distinct()
+        .localCheckpoint(eager=False)
     )
     s5 = exact_ranked.join(near_losers, "doc_id", "left_anti").localCheckpoint(eager=False)
 
@@ -320,12 +360,17 @@ def curation_stages(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     # task at sf0.1 while 31 cores idled. The guard is therefore sized
     # by the original documents scan.
     wsrc = widen_small_input(wsrc, docs)
-    spans = winnow_contaminated_spans(wsrc, is_bench=is_bench)
+    # Pinned (as publish pins its spans): the cut pin and the corpus
+    # write's cut_spans both read it, and each would re-run the island
+    # windows.
+    spans = winnow_contaminated_spans(wsrc, is_bench=is_bench).localCheckpoint(
+        eager=False
+    )
     # Pinned like docs_n/s5: the decontaminated accounting is the third
     # phase boundary a production pipeline persists. Without it the
     # winnow hashing pass re-executes once inside connected_components'
     # eager edge derivation and once per downstream branch (tok and
-    # packed reference cut through separate join arms of the one
+    # packed reference cut through separate union arms of the one
     # disposition action) — three computes of the most expensive stage
     # instead of one (measured at sf0.1: whole-DAG cold 23.5 s →
     # 18.0 s, warm ~9.8 s → ~9.1 s). NARROW (r13): the query path
@@ -612,10 +657,11 @@ def disposition(st: dict[str, DataFrame]) -> DataFrame:
     """Per-doc disposition from an already-built stage dict — split out
     so jobs.py curate can write the corpus AND the audit table from ONE
     curation_stages pass instead of running the pipeline twice."""
+    # the gates as rows, one per doc and column: dispose() folds them
     gates = (
         st["bp"]
         .select("doc_id", F.col("doc_kept").alias("bp_kept"))
-        .join(st["gq"], "doc_id", "left")
+        .unionByName(st["gq"], allowMissingColumns=True)
     )
     return dispose(
         st["docs"].select("doc_id"),

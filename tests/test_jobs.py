@@ -349,10 +349,14 @@ def test_curate_job_writes_partitioned_corpus(spark, sf_dir):
 
 
 def test_curate_job_spark_job_budget(spark, sf_dir):
-    """One warm curate call runs at most 75 Spark jobs. The corpus is
+    """One warm curate call runs at most 52 Spark jobs. The corpus is
     written from the pinned disposition's kept rows, so the packing
-    tail (domain-cap window, cluster-label join, packing window) runs
-    once per call, not a second time for the corpus write."""
+    tail runs once per call; the exact-dedup survivors, the near-dup
+    losers and the contamination spans are pinned once, so the later
+    stages read them instead of re-running the dedup window, the LSH
+    pair pipeline and the island windows; the disposition is one
+    doc_id aggregation, not five joins; and the funnel rides the
+    disposition write instead of a separate group-by."""
     d = tempfile.mkdtemp(prefix="sf_jobs_")
     try:
         _run(["curate", "--sf-dir", sf_dir, "--out", f"{d}/warm"])
@@ -360,9 +364,45 @@ def test_curate_job_spark_job_budget(spark, sf_dir):
             spark, ["curate", "--sf-dir", sf_dir, "--out", f"{d}/cur"]
         )
         assert sum(r["funnel"].values()) == r["rows_in"] == 500
-        assert n_jobs <= 75, f"curate ran {n_jobs} Spark jobs"
+        assert n_jobs <= 52, f"curate ran {n_jobs} Spark jobs"
     finally:
         shutil.rmtree(d, ignore_errors=True)
+
+
+@pytest.mark.parametrize(
+    "argv", [["curate"], ["curate-delta", "--batches", "2"]], ids=lambda a: a[0]
+)
+def test_curate_funnel_equals_written_disposition(spark, sf_dir, argv):
+    """The funnel a curation job reports (counted on the disposition
+    write) equals a group-by of the disposition it wrote, and holds no
+    stage with a zero count."""
+    d = tempfile.mkdtemp(prefix="sf_jobs_")
+    try:
+        r = _run([*argv, "--sf-dir", sf_dir, "--out", f"{d}/out"])
+        written = {
+            row["stage"]: row["count"]
+            for row in spark.read.parquet(f"{d}/out/disposition")
+            .groupBy("stage")
+            .count()
+            .collect()
+        }
+        assert r["funnel"] == written
+        assert all(n > 0 for n in r["funnel"].values())
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
+
+
+def test_write_disposition_refuses_an_unbalanced_funnel(spark, tmp_path):
+    """A disposition row whose stage is not one of the funnel's labels
+    is counted in the total but in no stage, and the write raises."""
+    from sentiflow_spark.jobs import _write_disposition
+
+    disp = spark.createDataFrame(
+        [(1, "kept"), (2, "quality"), (3, "not_a_stage")],
+        "doc_id long, stage string",
+    )
+    with pytest.raises(ValueError, match="does not balance"):
+        _write_disposition(disp, str(tmp_path))
 
 
 def test_curate_job_artifacts_equal_query(spark):
