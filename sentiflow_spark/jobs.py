@@ -31,8 +31,9 @@ dataflow, and its count rides that write as an ``Observation`` on the
 frame being written, not a second execution or a re-read. The
 exceptions are deliberate: pipeline, stream and topics re-read their
 table, because they report its size after a MERGE that sees only part
-of it; curate counts its input on its own scan, the independent side
-of its funnel balance. Its funnel rides the disposition write.
+of it. curate's input count rides its disposition pin and its funnel
+rides the disposition write; a funnel that does not add up to the
+input count raises.
 """
 
 from __future__ import annotations
@@ -244,42 +245,40 @@ def job_curate(args: argparse.Namespace) -> dict:
     (queries/curation_dag.py::txt_curation_dag, oracle-checked e2e).
     Writes TWO artifacts under --out: corpus/ (kept docs' clean text +
     shard assignment, partitioned by split) and disposition/ (one
-    audit row per input doc), and returns the funnel counts."""
-    from sentiflow_spark.operators.dedup import cut_spans
+    audit row per input doc), and returns the funnel counts; raises
+    ValueError once both are written if the funnel does not add up to
+    the input rows."""
     from sentiflow_spark.queries.curation_dag import (
         curation_stages,
         disposition,
     )
-    from sentiflow_spark.tables import load
 
     spark = _spark("sentiflow-curate")
-    # counted on its own scan, not from the funnel: it is the
-    # independent side of the check sum(funnel) == rows_in
-    with _job_description(spark, "curate: rows_in"):
-        n_in = load(spark, args.sf_dir, "documents").count()
     with _job_description(spark, "curate: curation_stages"):
         st = curation_stages(spark, args.sf_dir)  # ONE pipeline pass
+    # The input count rides the disposition pin on its docs arm, not the
+    # funnel: it is the independent side of sum(funnel) == rows_in.
+    rows_in = Observation()
+    st["docs"] = st["docs"].select("doc_id", "lang").observe(
+        rows_in, F.count(F.lit(1)).alias("rows")
+    )
     with _job_description(spark, "curate: disposition"):
         disp = disposition(st).localCheckpoint()
-    # The kept rows come from the pinned disposition, so the packing
-    # tail runs once. Their post-cut text is re-derived map-side from
-    # the shared spans + s5 stage objects (their winnow pins are
-    # reused): the query path's cut pin is numbers-only, so the corpus
-    # text is materialized exactly once, here at the write.
-    corpus_text = cut_spans(
-        st["s5"].select("doc_id", "text"), st["spans"]
-    ).select("doc_id", "clean_text")
-    corpus = (
-        disp.filter(F.col("stage") == "kept")
-        .join(corpus_text, "doc_id")
-        .select("doc_id", "split", "n_tokens", "cut_chars", "seq_id", "clean_text")
-    )
+    # The kept rows of the pin carry their post-cut text, so the corpus
+    # write is a filter of it: the funnel's tail and the text cut run
+    # once per call.
     with _job_description(spark, "curate: corpus_write"):
-        corpus.write.mode("overwrite").partitionBy("split").parquet(
-            f"{args.out}/corpus"
-        )
+        disp.filter(F.col("stage") == "kept").select(
+            "doc_id", "split", "n_tokens", "cut_chars", "seq_id", "clean_text"
+        ).write.mode("overwrite").partitionBy("split").parquet(f"{args.out}/corpus")
     with _job_description(spark, "curate: disposition_write"):
-        funnel = _write_disposition(disp, args.out)
+        funnel = _write_disposition(disp.drop("clean_text"), args.out)
+    n_in = rows_in.get["rows"]
+    if sum(funnel.values()) != n_in:
+        raise ValueError(
+            f"curate: the disposition funnel {funnel} does not account for "
+            f"the {n_in} input rows of {args.sf_dir}"
+        )
     return {"job": "curate", "rows_in": n_in,
             "rows_out": funnel.get("kept", 0), "funnel": funnel,
             "sink": args.out}

@@ -24,15 +24,20 @@ cut_spans, lsh_star_edges + connected_components), so the composition
 cannot drift from the parts.
 
 The decision layer — the gate (dag_gate / DUCK_DAG_GATE), the post-cut
-accounting (cut_accounting), the cap → grouped split → packing tail
-(pack) and the stage label (dispose, over the STAGES labels) — is
-stated once, here. The incremental publish (curation_delta.py) calls
-the same four functions over manifest-resident features, so the two
-paths differ only in where their per-doc features come from.
+accounting and text (cut_accounting), the domain cap (cap), the
+split's clusters (clusters) and the stage label with the grouped split
+and the packing (dispose, over the STAGES labels) — is stated once,
+here. The incremental publish (curation_delta.py) calls the same five
+functions over manifest-resident features, so the two paths differ
+only in where their per-doc features come from.
 
 Stage boundaries read more than once are pinned once (curation_stages
-lists them); pins carry no size statistics, so dispose folds them with
-one union and one doc_id aggregation instead of joining them.
+lists them). A pin keeps the size the optimizer estimated before it
+ran, and for these plans that estimate is far too large (at sf0.001
+the 263-row cut pin reports 131 MiB and the 12-row near_losers pin,
+an LSH self-join, 2e26 MiB), so a join of pins plans as a sort-merge
+join. dispose therefore folds them with one union and one doc_id
+aggregation instead of joining them.
 
 Scale shape (the 100 TB argument is the SUM of the parts', all
 documented on their standalone queries): the corpus text is touched by
@@ -128,80 +133,47 @@ def dag_gate() -> Column:
 
 
 def cut_accounting(docs: DataFrame, spans: DataFrame) -> DataFrame:
-    """Cut ``spans`` out of ``docs`` (doc_id, text) and keep only the
-    per-doc numbers the rest of the funnel reads: (doc_id, n_tokens,
-    cut_chars, clean_len). The post-cut text itself is not carried —
-    the corpus write re-derives it map-side (see jobs.py)."""
+    """Cut ``spans`` out of ``docs`` (doc_id, text): (doc_id, n_tokens,
+    cut_chars, clean_len, clean_text). dispose() carries clean_text to
+    the kept rows, so the corpus is a filter of the disposition."""
     return cut_spans(docs, spans).select(
         "doc_id",
         token_count(F.col("clean_text")).cast("long").alias("n_tokens"),
         (F.col("orig_len") - F.col("clean_len")).cast("long").alias("cut_chars"),
         F.col("clean_len").cast("long").alias("clean_len"),
+        "clean_text",
     )
 
 
-def pack(cut: DataFrame, sigs: DataFrame, langs: DataFrame) -> DataFrame:
-    """The funnel's tail over the post-cut accounting ``cut``: drop
-    fully-cut docs → per-domain cap → leakage-safe grouped split →
-    token-budget packing. ``sigs`` are the survivors' MinHash
-    signatures (doc_id, sig_*), ``langs`` is (doc_id, lang). Returns
-    (doc_id, split, n_tokens, cut_chars, seq_id) for the kept docs."""
-    alive = cut.filter(F.col("n_tokens") > 0)
-
-    # per-domain cap: longest-clean-text-first within each registered
-    # domain. Domains are the synthetic doc_id % 40 hosts (canonical
-    # lowercase registered domain — the URL parse itself is exercised
-    # by txt_domain_cap; the composition keys the cap on the derived
+def cap(cut: DataFrame) -> DataFrame:
+    """The per-domain cap over the post-cut accounting ``cut``: the
+    doc_ids of the docs with text left (n_tokens > 0) that rank within
+    DOMAIN_CAP of their domain, longest clean text first."""
+    # Domains are the synthetic doc_id % 40 hosts (canonical lowercase
+    # registered domain — the URL parse itself is exercised by
+    # txt_domain_cap; the composition keys the cap on the derived
     # domain so both engines state it identically).
     domain = F.concat(
         F.lit("example"), (F.col("doc_id") % 40).cast("string"), F.lit(".com")
     )
     w_dom = W.partitionBy("domain").orderBy(F.col("clean_len").desc(), "doc_id")
-    capped = (
-        alive.withColumn("domain", domain)
+    return (
+        cut.filter(F.col("n_tokens") > 0)
+        .withColumn("domain", domain)
         .withColumn("cap_rank", F.row_number().over(w_dom))
         .filter(F.col("cap_rank") <= DOMAIN_CAP)
-        .select("doc_id", "n_tokens", "cut_chars")
+        .select("doc_id")
     )
 
-    # leakage-safe grouped split: cluster over banding-trusted STAR
-    # edges among the capped survivors (sub-0.9 near-material shares a
-    # cluster via band collisions and lands on one side), then the
-    # deterministic salted-hash-mod split on the CLUSTER id
-    sigs_kept = sigs.join(capped.select("doc_id"), "doc_id", "left_semi")
-    cc = connected_components(lsh_star_edges(sigs_kept))
-    clustered = capped.join(cc, capped.doc_id == cc.node, "left").select(
-        capped.doc_id.alias("doc_id"),
-        "n_tokens",
-        "cut_chars",
-        F.coalesce("lbl", capped.doc_id).alias("cluster_id"),
-    )
-    bucket = (
-        md5_i32(F.concat(F.lit(SPLIT_SALT), F.col("cluster_id").cast("string")))
-        % 100
-    )
-    split_df = clustered.withColumn(
-        "split", F.when(bucket < TRAIN_PCT, "train").otherwise("val")
-    )
 
-    # token-budget packing, per (split, lang) shard — the way a real
-    # corpus is packed (per shard/file, never one global ordering)
-    w_pack = (
-        W.partitionBy("split", "lang")
-        .orderBy("doc_id")
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
-    )
-    return (
-        split_df.join(langs, "doc_id")
-        .withColumn("cum", F.sum("n_tokens").over(w_pack))
-        .select(
-            "doc_id",
-            "split",
-            "n_tokens",
-            "cut_chars",
-            F.expr(f"(cum - n_tokens) div {SEQ_BUDGET}").alias("seq_id"),
-        )
-    )
+def clusters(capped: DataFrame, sigs: DataFrame) -> DataFrame:
+    """The grouping of the leakage-safe split: connected components
+    (node, lbl) over banding-trusted STAR edges among the ``capped``
+    docs' MinHash signatures ``sigs`` (doc_id, sig_*). Sub-0.9
+    near-material shares a cluster via band collisions, so it lands on
+    one side of the split."""
+    sigs_kept = sigs.join(capped, "doc_id", "left_semi")
+    return connected_components(lsh_star_edges(sigs_kept))
 
 
 # The funnel's stage labels, in the order dispose()'s when chain tests
@@ -217,48 +189,67 @@ def dispose(
     survivors: DataFrame,
     near_losers: DataFrame,
     cut: DataFrame,
-    packed: DataFrame,
+    capped: DataFrame,
+    cc: DataFrame,
 ) -> DataFrame:
-    """One disposition row per doc_id of ``docs``: the stage where it
-    left the funnel ('kept' if it did not) plus its shard assignment
-    and accounting when kept. ``gates`` carries bp_kept and passes_all
-    per doc_id, as one row or as one row per column; ``survivors`` the
-    exact-dedup winners' doc_ids; ``near_losers`` the near-dup losers'
-    doc_ids; ``cut`` carries the post-cut n_tokens; ``packed`` is
-    pack()'s output. A stage is inferred from ABSENCE where the funnel
-    keeps no reject row (an exact-dup loser is a gated doc missing from
-    ``survivors``).
+    """One disposition row per doc_id of ``docs`` (doc_id, lang): the
+    stage where it left the funnel ('kept' if it did not) plus, when
+    kept, its shard assignment, accounting and post-cut text.
+    ``gates`` carries bp_kept and passes_all per doc_id, as one row or
+    as one row per column; ``survivors`` the exact-dedup winners'
+    doc_ids; ``near_losers`` the near-dup losers' doc_ids (repeats
+    allowed); ``cut`` is cut_accounting()'s output, ``capped`` cap()'s
+    and ``cc`` clusters()'. A stage is inferred from ABSENCE where the
+    funnel keeps no reject row (an exact-dup loser is a gated doc
+    missing from ``survivors``).
 
     The per-doc facts are unioned and folded with one doc_id
     aggregation (each column is set by at most one input, so max picks
-    it), not joined: most inputs are pins, which carry no size
-    statistics, so a join of them plans as a sort-merge join whose two
-    shuffles AQE runs before it switches to a broadcast. The union is
-    one doc_id exchange of narrow, text-free rows."""
+    it), not joined: most inputs are pins, whose pre-run size estimate
+    is far too large, so a join of them plans as a sort-merge join
+    whose two shuffles AQE runs before it switches to a broadcast. The
+    folded rows then take the grouped split (a salted hash of the
+    doc's cluster, or of the doc when unclustered) and the token-budget
+    packing: a running sum per (split, lang) shard, the way a real
+    corpus is packed. Each rejected doc gets a window partition of its
+    own, so they do not all land in one."""
     facts = reduce(
         lambda a, b: a.unionByName(b, allowMissingColumns=True),
         (
-            docs.select("doc_id", F.lit(True).alias("_in")),
+            docs.select("doc_id", "lang", F.lit(True).alias("_in")),
             gates,
             survivors.select("doc_id", F.lit(True).alias("_ex")),
             near_losers.select("doc_id", F.lit(True).alias("_nd")),
-            cut.select("doc_id", F.col("n_tokens").alias("_tok")),
-            packed,
+            cut.select("doc_id", "n_tokens", "cut_chars", "clean_text"),
+            capped.select("doc_id", F.lit(True).alias("_cap")),
+            cc.select(F.col("node").alias("doc_id"), F.col("lbl").alias("_cl")),
         ),
+    )
+    kept = F.col("_cap").isNotNull()
+    cluster = F.coalesce("_cl", "doc_id").cast("string")
+    bucket = md5_i32(F.concat(F.lit(SPLIT_SALT), cluster)) % 100
+    w_pack = (
+        W.partitionBy("split", "lang", F.when(~kept, F.col("doc_id")))
+        .orderBy("doc_id")
+        .rowsBetween(W.unboundedPreceding, W.currentRow)
     )
     out = (
         facts.groupBy("doc_id")
         .agg(*(F.max(c).alias(c) for c in facts.columns if c != "doc_id"))
         .filter(F.col("_in"))
+        .withColumn(
+            "split",
+            F.when(kept, F.when(bucket < TRAIN_PCT, "train").otherwise("val")),
+        )
+        .withColumn("cum", F.sum("n_tokens").over(w_pack))
     )
-    kept = F.col("seq_id").isNotNull()
     rules = (
         F.col("doc_id") % DECON_SPAN_MOD == 0,
         ~F.col("bp_kept"),
         ~F.col("passes_all"),
         F.col("_ex").isNull(),
         F.col("_nd").isNotNull(),
-        F.col("_tok") == 0,
+        F.col("n_tokens") == 0,
         ~kept,
     )
     stage = F.when(rules[0], STAGES[0])
@@ -268,9 +259,9 @@ def dispose(
         "doc_id",
         stage.otherwise(STAGES[-1]).alias("stage"),
         "split",
-        "seq_id",
-        F.when(kept, F.col("n_tokens")).alias("n_tokens"),
-        F.when(kept, F.col("cut_chars")).alias("cut_chars"),
+        F.when(kept, F.expr(f"(cum - n_tokens) div {SEQ_BUDGET}")).alias("seq_id"),
+        *(F.when(kept, F.col(c)).alias(c)
+          for c in ("n_tokens", "cut_chars", "clean_text")),
     )
 
 
@@ -278,14 +269,16 @@ def curation_stages(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """Run the DAG and return every stage boundary (for the job and the
     disposition query). Keys: docs, docs_n, bp, gq, exact_ranked,
     near_losers, s5 (post-dedup survivors w/ normalized text), spans
-    (the decontamination cut-list — with s5 this reconstructs post-cut
-    text map-side, see jobs.py), cut (per-doc post-cut accounting:
-    n_tokens, cut_chars, clean_len — no text), packed.
+    (the decontamination cut-list), cut (cut_accounting: per-doc
+    post-cut numbers and text), capped (cap), cc (clusters) and packed
+    (the kept rows' doc_id, split, n_tokens, cut_chars, seq_id: a lazy
+    view of the disposition).
 
     Pinned with localCheckpoint, each because more than one later
     stage reads it: docs_n, bp, exact_ranked, sigs, near_losers, s5,
     spans and cut. Under AQE a lazy pin runs the exchanges of its
-    lineage when it is taken, so building the stages runs them."""
+    lineage when it is taken, so building the stages runs them, and
+    so does connected components' convergence probe."""
     docs = load(spark, sf_dir, "documents")
     # One Arrow NFC pass, pinned: six downstream stages consume the
     # normalized corpus and would each re-run the Python stage.
@@ -342,7 +335,6 @@ def curation_stages(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
         lsh_candidate_pairs(sigs, materialized=True)
         .filter(F.col("est_jaccard") >= NEAR_DUP_JACCARD)
         .select(F.col("doc_b").alias("doc_id"))
-        .distinct()
         .localCheckpoint(eager=False)
     )
     s5 = exact_ranked.join(near_losers, "doc_id", "left_anti").localCheckpoint(eager=False)
@@ -368,26 +360,18 @@ def curation_stages(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     )
     # Pinned like docs_n/s5: the decontaminated accounting is the third
     # phase boundary a production pipeline persists. Without it the
-    # winnow hashing pass re-executes once inside connected_components'
-    # eager edge derivation and once per downstream branch (tok and
-    # packed reference cut through separate union arms of the one
-    # disposition action) — three computes of the most expensive stage
-    # instead of one (measured at sf0.1: whole-DAG cold 23.5 s →
-    # 18.0 s, warm ~9.8 s → ~9.1 s). NARROW (r13): the query path
-    # consumes only per-doc NUMBERS from this boundary (n_tokens for
-    # the funnel/packing, clean_len for the domain-cap ordering,
-    # cut_chars for the audit columns) — clean_text itself is needed
-    # only by jobs.py's corpus write, which re-derives it map-side
-    # from the returned spans + s5 (both shared objects, so the winnow
-    # pins are reused) instead of materializing the whole post-cut
-    # corpus inside this pin and shuffling it through the domain-cap
-    # window (guide §2.3 "project before the exchange"/§8).
+    # winnow hashing pass re-executes inside connected_components'
+    # eager edge derivation and again inside the disposition (measured
+    # at sf0.1: whole-DAG cold 23.5 s → 18.0 s, warm ~9.8 s → ~9.1 s).
+    # It holds the post-cut text too: the disposition carries it to the
+    # kept rows, so jobs.py writes the corpus from the disposition pin
+    # and the text is cut once.
     cut = cut_accounting(s5.select("doc_id", "text"), spans).localCheckpoint(
         eager=False
     )
-    packed = pack(cut, sigs, docs_n.select("doc_id", "lang"))
+    capped = cap(cut)
 
-    return {
+    st = {
         "docs": docs,
         "docs_n": docs_n,
         "bp": bp,
@@ -397,8 +381,15 @@ def curation_stages(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
         "s5": s5,
         "spans": spans,
         "cut": cut,
-        "packed": packed,
+        "capped": capped,
+        "cc": clusters(capped, sigs),
     }
+    st["packed"] = (
+        disposition(st)
+        .filter(F.col("stage") == "kept")
+        .select("doc_id", "split", "n_tokens", "cut_chars", "seq_id")
+    )
+    return st
 
 
 def _duck_dag_oracle(source: str = "documents") -> str:
@@ -650,7 +641,7 @@ def _duck_dag_oracle(source: str = "documents") -> str:
     "pl_e2e_results proves the sentiment dataflow.",
 )
 def txt_curation_dag(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return disposition(curation_stages(spark, sf_dir))
+    return disposition(curation_stages(spark, sf_dir)).drop("clean_text")
 
 
 def disposition(st: dict[str, DataFrame]) -> DataFrame:
@@ -664,10 +655,11 @@ def disposition(st: dict[str, DataFrame]) -> DataFrame:
         .unionByName(st["gq"], allowMissingColumns=True)
     )
     return dispose(
-        st["docs"].select("doc_id"),
+        st["docs"].select("doc_id", "lang"),
         gates,
         st["exact_ranked"].select("doc_id"),
         st["near_losers"],
         st["cut"],
-        st["packed"],
+        st["capped"],
+        st["cc"],
     )

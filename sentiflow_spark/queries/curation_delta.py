@@ -33,7 +33,8 @@ therefore provable against the same DuckDB oracle):
   decontamination spans come from stored fingerprints, signatures and
   winnow keys; the gate, the post-cut accounting, the cap → grouped
   split → packing tail and the stage label are the one-shot DAG's own
-  functions (curation_dag.dag_gate / cut_accounting / pack / dispose),
+  functions (curation_dag.dag_gate / cut_accounting / cap / clusters /
+  dispose),
   so the two agree by construction over the same features.
 
 Cost shape at 100 TB: per-batch work is O(delta + stale) corpus text
@@ -99,10 +100,11 @@ from sentiflow_spark.operators.dedup import (
 from sentiflow_spark.queries.curation_dag import (
     NEAR_DUP_JACCARD,
     _duck_dag_oracle,
+    cap,
+    clusters,
     cut_accounting,
     dag_gate,
     dispose,
-    pack,
 )
 from sentiflow_spark.queries.curation_queries import gopher_flags, nfc_norm_expr
 from sentiflow_spark.queries.dedup_queries import DECON_SPAN_MOD
@@ -848,7 +850,6 @@ def publish(
         lsh_candidate_pairs(sigs)
         .filter(F.col("est_jaccard") >= NEAR_DUP_JACCARD)
         .select(F.col("doc_b").alias("doc_id"))
-        .distinct()
         .localCheckpoint(eager=False)
     )
     s5 = s4.join(near_losers, "doc_id", "left_anti")
@@ -888,11 +889,13 @@ def publish(
             F.col("n_tokens_bp").alias("n_tokens"),
             F.lit(0).cast("long").alias("cut_chars"),
             F.col("len_bp").alias("clean_len"),
+            # publish writes no corpus, so the uncut docs' text stays
+            # in the manifest
+            F.lit(None).cast("string").alias("clean_text"),
         )
     )
     cut_all = cut_spanned.unionByName(cut_rest).localCheckpoint(eager=False)
-
-    packed = pack(cut_all, sigs, feat.select("doc_id", "lang"))
+    capped = cap(cut_all)
 
     # ``universe``: the doc set the release enumerates — defaults to
     # the full raw table (correct once every batch is admitted). An
@@ -901,15 +904,16 @@ def publish(
     # has no feature row and cannot be dispositioned.
     docs = (universe if universe is not None else load(
         spark, sf_dir, "documents"
-    )).select("doc_id")
+    )).select("doc_id", "lang")
     return dispose(
         docs,
         feat.select("doc_id", "bp_kept", "passes_all"),
         s4,
         near_losers,
         cut_all,
-        packed,
-    )
+        capped,
+        clusters(capped, sigs),
+    ).drop("clean_text")
 
 
 def _ensure_delta_state(spark: SparkSession, sf_dir: str) -> str:

@@ -349,14 +349,15 @@ def test_curate_job_writes_partitioned_corpus(spark, sf_dir):
 
 
 def test_curate_job_spark_job_budget(spark, sf_dir):
-    """One warm curate call runs at most 52 Spark jobs. The corpus is
-    written from the pinned disposition's kept rows, so the packing
-    tail runs once per call; the exact-dedup survivors, the near-dup
-    losers and the contamination spans are pinned once, so the later
-    stages read them instead of re-running the dedup window, the LSH
-    pair pipeline and the island windows; the disposition is one
-    doc_id aggregation, not five joins; and the funnel rides the
-    disposition write instead of a separate group-by."""
+    """One warm curate call runs at most 40 Spark jobs. The exact-dedup
+    survivors, the near-dup losers, the contamination spans and the
+    post-cut text are pinned once, so later stages read them instead of
+    re-running the dedup window, the LSH pair pipeline, the island
+    windows and the cut; the disposition, with the domain cap, the
+    grouped split and the packing, is one doc_id aggregation over
+    unioned facts, not a chain of joins; the corpus write is a filter
+    of the pinned disposition; and the input count and the funnel ride
+    the pin and the disposition write instead of their own jobs."""
     d = tempfile.mkdtemp(prefix="sf_jobs_")
     try:
         _run(["curate", "--sf-dir", sf_dir, "--out", f"{d}/warm"])
@@ -364,9 +365,56 @@ def test_curate_job_spark_job_budget(spark, sf_dir):
             spark, ["curate", "--sf-dir", sf_dir, "--out", f"{d}/cur"]
         )
         assert sum(r["funnel"].values()) == r["rows_in"] == 500
-        assert n_jobs <= 52, f"curate ran {n_jobs} Spark jobs"
+        assert n_jobs <= 40, f"curate ran {n_jobs} Spark jobs"
     finally:
         shutil.rmtree(d, ignore_errors=True)
+
+
+def test_curate_job_corpus_is_the_cut_text_of_the_kept_docs(spark, sf_dir):
+    """The written corpus holds exactly the disposition's kept doc_ids,
+    and each one's clean_text is its exact-and-near-dedup survivor
+    text with the contamination spans cut out."""
+    from pyspark.sql import functions as F
+
+    from sentiflow_spark.operators.dedup import cut_spans
+    from sentiflow_spark.queries.curation_dag import curation_stages
+
+    d = tempfile.mkdtemp(prefix="sf_jobs_")
+    try:
+        _run(["curate", "--sf-dir", sf_dir, "--out", f"{d}/cur"])
+        corpus = spark.read.parquet(f"{d}/cur/corpus")
+        kept = spark.read.parquet(f"{d}/cur/disposition").filter(
+            F.col("stage") == "kept"
+        )
+        got = {r["doc_id"]: r["clean_text"] for r in corpus.collect()}
+        assert set(got) == {r["doc_id"] for r in kept.select("doc_id").collect()}
+        st = curation_stages(spark, sf_dir)
+        want = {
+            r["doc_id"]: r["clean_text"]
+            for r in cut_spans(st["s5"], st["spans"]).collect()
+        }
+        assert got == {i: want[i] for i in got}
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
+
+
+def test_curate_job_refuses_a_funnel_short_of_its_input(spark, sf_dir, tmp_path):
+    """A documents table with one row twice is 501 rows in, but the
+    disposition has one row per doc_id (500): curate raises once its
+    writes are done instead of reporting a funnel that misses a row."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    docs = pq.read_table(f"{sf_dir}/documents.parquet")
+    src = tmp_path / "sf"
+    src.mkdir()
+    pq.write_table(
+        pa.concat_tables([docs, docs.slice(0, 1)]), src / "documents.parquet"
+    )
+    out = tmp_path / "cur"
+    with pytest.raises(ValueError, match="501 input rows"):
+        _run(["curate", "--sf-dir", str(src), "--out", str(out)])
+    assert spark.read.parquet(f"{out}/disposition").count() == 500
 
 
 @pytest.mark.parametrize(
