@@ -27,9 +27,12 @@ MERSENNE_31 = 2_147_483_647
 # Deterministic (a, b) coefficient pairs for k MinHash permutations:
 # h_i(x) = (a_i * x + b_i) % MERSENNE_31. Generated from a fixed LCG so
 # both engines (and every run) agree without any RNG.
-def minhash_coeffs(k: int, seed: int = 42) -> list[tuple[int, int]]:
+MINHASH_SEED = 42  # LCG start state of the MinHash permutation coefficients
+
+
+def minhash_coeffs(k: int) -> list[tuple[int, int]]:
     coeffs = []
-    state = seed
+    state = MINHASH_SEED
     for _ in range(k):
         state = (state * 6364136223846793005 + 1442695040888963407) % (2**63)
         a = state % (MERSENNE_31 - 2) + 1  # a in [1, p-2]

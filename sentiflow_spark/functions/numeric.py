@@ -44,14 +44,15 @@ def duck_davg(expr: str, typ: str = "DECIMAL(18,2)") -> str:
 
 # Revenue expression used across the TPC-H-class queries:
 # extendedprice * (1 - discount), computed exactly.
-def revenue(price: str = "l_extendedprice", disc: str = "l_discount") -> Column:
+def revenue() -> Column:
     return F.sum(
-        F.col(price).cast(MONEY) * (F.lit(1).cast(RATE) - F.col(disc).cast(RATE))
+        F.col("l_extendedprice").cast(MONEY)
+        * (F.lit(1).cast(RATE) - F.col("l_discount").cast(RATE))
     ).cast("double")
 
 
-def duck_revenue(price: str = "l_extendedprice", disc: str = "l_discount") -> str:
+def duck_revenue() -> str:
     return (
-        f"CAST(SUM(CAST({price} AS DECIMAL(18,2)) * "
-        f"(CAST(1 AS DECIMAL(4,2)) - CAST({disc} AS DECIMAL(4,2)))) AS DOUBLE)"
+        "CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * "
+        "(CAST(1 AS DECIMAL(4,2)) - CAST(l_discount AS DECIMAL(4,2)))) AS DOUBLE)"
     )

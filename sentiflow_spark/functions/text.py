@@ -44,27 +44,25 @@ def _count_hits(text: Column, words: list[str]) -> Column:
     return F.size(F.regexp_extract_all(F.lower(text), F.lit(pat), 0))
 
 
-def lang_id(text: Column, langs: dict[str, list[str]] | None = None) -> Column:
-    """Heuristic language id: argmax of marker-word hit counts, 'und'
+def lang_id(text: Column) -> Column:
+    """Heuristic language id: argmax of LANG_MARKERS hit counts, 'und'
     (undetermined) when nothing matches. Ties break by language code
     order for determinism."""
-    langs = langs or LANG_MARKERS
     # Build (hits, code) structs, pick max by (hits, reversed code order).
     best_code = F.lit("und")
     best_hits = F.lit(0)
-    for code in sorted(langs, reverse=True):  # earlier codes win ties
-        hits = _count_hits(text, langs[code])
+    for code in sorted(LANG_MARKERS, reverse=True):  # earlier codes win ties
+        hits = _count_hits(text, LANG_MARKERS[code])
         take = hits >= F.greatest(best_hits, F.lit(1))
         best_code = F.when(take, F.lit(code)).otherwise(best_code)
         best_hits = F.when(take, hits).otherwise(best_hits)
     return best_code
 
 
-def duck_lang_id(text_expr: str, langs: dict[str, list[str]] | None = None) -> str:
-    langs = langs or LANG_MARKERS
+def duck_lang_id(text_expr: str) -> str:
     expr_code, expr_hits = "'und'", "0"
-    for code in sorted(langs, reverse=True):
-        pat = r"\b(" + "|".join(langs[code]) + r")\b"
+    for code in sorted(LANG_MARKERS, reverse=True):
+        pat = r"\b(" + "|".join(LANG_MARKERS[code]) + r")\b"
         hits = f"len(regexp_extract_all(lower({text_expr}), '{pat}'))"
         expr_code = (
             f"CASE WHEN {hits} >= greatest({expr_hits}, 1) THEN '{code}' "
@@ -75,8 +73,8 @@ def duck_lang_id(text_expr: str, langs: dict[str, list[str]] | None = None) -> s
 
 
 def quality_components(text: Column) -> dict[str, Column]:
-    """The (regex-heavy) raw counts behind quality_score. Project these
-    in their OWN select in hot paths, then combine with
+    """The (regex-heavy) raw counts behind the quality score. Project
+    these in their OWN select, then combine with
     quality_from_components — otherwise the score expression's multiple
     references to n_words re-run the tokenizer regex per reference
     (same CollapseProject pitfall as shingles_from_tokens)."""
@@ -100,15 +98,6 @@ def quality_from_components(
         n_stop.cast("double") / F.greatest(n_words, F.lit(1)), F.lit(0.5)
     ) * 2.0
     return (len_score + word_ratio + stop_ratio) / 3.0
-
-
-def quality_score(text: Column) -> Column:
-    """One-shot quality score (fine for single-reference projections;
-    see quality_components for the hot-path two-step)."""
-    c = quality_components(text)
-    return quality_from_components(
-        c["n_chars"], c["n_words"], c["n_punct"], c["n_stop"]
-    )
 
 
 def duck_quality_score(t: str) -> str:

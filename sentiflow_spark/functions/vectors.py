@@ -89,12 +89,15 @@ def duck_l2_sq(a: str, b: str) -> str:
 
 # ------------------------------------------- random-hyperplane LSH (cosine)
 
-def rp_hyperplanes(n_planes: int, dim: int, seed: int = 7) -> list[list[int]]:
+RP_SEED = 7  # LCG start state of the random-projection hyperplanes
+
+
+def rp_hyperplanes(n_planes: int, dim: int) -> list[list[int]]:
     """Deterministic ±1 hyperplanes from a fixed LCG (no RNG), so both
     engines and every run agree. sign(v·h) bits concatenate into the
     SimHash-for-vectors bucket id; P[bit equal] = 1 - angle/pi."""
     planes = []
-    state = seed
+    state = RP_SEED
     for _ in range(n_planes):
         comps = []
         for _ in range(dim):

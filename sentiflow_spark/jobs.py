@@ -91,6 +91,16 @@ def job_ingest(args: argparse.Namespace) -> dict:
     return result
 
 
+def _table_rows(spark: SparkSession, path: str) -> int:
+    """Row count of a serving table a job merged into: 0 for a directory
+    holding no parquet file, which a zero-row first merge leaves."""
+    from sentiflow_spark.sources.files import TableDir
+
+    if not TableDir(spark, path).has_parquet():
+        return 0
+    return spark.read.parquet(path).count()
+
+
 def job_pipeline(args: argparse.Namespace) -> dict:
     from sentiflow_spark.pipeline.batch import (
         documents_as_raw_content,
@@ -103,7 +113,7 @@ def job_pipeline(args: argparse.Namespace) -> dict:
     raw = documents_as_raw_content(load(spark, args.sf_dir, "documents"))
     results = stamp_ttl(sentiment_pipeline(raw, router_threshold=args.router_threshold))
     merge_upsert(spark, results, args.out, key="content_id")
-    return {"job": "pipeline", "rows": spark.read.parquet(args.out).count(),
+    return {"job": "pipeline", "rows": _table_rows(spark, args.out),
             "sink": args.out}
 
 
@@ -185,7 +195,7 @@ def job_stream(args: argparse.Namespace) -> dict:
             )
         else:
             outcomes = run_gated_rounds(make_query, probe=lambda: True, rounds=1)
-    return {"job": "stream", "rows": spark.read.parquet(args.out).count(),
+    return {"job": "stream", "rows": _table_rows(spark, args.out),
             "sink": args.out, "checkpoint": args.checkpoint, "rounds": outcomes}
 
 
@@ -197,13 +207,13 @@ def job_topics(args: argparse.Namespace) -> dict:
 
     spark = _spark("sentiflow-topics")
     headlines = load(spark, args.sf_dir, "documents")
-    if args.stored and TableDir(spark, args.stored).exists():
+    if args.stored and TableDir(spark, args.stored).has_parquet():
         stored = spark.read.parquet(args.stored)
     else:  # first run: empty snapshot with the right schema
         stored = spark.createDataFrame([], "url STRING")
     topics = generate_topics(headlines, stored)
     merge_upsert(spark, topics, args.out, key="url")
-    return {"job": "topics", "rows": spark.read.parquet(args.out).count(),
+    return {"job": "topics", "rows": _table_rows(spark, args.out),
             "sink": args.out}
 
 

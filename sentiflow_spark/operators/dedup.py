@@ -51,47 +51,45 @@ NUM_PERM = 16
 BAND_SIZE = 4  # 4 bands × 4 rows: P(candidate) = 1-(1-j^4)^4
 
 
-def dedup_exact(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def dedup_exact(df: DataFrame) -> DataFrame:
     """Exact dedup: keep the lowest id per canonical fingerprint."""
-    w = W.partitionBy("fp").orderBy(id_col)
+    w = W.partitionBy("fp").orderBy("doc_id")
     return (
-        df.withColumn("fp", fingerprint(F.col(text_col)))
+        df.withColumn("fp", fingerprint(F.col("text")))
         .withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)
         .drop("rn")
     )
 
 
-def exploded_shingles(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def exploded_shingles(df: DataFrame) -> DataFrame:
     """(id, shingle) inverted-index rows, distinct per doc. The token
     array is materialized in its own projection so the tokenizer regex
     runs once per document, not once per element_at reference (16x at
     sf0.1 — see shingles_from_tokens)."""
-    tokd = df.select(F.col(id_col), word_tokens(F.col(text_col)).alias("_toks"))
+    tokd = df.select(F.col("doc_id"), word_tokens(F.col("text")).alias("_toks"))
     return tokd.select(
-        F.col(id_col), F.explode(shingles_from_tokens(F.col("_toks"))).alias("shingle")
+        F.col("doc_id"), F.explode(shingles_from_tokens(F.col("_toks"))).alias("shingle")
     )
 
 
-def minhash_signatures(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", num_perm: int = NUM_PERM
-) -> DataFrame:
+def minhash_signatures(df: DataFrame) -> DataFrame:
     """id → sig_0..sig_{k-1}. Docs with no shingles get no row (nothing
     to hash — same convention as the oracle)."""
-    coeffs = minhash_coeffs(num_perm)
-    sh = exploded_shingles(df, text_col, id_col)
+    coeffs = minhash_coeffs(NUM_PERM)
+    sh = exploded_shingles(df)
     # materialize the md5 once per shingle; the k permutations are then
     # k cheap int ops per row instead of k md5 evaluations
-    hashed = sh.select(F.col(id_col), md5_i32(F.col("shingle")).alias("_h"))
+    hashed = sh.select(F.col("doc_id"), md5_i32(F.col("shingle")).alias("_h"))
     h = F.col("_h")
     aggs = [
         F.min((h * F.lit(a) + F.lit(b)) % F.lit(MERSENNE_31)).alias(f"sig_{i}")
         for i, (a, b) in enumerate(coeffs)
     ]
-    return hashed.groupBy(id_col).agg(*aggs)
+    return hashed.groupBy("doc_id").agg(*aggs)
 
 
-def packed_band_keys(sig_of, b: int, band_size: int = BAND_SIZE) -> list[Column]:
+def packed_band_keys(sig_of, b: int) -> list[Column]:
     """The band key for band ``b`` as packed 62-bit longs — each key
     holds two 31-bit signature values: ``shiftleft(s0, 31) | s1``.
     MinHash sig values live in [0, MERSENNE_31) (md5_i32 is
@@ -108,55 +106,42 @@ def packed_band_keys(sig_of, b: int, band_size: int = BAND_SIZE) -> list[Column]
 
     ``sig_of(i)`` maps a flat signature index to its Column (a
     ``sig_{i}`` column, or an element_at over ``sig_arr``)."""
-    lo = b * band_size
+    lo = b * BAND_SIZE
     return [
         F.shiftleft(sig_of(lo + j), 31)
         .bitwiseOR(sig_of(lo + j + 1))
         .alias(f"bk{j // 2}")
-        for j in range(0, band_size, 2)
+        for j in range(0, BAND_SIZE, 2)
     ]
 
 
-def band_join_keys(band_size: int = BAND_SIZE) -> list[str]:
+def band_join_keys() -> list[str]:
     """Column names a banded table is bucketed/joined on."""
-    return ["band_idx"] + [f"bk{j}" for j in range(band_size // 2)]
+    return ["band_idx"] + [f"bk{j}" for j in range(BAND_SIZE // 2)]
 
 
-def banded_sigs(
-    sigs: DataFrame,
-    id_col: str = "doc_id",
-    num_perm: int = NUM_PERM,
-    band_size: int = BAND_SIZE,
-) -> DataFrame:
+def banded_sigs(sigs: DataFrame) -> DataFrame:
     """Explode a wide signature table to (id, band_idx, bk*) rows —
     the shared band-table construction for the pair join and the
     star-edge clustering."""
-    n_bands = num_perm // band_size
+    n_bands = NUM_PERM // BAND_SIZE
     return sigs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.explode(
             F.array(
                 *[
                     F.struct(
                         F.lit(b).alias("band_idx"),
-                        *packed_band_keys(
-                            lambda i: F.col(f"sig_{i}"), b, band_size
-                        ),
+                        *packed_band_keys(lambda i: F.col(f"sig_{i}"), b),
                     )
                     for b in range(n_bands)
                 ]
             )
         ).alias("band"),
-    ).select(id_col, "band.*")
+    ).select("doc_id", "band.*")
 
 
-def lsh_candidate_pairs(
-    sigs: DataFrame,
-    id_col: str = "doc_id",
-    num_perm: int = NUM_PERM,
-    band_size: int = BAND_SIZE,
-    materialized: bool = False,
-) -> DataFrame:
+def lsh_candidate_pairs(sigs: DataFrame, materialized: bool = False) -> DataFrame:
     """Band the signatures and equi-join on (band_idx, bk*) to get
     candidate pairs with their estimated Jaccard (matching-signature
     fraction). Never materializes a cross product.
@@ -179,35 +164,35 @@ def lsh_candidate_pairs(
     # the same table to its star-edge clustering) — don't copy it.
     if not materialized:
         sigs = sigs.localCheckpoint(eager=False)
-    bands = banded_sigs(sigs, id_col, num_perm, band_size)
+    bands = banded_sigs(sigs)
 
     a, b = bands.alias("a"), bands.alias("b")
     key_eq = None
-    for k in band_join_keys(band_size):
+    for k in band_join_keys():
         eq = F.col(f"a.{k}") == F.col(f"b.{k}")
         key_eq = eq if key_eq is None else (key_eq & eq)
     pairs = (
         a.join(
             b,
-            key_eq & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+            key_eq & (F.col("a.doc_id") < F.col("b.doc_id")),
         )
         .select(
-            F.col(f"a.{id_col}").alias("doc_a"),
-            F.col(f"b.{id_col}").alias("doc_b"),
+            F.col("a.doc_id").alias("doc_a"),
+            F.col("b.doc_id").alias("doc_b"),
         )
         .dropDuplicates(["doc_a", "doc_b"])
     )
     sa = sigs.select(
-        F.col(id_col).alias("doc_a"),
-        *[F.col(f"sig_{i}").alias(f"a_{i}") for i in range(num_perm)],
+        F.col("doc_id").alias("doc_a"),
+        *[F.col(f"sig_{i}").alias(f"a_{i}") for i in range(NUM_PERM)],
     )
     sb = sigs.select(
-        F.col(id_col).alias("doc_b"),
-        *[F.col(f"sig_{i}").alias(f"b_{i}") for i in range(num_perm)],
+        F.col("doc_id").alias("doc_b"),
+        *[F.col(f"sig_{i}").alias(f"b_{i}") for i in range(NUM_PERM)],
     )
     match_frac = sum(
-        (F.col(f"a_{i}") == F.col(f"b_{i}")).cast("int") for i in range(num_perm)
-    ) / F.lit(float(num_perm))
+        (F.col(f"a_{i}") == F.col(f"b_{i}")).cast("int") for i in range(NUM_PERM)
+    ) / F.lit(float(NUM_PERM))
     return (
         pairs.join(sa, "doc_a")
         .join(sb, "doc_b")
@@ -215,12 +200,7 @@ def lsh_candidate_pairs(
     )
 
 
-def lsh_star_edges(
-    sigs: DataFrame,
-    id_col: str = "doc_id",
-    num_perm: int = NUM_PERM,
-    band_size: int = BAND_SIZE,
-) -> DataFrame:
+def lsh_star_edges(sigs: DataFrame) -> DataFrame:
     """Sparsified LSH candidate edges: per (band_idx, bk*) bucket
     emit only (bucket_min_id, member) — occ-1 STAR edges instead of
     C(occ, 2) pairs. Within one bucket a star has exactly the same
@@ -237,23 +217,21 @@ def lsh_star_edges(
     Band keys are packed sig-tuple longs (packed_band_keys) — the
     identical bucket partition as the md5-hex key at half the bytes.
     """
-    bands = banded_sigs(sigs, id_col, num_perm, band_size)
-    keys = band_join_keys(band_size)
+    bands = banded_sigs(sigs)
+    keys = band_join_keys()
     hubs = bands.groupBy(*keys).agg(
-        F.min(id_col).alias("hub"), F.count(F.lit(1)).alias("occ")
+        F.min("doc_id").alias("hub"), F.count(F.lit(1)).alias("occ")
     )
     return (
         bands.join(hubs.filter(F.col("occ") >= 2), keys)
-        .filter(F.col(id_col) != F.col("hub"))
-        .select(F.col("hub").alias("doc_a"), F.col(id_col).alias("doc_b"))
+        .filter(F.col("doc_id") != F.col("hub"))
+        .select(F.col("hub").alias("doc_a"), F.col("doc_id").alias("doc_b"))
         .dropDuplicates(["doc_a", "doc_b"])
     )
 
 
 def ngram_jaccard_pairs(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     threshold: float = 0.6,
     df_cap: int | None = None,
 ) -> DataFrame:
@@ -269,7 +247,7 @@ def ngram_jaccard_pairs(
     pipelines actually compare (stopword-phrases carry no duplicate
     signal)."""
     return (
-        shingle_pair_counts(df, text_col, id_col, df_cap=df_cap)
+        shingle_pair_counts(df, df_cap=df_cap)
         .withColumn(
             "jaccard",
             F.col("shared").cast("double")
@@ -282,8 +260,6 @@ def ngram_jaccard_pairs(
 
 def shingle_pair_counts(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     df_cap: int | None = None,
     pin: bool = True,
 ) -> DataFrame:
@@ -293,7 +269,7 @@ def shingle_pair_counts(
     (ngram_jaccard_pairs), asymmetric containment shared/size_x, and
     overlap counting — so the df-cap refinement and the pair
     convention live in exactly one place."""
-    sh = exploded_shingles(df, text_col, id_col)
+    sh = exploded_shingles(df)
     if df_cap is not None:
         # the raw shingle stream has two consumers here (the document-
         # frequency aggregate and the semi-join's stream side); pin it
@@ -312,22 +288,22 @@ def shingle_pair_counts(
     # that guard the df-cap/sample shape read the unpinned form.
     if pin:
         sh = sh.localCheckpoint(eager=False)
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("set_size"))
+    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("set_size"))
     a = sh.alias("a")
     b = sh.alias("b")
     shared = (
         a.join(
             b,
             (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
         )
         .groupBy(
-            F.col(f"a.{id_col}").alias("doc_a"), F.col(f"b.{id_col}").alias("doc_b")
+            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
         )
         .agg(F.count(F.lit(1)).alias("shared"))
     )
-    sa = sizes.select(F.col(id_col).alias("doc_a"), F.col("set_size").alias("size_a"))
-    sb = sizes.select(F.col(id_col).alias("doc_b"), F.col("set_size").alias("size_b"))
+    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("set_size").alias("size_a"))
+    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("set_size").alias("size_b"))
     return shared.join(sa, "doc_a").join(sb, "doc_b")
 
 
@@ -339,7 +315,7 @@ SIMHASH_CHUNK_BITS = SIMHASH_BITS // SIMHASH_CHUNKS
 SIMHASH_CHUNK_MASK = (1 << SIMHASH_CHUNK_BITS) - 1
 
 
-def simhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def simhash(df: DataFrame) -> DataFrame:
     """60-bit SimHash over distinct word tokens: bit k is set when the
     signed sum of token-hash bit-k contributions is positive.
 
@@ -354,45 +330,41 @@ def simhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> Da
     from sentiflow_spark.functions.text import WORD_RE
 
     toks = df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.explode(
             F.array_distinct(
-                F.regexp_extract_all(F.lower(F.col(text_col)), F.lit(WORD_RE), 0)
+                F.regexp_extract_all(F.lower(F.col("text")), F.lit(WORD_RE), 0)
             )
         ).alias("token"),
     )
-    return simhash_from_tokens(toks, id_col=id_col)
+    return simhash_from_tokens(toks)
 
 
-def simhash_from_tokens(
-    toks: DataFrame, id_col: str = "doc_id", token_col: str = "token"
-) -> DataFrame:
-    """SimHash core over an arbitrary (id, token) feature stream — the
+def simhash_from_tokens(toks: DataFrame) -> DataFrame:
+    """SimHash core over an arbitrary (doc_id, token) feature stream — the
     signed per-bit vote is feature-agnostic, so the same operator
     fingerprints word tokens (simhash) or byte grams
     (multimodal_queries.mm_bytes_simhash_pairs)."""
-    h = md5_i60(F.col(token_col))
+    h = md5_i60(F.col("token"))
     bit_sums = [
         F.sum(
             F.when(F.shiftright(h, k).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
         ).alias(f"bs_{k}")
         for k in range(SIMHASH_BITS)
     ]
-    sums = toks.groupBy(id_col).agg(*bit_sums)
+    sums = toks.groupBy("doc_id").agg(*bit_sums)
     sim = sum(
         (F.when(F.col(f"bs_{k}") > 0, F.lit(2**k)).otherwise(F.lit(0)))
         for k in range(SIMHASH_BITS)
     ).cast("long")
-    return sums.select(F.col(id_col), sim.alias("simhash"))
+    return sums.select(F.col("doc_id"), sim.alias("simhash"))
 
 
-def simhash_near_pairs(
-    sims: DataFrame, id_col: str = "doc_id", max_hamming: int = 3
-) -> DataFrame:
+def simhash_near_pairs(sims: DataFrame, max_hamming: int = 3) -> DataFrame:
     """Candidate pairs share at least one 15-bit chunk (pigeonhole for
     hamming ≤ 3 over 4 chunks), then exact hamming via bit_count(xor)."""
     chunks = sims.select(
-        F.col(id_col),
+        F.col("doc_id"),
         "simhash",
         F.explode(
             F.array(
@@ -407,18 +379,18 @@ def simhash_near_pairs(
                 ]
             )
         ).alias("ch"),
-    ).select(id_col, "simhash", "ch.*")
+    ).select("doc_id", "simhash", "ch.*")
     a, b = chunks.alias("a"), chunks.alias("b")
     return (
         a.join(
             b,
             (F.col("a.chunk_idx") == F.col("b.chunk_idx"))
             & (F.col("a.chunk_val") == F.col("b.chunk_val"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
         )
         .select(
-            F.col(f"a.{id_col}").alias("doc_a"),
-            F.col(f"b.{id_col}").alias("doc_b"),
+            F.col("a.doc_id").alias("doc_a"),
+            F.col("b.doc_id").alias("doc_b"),
             F.bit_count(
                 F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))
             ).alias("hamming"),
@@ -428,15 +400,15 @@ def simhash_near_pairs(
     )
 
 
-def connected_components(
-    pairs: DataFrame,
-    src: str = "doc_a",
-    dst: str = "doc_b",
-    max_iter: int = 25,
-) -> DataFrame:
+# connected_components' safety rail: the most label-propagation rounds
+# it runs before returning the labels it has
+CC_MAX_ITER = 25
+
+
+def connected_components(pairs: DataFrame) -> DataFrame:
     """Duplicate-cluster assignment: connected components over the
-    near-duplicate pair graph, as ``(node, cluster_id)`` where
-    cluster_id = the minimum doc id reachable from the node.
+    near-duplicate ``(doc_a, doc_b)`` pair graph, as ``(node, lbl)`` where
+    lbl = the minimum doc id reachable from the node.
 
     LSH/SimHash emit *pairs*; real corpus dedup needs the transitive
     closure (A~B, B~C ⇒ {A,B,C} is one cluster, even when A≁C), so a
@@ -455,7 +427,7 @@ def connected_components(
     Each round ends in ``localCheckpoint`` to truncate the lineage
     (without it the plan doubles per iteration and the job dies on
     plan-compile time long before data size matters). Convergence is
-    an explicit any-label-changed probe; ``max_iter`` is a safety rail.
+    an explicit any-label-changed probe; ``CC_MAX_ITER`` is a safety rail.
     """
     # Materialize the edge set ONCE: `pairs` is typically the whole
     # MinHash→LSH candidate pipeline, and every iteration below joins
@@ -473,8 +445,8 @@ def connected_components(
         pairs.select(
             F.explode(
                 F.array(
-                    F.struct(F.col(src).alias("u"), F.col(dst).alias("v")),
-                    F.struct(F.col(dst).alias("u"), F.col(src).alias("v")),
+                    F.struct(F.col("doc_a").alias("u"), F.col("doc_b").alias("v")),
+                    F.struct(F.col("doc_b").alias("u"), F.col("doc_a").alias("v")),
                 )
             ).alias("_e")
         )
@@ -495,7 +467,7 @@ def connected_components(
         )
         .localCheckpoint(eager=False)
     )
-    for _ in range(max_iter):
+    for _ in range(CC_MAX_ITER):
         nbr_min = both.join(labels, both.v == labels.node).select(
             F.col("u").alias("node"), "lbl"
         )
@@ -535,12 +507,7 @@ def connected_components(
 SEG_OWNER_BASE = 1_000_000
 
 
-def segment_dedup(
-    docs: DataFrame,
-    seg_chars: int = 80,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def segment_dedup(docs: DataFrame, seg_chars: int = 80) -> DataFrame:
     """Corpus-global segment-level dedup (C4-style "drop any span seen
     earlier anywhere in the corpus") with per-document reconstruction.
 
@@ -559,24 +526,24 @@ def segment_dedup(
     owner encoding stays collision-free.
     """
     n_total = F.greatest(
-        F.ceil(F.length(text_col) / F.lit(float(seg_chars))).cast("long"),
+        F.ceil(F.length("text") / F.lit(float(seg_chars))).cast("long"),
         F.lit(1).cast("long"),
     )
     segs = docs.select(
-        F.col(id_col),
-        F.col(text_col).alias("_t"),
+        F.col("doc_id"),
+        F.col("text").alias("_t"),
         F.explode(F.sequence(F.lit(0).cast("long"), n_total - 1)).alias("seg_no"),
     ).select(
-        id_col,
+        "doc_id",
         "seg_no",
         F.col("_t")
         .substr((F.col("seg_no") * seg_chars + 1).cast("int"), F.lit(seg_chars))
         .alias("seg"),
     )
-    encoded = F.col(id_col) * SEG_OWNER_BASE + F.col("seg_no")
+    encoded = F.col("doc_id") * SEG_OWNER_BASE + F.col("seg_no")
     owners = segs.groupBy("seg").agg(F.min(encoded).alias("owner"))
     kept = segs.join(owners, "seg").filter(encoded == F.col("owner"))
-    rec = kept.groupBy(id_col).agg(
+    rec = kept.groupBy("doc_id").agg(
         F.array_join(
             F.transform(
                 F.array_sort(F.collect_list(F.struct("seg_no", "seg"))),
@@ -587,10 +554,10 @@ def segment_dedup(
         F.count(F.lit(1)).alias("n_kept"),
     )
     return (
-        docs.select(F.col(id_col), n_total.alias("n_total"))
-        .join(rec, id_col, "left")
+        docs.select(F.col("doc_id"), n_total.alias("n_total"))
+        .join(rec, "doc_id", "left")
         .select(
-            id_col,
+            "doc_id",
             F.coalesce("text_dedup", F.lit("")).alias("text_dedup"),
             F.coalesce("n_kept", F.lit(0).cast("long")).alias("n_kept"),
             "n_total",
@@ -613,8 +580,6 @@ def boilerplate_removal(
     seg_chars: int = BP_SEG_CHARS,
     min_docs: int = BP_MIN_DOCS,
     max_removed_frac: float = BP_MAX_REMOVED_FRAC,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Cross-document frequency-threshold boilerplate removal — the
     OTHER canonical line-dedup mode next to segment_dedup's C4-style
@@ -641,38 +606,31 @@ def boilerplate_removal(
     document, bounded by one doc's size. removed_frac is one IEEE
     double division of two exact ints — bitwise identical across
     engines."""
-    segs = boiler_segments(docs, seg_chars, text_col, id_col)
+    segs = boiler_segments(docs, seg_chars)
     boiler = (
         segs.groupBy("seg")
-        .agg(F.count_distinct(F.col(id_col)).alias("nd"))
+        .agg(F.count_distinct(F.col("doc_id")).alias("nd"))
         .filter(F.col("nd") >= min_docs)
         .select("seg")
     )
-    return strip_with_boiler(
-        docs, boiler, max_removed_frac, id_col, text_col, seg_chars
-    )
+    return strip_with_boiler(docs, boiler, max_removed_frac, seg_chars)
 
 
-def boiler_segments(
-    docs: DataFrame,
-    seg_chars: int = BP_SEG_CHARS,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def boiler_segments(docs: DataFrame, seg_chars: int = BP_SEG_CHARS) -> DataFrame:
     """(id, seg_no, seg) — the fixed-width segmentation stage of
     boilerplate_removal, split out so the incremental curation DAG can
     maintain its cross-batch segment-count manifest from the SAME
     segmentation the one-shot operator uses (curation_delta.py)."""
     n_total = F.greatest(
-        F.ceil(F.length(text_col) / F.lit(float(seg_chars))).cast("long"),
+        F.ceil(F.length("text") / F.lit(float(seg_chars))).cast("long"),
         F.lit(1).cast("long"),
     )
     return docs.select(
-        F.col(id_col),
-        F.col(text_col).alias("_t"),
+        F.col("doc_id"),
+        F.col("text").alias("_t"),
         F.explode(F.sequence(F.lit(0).cast("long"), n_total - 1)).alias("seg_no"),
     ).select(
-        id_col,
+        "doc_id",
         "seg_no",
         F.col("_t")
         .substr((F.col("seg_no") * seg_chars + 1).cast("int"), F.lit(seg_chars))
@@ -684,8 +642,6 @@ def strip_with_boiler(
     docs: DataFrame,
     boiler: DataFrame,
     max_removed_frac: float = BP_MAX_REMOVED_FRAC,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     seg_chars: int = BP_SEG_CHARS,
 ) -> DataFrame:
     """Reassemble per-doc text with the given boilerplate segment SET
@@ -713,13 +669,13 @@ def strip_with_boiler(
     character ranges from the original text, and every per-doc stat
     is derivable map-side (n_total from length, kept_chars from the
     rebuilt text's length)."""
-    segs = boiler_segments(docs, seg_chars, text_col, id_col)
+    segs = boiler_segments(docs, seg_chars)
     bp_pos = (
         segs.join(boiler.select("seg"), "seg", "left_semi")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.array_sort(F.collect_list("seg_no")).alias("_bp"))
     )
-    base = docs.select(F.col(id_col), F.col(text_col).alias("_t"))
+    base = docs.select(F.col("doc_id"), F.col("text").alias("_t"))
     t = F.col("_t")
     bp_arr = F.coalesce(F.col("_bp"), F.array().cast("array<bigint>"))
     # fold the sorted flagged segment indices into kept-range
@@ -774,9 +730,9 @@ def strip_with_boiler(
         )
     )
     rec = (
-        base.join(bp_pos, id_col, "left")
+        base.join(bp_pos, "doc_id", "left")
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             stats.alias("_s"),
             (n_total - n_bp).alias("n_kept"),
             n_total.alias("n_total"),
@@ -789,7 +745,7 @@ def strip_with_boiler(
         (total_chars - F.col("_s.kept_chars")).cast("double") / total_chars,
     ).otherwise(F.lit(0.0))
     return rec.select(
-        id_col,
+        "doc_id",
         F.col("_s.text_clean").alias("text_clean"),
         "n_kept",
         "n_total",
@@ -801,13 +757,9 @@ def strip_with_boiler(
 PR_SCALE = 10**12
 
 
-def pagerank_int(
-    edges: DataFrame,
-    n_iter: int = 3,
-    src: str = "doc_a",
-    dst: str = "doc_b",
-) -> DataFrame:
-    """Integer fixed-point PageRank over an undirected pair graph —
+def pagerank_int(edges: DataFrame, n_iter: int = 3) -> DataFrame:
+    """Integer fixed-point PageRank over an undirected ``(doc_a, doc_b)``
+    pair graph —
     bit-deterministic across engines and cluster sizes: ranks are
     BIGINTs scaled by PR_SCALE and every step is integer arithmetic
     (floor divisions in a fixed order), so there is no float
@@ -829,8 +781,8 @@ def pagerank_int(
         edges.select(
             F.explode(
                 F.array(
-                    F.struct(F.col(src).alias("u"), F.col(dst).alias("v")),
-                    F.struct(F.col(dst).alias("u"), F.col(src).alias("v")),
+                    F.struct(F.col("doc_a").alias("u"), F.col("doc_b").alias("v")),
+                    F.struct(F.col("doc_b").alias("u"), F.col("doc_a").alias("v")),
                 )
             ).alias("_e")
         )
@@ -924,23 +876,18 @@ def widen_small_input(df: DataFrame, sized_by: DataFrame) -> DataFrame:
     return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
 
 
-def winnow_fingerprints(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = WINNOW_K,
-    w: int = WINNOW_W,
-) -> DataFrame:
+def winnow_fingerprints(df: DataFrame) -> DataFrame:
     """(id, fps: array<long>) — the distinct packed winnowed keys per
-    document. ENTIRELY map-side: gram hashing and the windowed min are
+    document, k = WINNOW_K and w = WINNOW_W (unpack_winnow_key decodes
+    them). ENTIRELY map-side: gram hashing and the windowed min are
     higher-order array expressions over each row (no per-gram explode,
     no shuffle), so fingerprint extraction scales as one linear pass
     over the corpus; documents shorter than k + w - 1 chars yield no
     fingerprints (no full window exists), matching the oracle."""
     def _keys_of(t):
         return F.transform(
-            F.sequence(F.lit(1), F.length(t) - k + 1),
-            lambda i: md5_i32(t.substr(i, F.lit(k)))
+            F.sequence(F.lit(1), F.length(t) - WINNOW_K + 1),
+            lambda i: md5_i32(t.substr(i, F.lit(WINNOW_K)))
             * F.lit(WINNOW_POS_BASE)
             - i,
         )
@@ -948,8 +895,8 @@ def winnow_fingerprints(
     def _sels(arr):
         return F.array_distinct(
             F.transform(
-                F.sequence(F.lit(1), F.size(arr) - w + 1),
-                lambda j: F.array_min(F.slice(arr, j, w)),
+                F.sequence(F.lit(1), F.size(arr) - WINNOW_W + 1),
+                lambda j: F.array_min(F.slice(arr, j, WINNOW_W)),
             )
         )
 
@@ -962,7 +909,7 @@ def winnow_fingerprints(
     # 167 s vs ~2 s at sf0.01 for identical output.
     fps = F.element_at(
         F.transform(
-            F.array(F.lower(F.col(text_col))),
+            F.array(F.lower(F.col("text"))),
             lambda t: F.element_at(F.transform(F.array(_keys_of(t)), _sels), 1),
         ),
         1,
@@ -976,9 +923,9 @@ def winnow_fingerprints(
     # document would corrupt fingerprints IDENTICALLY in engine and
     # oracle (parity cannot catch it), so fail loudly instead — a
     # 100 TB corpus chunks documents long before 2 MB of text anyway.
-    max_len = WINNOW_POS_BASE + k - 2
+    max_len = WINNOW_POS_BASE + WINNOW_K - 2
     guarded = F.when(
-        F.length(F.col(text_col)) > max_len,
+        F.length(F.col("text")) > max_len,
         F.raise_error(
             F.concat(
                 F.lit(
@@ -986,24 +933,28 @@ def winnow_fingerprints(
                     "chars exceeds the WINNOW_POS_BASE position-packing "
                     "limit; chunk it first: "
                 ),
-                F.col(id_col).cast("string"),
+                F.col("doc_id").cast("string"),
             )
         ),
-    ).otherwise(F.col(text_col))
-    df = df.withColumn(text_col, guarded)
-    return df.filter(F.length(F.lower(F.col(text_col))) >= k + w - 1).select(
-        F.col(id_col), fps.alias("fps")
+    ).otherwise(F.col("text"))
+    df = df.withColumn("text", guarded)
+    return df.filter(
+        F.length(F.lower(F.col("text"))) >= WINNOW_K + WINNOW_W - 1
+    ).select(F.col("doc_id"), fps.alias("fps"))
+
+
+def unpack_winnow_key(key: str) -> tuple[Column, Column]:
+    """(h, pos) of the packed winnow key column ``key``: the 32-bit gram
+    hash h = ceil(key / BASE) and the 1-based char position
+    pos = h * BASE - key, inverting winnow_fingerprints' h*BASE - pos."""
+    b = WINNOW_POS_BASE
+    return (
+        F.expr(f"({key} + {b - 1}) DIV {b}"),
+        F.expr(f"(({key} + {b - 1}) DIV {b}) * {b} - {key}"),
     )
 
 
-def winnow_pair_counts(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = WINNOW_K,
-    w: int = WINNOW_W,
-    df_cap: int = 50,
-) -> DataFrame:
+def winnow_pair_counts(df: DataFrame, df_cap: int = 50) -> DataFrame:
     """(doc_a, doc_b, shared) — pairs sharing >= 1 winnowed gram HASH
     (positions unpacked away, so the same content matches anywhere in
     either doc). Inverted-index equi-join on the 32-bit hash with a
@@ -1016,19 +967,15 @@ def winnow_pair_counts(
     # checkpoint-then-explode of identical data at sf0.1 (the third
     # expression-duplication trap this operator surfaced; see
     # winnow_fingerprints for the other two)
-    fps = winnow_fingerprints(df, text_col, id_col, k, w).localCheckpoint(eager=False)
+    fps = winnow_fingerprints(df).localCheckpoint(eager=False)
     # ... and the slim (id, h) inverted index ONCE more: three
     # consumers (df-cap frequency table + both sides of the self-join)
     # would each re-run the explode+distinct otherwise (same pattern
     # as the LSH edge list in connected-components)
+    h, _ = unpack_winnow_key("_key")
     inv = (
-        fps.select(F.col(id_col), F.explode("fps").alias("_key"))
-        .select(
-            F.col(id_col),
-            F.expr(
-                f"(_key + {WINNOW_POS_BASE - 1}) DIV {WINNOW_POS_BASE}"
-            ).alias("h"),
-        )
+        fps.select(F.col("doc_id"), F.explode("fps").alias("_key"))
+        .select(F.col("doc_id"), h.alias("h"))
         .distinct()
         .localCheckpoint(eager=False)
     )
@@ -1039,11 +986,11 @@ def winnow_pair_counts(
         a.join(
             b,
             (F.col("a.h") == F.col("b.h"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
         )
         .groupBy(
-            F.col(f"a.{id_col}").alias("doc_a"),
-            F.col(f"b.{id_col}").alias("doc_b"),
+            F.col("a.doc_id").alias("doc_a"),
+            F.col("b.doc_id").alias("doc_b"),
         )
         .agg(F.count(F.lit(1)).alias("shared"))
     )
@@ -1066,11 +1013,7 @@ EDIT_MAX_DIST = 4
 EDIT_SEG_LEN = EDIT_PREFIX_LEN // (EDIT_MAX_DIST + 1)  # 12
 
 
-def edit_prefix_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def edit_prefix_pairs(df: DataFrame) -> DataFrame:
     """(doc_a, doc_b, lev) for every pair whose lowercased
     ``EDIT_PREFIX_LEN``-char prefixes are within edit distance
     ``EDIT_MAX_DIST`` — EXACT output (the segment blocking is
@@ -1080,10 +1023,10 @@ def edit_prefix_pairs(
     Spark's THRESHOLDED levenshtein (banded O(d x L) DP, returns -1
     past the bound) so the exact pass costs d/L of the full DP."""
     d, q, L = EDIT_MAX_DIST, EDIT_SEG_LEN, EDIT_PREFIX_LEN
-    pref = F.substring(F.lower(F.col(text_col)), 1, L)
+    pref = F.substring(F.lower(F.col("text")), 1, L)
     base = (
-        df.filter(F.length(F.lower(F.col(text_col))) >= L)
-        .select(F.col(id_col).alias("doc"), pref.alias("pref"))
+        df.filter(F.length(F.lower(F.col("text"))) >= L)
+        .select(F.col("doc_id").alias("doc"), pref.alias("pref"))
     )
     n_segs = d + 1
     idx_entries = [
@@ -1140,14 +1083,7 @@ SPAN_MIN_FPS = 2            # fingerprints a span must contain to be emitted
 
 
 def winnow_duplicate_spans(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = WINNOW_K,
-    w: int = WINNOW_W,
-    df_cap: int | None = None,
-    merge_gap: int = SPAN_MERGE_GAP,
-    min_fps: int = SPAN_MIN_FPS,
+    df: DataFrame, df_cap: int | None = None, min_fps: int = SPAN_MIN_FPS
 ) -> DataFrame:
     """(id, span_start, span_end, n_shared) — maximal character ranges of
     each document whose content also appears in at least one OTHER
@@ -1158,7 +1094,7 @@ def winnow_duplicate_spans(
     packed key is h*BASE - pos, so pos unpacks exactly); a position is
     flagged when its gram hash occurs in >= 2 distinct documents (and
     <= df_cap — ultra-common boilerplate grams are excluded on both
-    engines); flagged positions closer than ``merge_gap`` merge into
+    engines); flagged positions closer than ``SPAN_MERGE_GAP`` merge into
     islands (one gaps-and-islands window per doc) and each island emits
     [min_pos, max_pos + k - 1]. Winnowing guarantees any cross-doc
     match >= w + k - 1 chars selects a shared fingerprint, so no
@@ -1182,23 +1118,21 @@ def winnow_duplicate_spans(
     dd_semantic_dedup's plane stair."""
     if df_cap is None:
         df_cap = max(SPAN_DF_CAP, df.count() // SPAN_CAP_DENOM)
-    pos = _unpacked_positions(df, text_col, id_col, k, w)
+    pos = _unpacked_positions(df)
     dfreq = (
-        pos.select(id_col, "h")
+        pos.select("doc_id", "h")
         .distinct()
         .groupBy("h")
         .agg(F.count(F.lit(1)).alias("_df"))
         .filter((F.col("_df") >= 2) & (F.col("_df") <= df_cap))
     )
     flagged = (
-        pos.join(dfreq, "h", "left_semi").select(id_col, "pos").distinct()
+        pos.join(dfreq, "h", "left_semi").select("doc_id", "pos").distinct()
     )
-    return _position_islands(flagged, id_col, k, merge_gap, min_fps)
+    return _position_islands(flagged, min_fps)
 
 
-def _unpacked_positions(
-    df: DataFrame, text_col: str, id_col: str, k: int, w: int
-) -> DataFrame:
+def _unpacked_positions(df: DataFrame) -> DataFrame:
     """(id, h, pos) — distinct winnowed selections with their 32-bit
     gram hash and 1-based char position unpacked from the packed
     h*BASE - pos keys. localCheckpointed: every consumer uses it at
@@ -1208,65 +1142,50 @@ def _unpacked_positions(
     returns one row per doc whose ``fps`` array is already
     array_distinct, and the packed key unpacks bijectively to (h, pos),
     so the exploded triples are unique per doc — and globally, because
-    every caller feeds one row per ``id_col`` (the documents table or a
+    every caller feeds one row per ``doc_id`` (the documents table or a
     stage that already deduplicated on it). An explicit ``distinct()``
     here was measured a pure no-op that cost one full exchange inside
     the pin's materialization per invocation (r12); the invariant is
     pinned by test_unpacked_positions_unique."""
-    b = WINNOW_POS_BASE
-    fps = winnow_fingerprints(df, text_col, id_col, k, w).localCheckpoint(eager=False)
+    fps = winnow_fingerprints(df).localCheckpoint(eager=False)
+    h, pos = unpack_winnow_key("_key")
     return (
-        fps.select(F.col(id_col), F.explode("fps").alias("_key"))
-        .select(
-            F.col(id_col),
-            F.expr(f"(_key + {b - 1}) DIV {b}").alias("h"),
-            F.expr(
-                f"((_key + {b - 1}) DIV {b}) * {b} - _key"
-            ).alias("pos"),
-        )
+        fps.select(F.col("doc_id"), F.explode("fps").alias("_key"))
+        .select(F.col("doc_id"), h.alias("h"), pos.alias("pos"))
         .localCheckpoint(eager=False)
     )
 
 
-def _position_islands(
-    flagged: DataFrame, id_col: str, k: int, merge_gap: int, min_fps: int
-) -> DataFrame:
-    """Merge flagged (id, pos) rows closer than ``merge_gap`` into
-    maximal [min_pos, max_pos + k - 1] spans — one gaps-and-islands
+def _position_islands(flagged: DataFrame, min_fps: int) -> DataFrame:
+    """Merge flagged (id, pos) rows closer than ``SPAN_MERGE_GAP`` into
+    maximal [min_pos, max_pos + WINNOW_K - 1] spans of at least
+    ``min_fps`` positions — one gaps-and-islands
     window per doc, bounded by doc length x winnow density."""
-    seq = W.partitionBy(id_col).orderBy("pos")
+    seq = W.partitionBy("doc_id").orderBy("pos")
     with_prev = flagged.withColumn("_prev", F.lag("pos").over(seq))
     islands = with_prev.withColumn(
         "_island",
         F.sum(
             F.when(
                 F.col("_prev").isNull()
-                | (F.col("pos") - F.col("_prev") > merge_gap),
+                | (F.col("pos") - F.col("_prev") > SPAN_MERGE_GAP),
                 1,
             ).otherwise(0)
         ).over(seq),
     )
     return (
-        islands.groupBy(id_col, "_island")
+        islands.groupBy("doc_id", "_island")
         .agg(
             F.min("pos").alias("span_start"),
-            (F.max("pos") + F.lit(k - 1)).alias("span_end"),
+            (F.max("pos") + F.lit(WINNOW_K - 1)).alias("span_end"),
             F.count(F.lit(1)).alias("n_shared"),
         )
         .filter(F.col("n_shared") >= min_fps)
-        .select(id_col, "span_start", "span_end", "n_shared")
+        .select("doc_id", "span_start", "span_end", "n_shared")
     )
 
 
-def winnow_selfrepeat_spans(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = WINNOW_K,
-    w: int = WINNOW_W,
-    merge_gap: int = SPAN_MERGE_GAP,
-    min_fps: int = SPAN_MIN_FPS,
-) -> DataFrame:
+def winnow_selfrepeat_spans(df: DataFrame, min_fps: int = SPAN_MIN_FPS) -> DataFrame:
     """(id, span_start, span_end, n_shared) — maximal character ranges
     of WITHIN-document repetition: positions whose winnowed gram hash
     is selected at >= 2 distinct positions of the SAME document. This
@@ -1280,30 +1199,21 @@ def winnow_selfrepeat_spans(
     hash in both copies. Scale shape: the repeat table is a partial
     agg keyed (id, h) — per-DOC state, even more local than the
     cross-doc df table; no join ever leaves the document."""
-    pos = _unpacked_positions(df, text_col, id_col, k, w)
+    pos = _unpacked_positions(df)
     rep = (
-        pos.groupBy(id_col, "h")
+        pos.groupBy("doc_id", "h")
         .agg(F.count(F.lit(1)).alias("_n"))
         .filter(F.col("_n") >= 2)
-        .select(id_col, "h")
+        .select("doc_id", "h")
     )
     flagged = (
-        pos.join(rep, [id_col, "h"], "left_semi")
-        .select(id_col, "pos")
+        pos.join(rep, ["doc_id", "h"], "left_semi")
+        .select("doc_id", "pos")
         .distinct()
     )
-    return _position_islands(flagged, id_col, k, merge_gap, min_fps)
+    return _position_islands(flagged, min_fps)
 
-def winnow_contaminated_spans(
-    df: DataFrame,
-    is_bench,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = WINNOW_K,
-    w: int = WINNOW_W,
-    merge_gap: int = SPAN_MERGE_GAP,
-    min_fps: int = SPAN_MIN_FPS,
-) -> DataFrame:
+def winnow_contaminated_spans(df: DataFrame, is_bench) -> DataFrame:
     """(id, span_start, span_end, n_shared) over NON-benchmark docs —
     maximal character ranges whose content also appears in a held-out
     benchmark document: span-LEVEL decontamination, the surgical
@@ -1313,7 +1223,7 @@ def winnow_contaminated_spans(
     style, salvaging the rest of the page for training).
 
     ``is_bench`` is a boolean Column marking the held-out slice. It
-    must reference ONLY ``id_col`` (the engine's bench-holdout
+    must reference ONLY ``doc_id`` (the engine's bench-holdout
     predicates are all ``doc_id % MOD == 0``): it is evaluated directly
     on the position stream instead of joining a one-row-per-doc flag
     table onto it — no join, and no exchange over the O(corpus/4.5)
@@ -1327,25 +1237,20 @@ def winnow_contaminated_spans(
     join: the benchmark hash set is a distinct partial-agg (tiny —
     benchmarks are thousands of docs, not billions) semi-joined onto
     the training position stream."""
-    pos = _unpacked_positions(df, text_col, id_col, k, w).withColumn(
+    pos = _unpacked_positions(df).withColumn(
         "_is_bench", is_bench
     )
     bench_h = pos.filter(F.col("_is_bench")).select("h").distinct()
     flagged = (
         pos.filter(~F.col("_is_bench"))
         .join(bench_h, "h", "left_semi")
-        .select(id_col, "pos")
+        .select("doc_id", "pos")
         .distinct()
     )
-    return _position_islands(flagged, id_col, k, merge_gap, min_fps)
+    return _position_islands(flagged, SPAN_MIN_FPS)
 
 
-def cut_spans(
-    docs: DataFrame,
-    spans: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def cut_spans(docs: DataFrame, spans: DataFrame) -> DataFrame:
     """(id, clean_text, clean_len, orig_len) — remove every [span_start,
     span_end] character range (1-based, inclusive, disjoint) from each
     document and reassemble the rest in order. Docs absent from
@@ -1366,13 +1271,13 @@ def cut_spans(
     the alternative shuffles the corpus text through two doc_id joins
     plus a pieces groupBy, while this shape moves span metadata only
     and touches text in exactly one co-partitioned join."""
-    docs = docs.select(id_col, text_col)
-    span_arrs = spans.groupBy(id_col).agg(
+    docs = docs.select("doc_id", "text")
+    span_arrs = spans.groupBy("doc_id").agg(
         F.array_sort(
             F.collect_list(F.struct("span_start", "span_end"))
         ).alias("_spans")
     )
-    t = F.col(text_col)
+    t = F.col("text")
     zero = F.struct(
         F.lit(1).cast("long").alias("pos"), F.lit("").alias("acc")
     )
@@ -1400,7 +1305,7 @@ def cut_spans(
                                     "span list (span_start < next uncut "
                                     "position) for doc "
                                 ),
-                                F.col(id_col).cast("string"),
+                                F.col("doc_id").cast("string"),
                             )
                         ).cast("long"),
                     ).otherwise(sp["span_start"] - acc["pos"]),
@@ -1426,18 +1331,13 @@ def cut_spans(
         )
     )
     return (
-        docs.join(span_arrs, id_col, "left")
-        .select(id_col, stats.alias("_s"), F.length(t).alias("orig_len"))
-        .select(id_col, "_s.clean_text", "_s.clean_len", "orig_len")
+        docs.join(span_arrs, "doc_id", "left")
+        .select("doc_id", stats.alias("_s"), F.length(t).alias("orig_len"))
+        .select("doc_id", "_s.clean_text", "_s.clean_len", "orig_len")
     )
 
 
-def minhash_sig_array_stateless(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_perm: int = NUM_PERM,
-) -> DataFrame:
+def minhash_sig_array_stateless(df: DataFrame) -> DataFrame:
     """Per-row MinHash signature as ONE pure column expression —
     identical values to minhash_signatures (groupBy-min over exploded
     shingles == running-min over the shingle-hash array) but with no
@@ -1450,14 +1350,14 @@ def minhash_sig_array_stateless(
     chain is evaluated once per shingle even if Catalyst collapses the
     projections. Docs with no shingles are dropped (same convention as
     the batch side). Output: ``(…df columns…, sig_arr array<long>)``."""
-    coeffs = minhash_coeffs(num_perm)
-    tokd = df.withColumn("_toks", word_tokens(F.col(text_col)))
+    coeffs = minhash_coeffs(NUM_PERM)
+    tokd = df.withColumn("_toks", word_tokens(F.col("text")))
     hashes = F.transform(
         shingles_from_tokens(F.col("_toks")), lambda s: md5_i32(s)
     )
     sig_arr = F.aggregate(
         hashes,
-        F.array(*[F.lit(MERSENNE_31).cast("long") for _ in range(num_perm)]),
+        F.array(*[F.lit(MERSENNE_31).cast("long") for _ in range(NUM_PERM)]),
         lambda acc, h: F.zip_with(
             acc,
             F.array(
@@ -1476,21 +1376,17 @@ def minhash_sig_array_stateless(
     )
 
 
-def band_structs_from_sig_array(
-    num_perm: int = NUM_PERM, band_size: int = BAND_SIZE
-):
+def band_structs_from_sig_array():
     """(band_idx, bk*) struct array from a sig_arr column — the
     stateless mirror of the band construction in lsh_candidate_pairs
     (same packed sig-tuple keys, packed_band_keys)."""
-    n_bands = num_perm // band_size
+    n_bands = NUM_PERM // BAND_SIZE
     return F.array(
         *[
             F.struct(
                 F.lit(b).alias("band_idx"),
                 *packed_band_keys(
-                    lambda i: F.element_at(F.col("sig_arr"), i + 1),
-                    b,
-                    band_size,
+                    lambda i: F.element_at(F.col("sig_arr"), i + 1), b
                 ),
             )
             for b in range(n_bands)

@@ -20,10 +20,10 @@ def needs_summary(col: Column, threshold: int = ROUTER_THRESHOLD_BYTES) -> Colum
 
 
 def route_by_length(
-    df: DataFrame, col: str = "text", threshold: int = ROUTER_THRESHOLD_BYTES
+    df: DataFrame, threshold: int = ROUTER_THRESHOLD_BYTES
 ) -> tuple[DataFrame, DataFrame]:
     """F3: (long_branch, short_branch). Two filtered branches of one
     plan — Catalyst pushes both predicates to the scan; no materialized
     split, no shuffle."""
-    pred = needs_summary(F.col(col), threshold)
+    pred = needs_summary(F.col("text"), threshold)
     return df.filter(pred), df.filter(~pred)

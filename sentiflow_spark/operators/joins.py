@@ -55,7 +55,6 @@ def binned_range_join(
     right_val: str,
     tolerance: float,
     equi_keys: "Sequence[tuple[str, str]]" = (),
-    how_residual=None,
 ) -> DataFrame:
     """Fact-fact proximity join: pairs where
     ``|left_val - right_val| <= tolerance``, without a nested loop.
@@ -77,9 +76,7 @@ def binned_range_join(
     constraint (same user, same day) MUST ride the shuffle key, not
     the residual: as a residual it would cross-join everything
     sharing a value bin before filtering, and the shuffle would
-    carry the blowup. ``how_residual``: optional extra Column
-    predicate applied with the tolerance residual (for genuinely
-    non-equi extras only).
+    carry the blowup.
     """
     lbin = F.floor(F.col(left_val) / tolerance)
     l3 = left.withColumn(
@@ -90,9 +87,4 @@ def binned_range_join(
     for lk, rk in equi_keys:
         cond = cond & (l3[lk] == r[rk])
     joined = l3.join(r, cond).drop("_bin")
-    residual = (
-        F.abs(F.col(left_val) - F.col(right_val)) <= tolerance
-    )
-    if how_residual is not None:
-        residual = residual & how_residual
-    return joined.filter(residual)
+    return joined.filter(F.abs(F.col(left_val) - F.col(right_val)) <= tolerance)

@@ -2,7 +2,8 @@
 
 Reference parity notes (citations into /root/reference):
 - P2 RedditPost→RawContent: ``internal/producer/fetch.go:184-198`` —
-  deterministic sha256 content id + nested metadata struct.
+  deterministic sha256 content id (the reference's nested metadata
+  struct has no reader here and is not carried).
 - P6 JSON (de)serialization: ``internal/utils/kafka_helpers.go:8-26``.
 - K3 row shaping for the serving store: ``internal/db/dynamodb.go:191-236``
   (optional fields elided — empty string stored as absent → NULL here).
@@ -26,7 +27,6 @@ def to_raw_content(
     source: Column,
     post_id: Column,
     text: Column,
-    metadata: dict[str, Column] | None = None,
 ) -> DataFrame:
     """P2: canonical RawContent record with deterministic sha256 id.
 
@@ -34,15 +34,12 @@ def to_raw_content(
     function of the key triple, which is what makes the whole pipeline
     idempotent under at-least-once replay (dedup/upsert by id).
     """
-    cols = [
+    return df.select(
         content_id(topic, source, post_id).alias("content_id"),
         source.alias("source"),
         topic.alias("topic"),
         text.alias("text"),
-    ]
-    if metadata:
-        cols.append(F.struct(*[c.alias(k) for k, c in metadata.items()]).alias("metadata"))
-    return df.select(*cols)
+    )
 
 
 def request_batch(df: DataFrame) -> DataFrame:

@@ -27,8 +27,8 @@ from pyspark.sql import functions as F
 from sentiflow_spark.functions.vectors import cosine_q, dot_long, norm_sq, quantize
 
 
-def with_quantized(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
-    q = quantize(F.col(vec_col))
+def with_quantized(df: DataFrame) -> DataFrame:
+    q = quantize(F.col("embedding"))
     return df.withColumn("qvec", q).withColumn("qnorm", norm_sq(F.col("qvec")))
 
 
@@ -36,17 +36,16 @@ def brute_force_topk(
     corpus: DataFrame,
     probes: DataFrame,
     k: int = 5,
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """Exact cosine top-k per probe. probes/corpus must carry qvec+qnorm
     (see with_quantized); probe ids excluded from their own results."""
     p = probes.select(
-        F.col(id_col).alias("probe_id"),
+        F.col("vec_id").alias("probe_id"),
         F.col("qvec").alias("p_qvec"),
         F.col("qnorm").alias("p_qnorm"),
     )
     c = corpus.select(
-        F.col(id_col).alias("cand_id"),
+        F.col("vec_id").alias("cand_id"),
         F.col("qvec").alias("c_qvec"),
         F.col("qnorm").alias("c_qnorm"),
     )
@@ -75,19 +74,17 @@ def bucketed_topk(
     corpus: DataFrame,
     probes: DataFrame,
     k: int = 5,
-    id_col: str = "vec_id",
-    bucket_col: str = "label",
 ) -> DataFrame:
     """IVF-style: score only candidates in the probe's bucket."""
     p = probes.select(
-        F.col(id_col).alias("probe_id"),
-        F.col(bucket_col).alias("bucket"),
+        F.col("vec_id").alias("probe_id"),
+        F.col("label").alias("bucket"),
         F.col("qvec").alias("p_qvec"),
         F.col("qnorm").alias("p_qnorm"),
     )
     c = corpus.select(
-        F.col(id_col).alias("cand_id"),
-        F.col(bucket_col).alias("bucket"),
+        F.col("vec_id").alias("cand_id"),
+        F.col("label").alias("bucket"),
         F.col("qvec").alias("c_qvec"),
         F.col("qnorm").alias("c_qnorm"),
     )
@@ -115,19 +112,18 @@ def bucketed_topk(
 def cosine_neardup_pairs(
     corpus: DataFrame,
     threshold: float = 0.99,
-    id_col: str = "vec_id",
     bucket_col: str = "label",
 ) -> DataFrame:
     """Embedding near-duplicate pairs, blocked by the coarse bucket so
     the pair space is (n/b)² per bucket instead of n² global."""
     a = corpus.select(
-        F.col(id_col).alias("id_a"),
+        F.col("vec_id").alias("id_a"),
         F.col(bucket_col).alias("bucket"),
         F.col("qvec").alias("qa"),
         F.col("qnorm").alias("na"),
     )
     b = corpus.select(
-        F.col(id_col).alias("id_b"),
+        F.col("vec_id").alias("id_b"),
         F.col(bucket_col).alias("bucket"),
         F.col("qvec").alias("qb"),
         F.col("qnorm").alias("nb"),
@@ -150,7 +146,6 @@ def rph_neardup_pairs(
     corpus: DataFrame,
     planes: list[list[int]],
     threshold: float = 0.99,
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """Random-hyperplane LSH near-dup pairs: data-independent cosine
     blocking (vs the IVF/label blocking above, which needs a trained
@@ -162,13 +157,13 @@ def rph_neardup_pairs(
 
     bucketed = corpus.withColumn("rp_bucket", rp_bucket(F.col("qvec"), planes))
     a = bucketed.select(
-        F.col(id_col).alias("id_a"),
+        F.col("vec_id").alias("id_a"),
         F.col("rp_bucket"),
         F.col("qvec").alias("qa"),
         F.col("qnorm").alias("na"),
     )
     b = bucketed.select(
-        F.col(id_col).alias("id_b"),
+        F.col("vec_id").alias("id_b"),
         F.col("rp_bucket"),
         F.col("qvec").alias("qb"),
         F.col("qnorm").alias("nb"),
@@ -191,7 +186,6 @@ def kmeans_lite(
     corpus: DataFrame,
     k: int = 8,
     iters: int = 3,
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """Deterministic distributed k-means over quantized embeddings —
     the trainer that produces real IVF centroid assignments (the
@@ -218,7 +212,7 @@ def kmeans_lite(
     mean update by at most n_points × dim (Σ‖x−c‖² = Σ‖x−μ‖² +
     n‖μ−c‖², each coord of μ−c in [0,1)) — negligible against
     quantized-unit² distances and bounded in the monotonicity test."""
-    dim_df = corpus.select(F.col(id_col).alias("vid"), F.col("qvec"))
+    dim_df = corpus.select(F.col("vec_id").alias("vid"), F.col("qvec"))
     spark = corpus.sparkSession
 
     def assign(centroids_rows: list[tuple[int, list[int]]]) -> DataFrame:
@@ -282,7 +276,7 @@ def kmeans_lite(
         ]
         assigned = assign(centroids)
     return assigned.select(
-        F.col("vid").alias(id_col), "cluster", F.col("dist").alias("sq_dist")
+        F.col("vid").alias("vec_id"), "cluster", F.col("dist").alias("sq_dist")
     )
 
 
@@ -290,7 +284,6 @@ def knn_graph(
     emb: DataFrame,
     planes: list[list[int]],
     k: int = 3,
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """Bucketed k-NN graph: random-hyperplane blocking, then exact
     cosine rank within the bucket. ``emb`` must carry qvec+qnorm
@@ -317,7 +310,7 @@ def knn_graph(
 
     e = emb.select(
         rp_bucket(F.col("qvec"), planes).alias("rp_bucket"),
-        F.col(id_col).alias("src"),
+        F.col("vec_id").alias("src"),
         "qvec",
         "qnorm",
     )
@@ -376,12 +369,7 @@ def knn_graph(
     )
 
 
-def dtw_distances(
-    pairs: DataFrame,
-    band: int = 3,
-    a_col: str = "p_series",
-    b_col: str = "series",
-) -> DataFrame:
+def dtw_distances(pairs: DataFrame, band: int) -> DataFrame:
     """Banded dynamic-time-warping distance per row — the custom
     operator Spark's built-ins genuinely cannot express (a dynamic
     program per pair), implemented the engine's sanctioned way:
@@ -389,8 +377,9 @@ def dtw_distances(
     band of half-width ``band`` (classic speed/accuracy trade: O(L*band)
     per pair instead of O(L^2), and a warping-path sanity constraint).
 
-    Input rows carry two integer series columns; output replaces them
-    with ``dtw`` (int64). All arithmetic is integer, so the distance is
+    Input rows carry the integer series columns ``p_series`` and
+    ``series``; output replaces them with ``dtw`` (int64). All
+    arithmetic is integer, so the distance is
     bit-deterministic at any batch size or partitioning. Scale shape:
     the DP runs where the pair row lives — no shuffle, no state, cost
     linear in pairs × L × band.
@@ -398,12 +387,12 @@ def dtw_distances(
     import pandas as pd  # noqa: F401 (schema side)
 
     out_fields = [
-        f.name for f in pairs.schema.fields if f.name not in (a_col, b_col)
+        f.name for f in pairs.schema.fields if f.name not in ("p_series", "series")
     ]
     schema = ", ".join(
         f"{f.name} {f.dataType.simpleString()}"
         for f in pairs.schema.fields
-        if f.name not in (a_col, b_col)
+        if f.name not in ("p_series", "series")
     ) + ", dtw long"
 
     def _dtw_one(a, b, np):
@@ -430,8 +419,8 @@ def dtw_distances(
                 out["dtw"] = []
                 yield out
                 continue
-            a_lens = {len(x) for x in pdf[a_col]}
-            b_lens = {len(x) for x in pdf[b_col]}
+            a_lens = {len(x) for x in pdf["p_series"]}
+            b_lens = {len(x) for x in pdf["series"]}
             if len(a_lens) == 1 and len(b_lens) == 1:
                 # uniform lengths (the common case: one corpus-wide
                 # series span): vectorize the DP ACROSS the batch —
@@ -439,8 +428,8 @@ def dtw_distances(
                 # cell op runs on all P pairs at once, ~100x less
                 # Python overhead than a per-pair loop. Identical
                 # integer recurrence, bit-identical results.
-                A = np.stack([np.asarray(x, dtype=np.int64) for x in pdf[a_col]])
-                B = np.stack([np.asarray(x, dtype=np.int64) for x in pdf[b_col]])
+                A = np.stack([np.asarray(x, dtype=np.int64) for x in pdf["p_series"]])
+                B = np.stack([np.asarray(x, dtype=np.int64) for x in pdf["series"]])
                 P, n = A.shape
                 m = B.shape[1]
                 r = max(band, abs(n - m))
@@ -464,7 +453,7 @@ def dtw_distances(
                         np.asarray(b, dtype=np.int64),
                         np,
                     )
-                    for a, b in zip(pdf[a_col], pdf[b_col])
+                    for a, b in zip(pdf["p_series"], pdf["series"])
                 ]
             out = pdf[out_fields].copy()
             out["dtw"] = dtws
@@ -515,10 +504,6 @@ def dtw_topk_pruned(
     k: int,
     band: int = 3,
     prefilter_m: int = 32,
-    id_col: str = "cand_id",
-    probe_col: str = "probe_id",
-    a_col: str = "p_series",
-    b_col: str = "series",
 ) -> DataFrame:
     """Exact DTW top-k with the LB_Keogh cascade: the JVM-side lower
     bound runs over EVERY (probe, candidate) pair, the Python dynamic
@@ -528,8 +513,8 @@ def dtw_topk_pruned(
     the result is provably identical to brute-force DTW: an excluded
     candidate has dtw >= lb > kth.
 
-    Inputs: ``series_df`` carries (id_col, b_col); ``probes_df``
-    carries (probe_col, a_col) and must be broadcast-small.
+    Inputs: ``series_df`` carries (cand_id, series); ``probes_df``
+    carries (probe_id, p_series) and must be broadcast-small.
 
     Four measured lessons shape this (20x probe, 90k pairs x
     700-point series; brute force 87 s, cascade 22-30 s): (1) the
@@ -557,46 +542,46 @@ def dtw_topk_pruned(
     pairs take lb = 0 — never pruned, always handed to the exact DP.
     """
     prefilter_m = max(prefilter_m, k)
-    dense = series_df.select(id_col, b_col).localCheckpoint(eager=False)
-    env_up, env_lo = keogh_envelope(F.col(a_col), band)
+    dense = series_df.select("cand_id", "series").localCheckpoint(eager=False)
+    env_up, env_lo = keogh_envelope(F.col("p_series"), band)
     env = probes_df.select(
-        probe_col, F.col(a_col), env_up.alias("_ub"), env_lo.alias("_lb_env")
+        "probe_id", F.col("p_series"), env_up.alias("_ub"), env_lo.alias("_lb_env")
     )
     slim = (
-        dense.join(F.broadcast(env.select(probe_col, "_ub", "_lb_env")))
-        .filter(F.col(id_col) != F.col(probe_col))
+        dense.join(F.broadcast(env.select("probe_id", "_ub", "_lb_env")))
+        .filter(F.col("cand_id") != F.col("probe_id"))
         .select(
-            probe_col,
-            id_col,
+            "probe_id",
+            "cand_id",
             F.when(
-                F.size(F.col(b_col)) == F.size(F.col("_ub")),
+                F.size(F.col("series")) == F.size(F.col("_ub")),
                 lb_keogh_against_envelope(
-                    F.col(b_col), F.col("_ub"), F.col("_lb_env")
+                    F.col("series"), F.col("_ub"), F.col("_lb_env")
                 ),
             )
             .otherwise(F.lit(0).cast("long"))
             .alias("lb"),
         )
     )
-    w_lb = W.partitionBy(probe_col).orderBy(F.asc("lb"), F.asc(id_col))
+    w_lb = W.partitionBy("probe_id").orderBy(F.asc("lb"), F.asc("cand_id"))
     ranked = slim.withColumn("lbrank", F.row_number().over(w_lb)).localCheckpoint(eager=False)
 
     def wave_pairs(ids: DataFrame) -> DataFrame:
         return (
-            dense.join(F.broadcast(ids), id_col)
-            .join(F.broadcast(probes_df), probe_col)
-            .select(probe_col, id_col, a_col, b_col)
+            dense.join(F.broadcast(ids), "cand_id")
+            .join(F.broadcast(probes_df), "probe_id")
+            .select("probe_id", "cand_id", "p_series", "series")
         )
 
     wave1 = dtw_distances(
         wave_pairs(
-            ranked.filter(F.col("lbrank") <= prefilter_m).select(probe_col, id_col)
+            ranked.filter(F.col("lbrank") <= prefilter_m).select("probe_id", "cand_id")
         ),
-        band=band, a_col=a_col, b_col=b_col,
+        band=band,
     )
     # kth-smallest wave-1 distance per probe (or the largest available
     # when a probe has fewer than k candidates)
-    dk = wave1.groupBy(probe_col).agg(
+    dk = wave1.groupBy("probe_id").agg(
         F.element_at(
             F.sort_array(F.collect_list("dtw")),
             F.least(F.lit(k), F.count(F.lit(1))).cast("int"),
@@ -605,13 +590,13 @@ def dtw_topk_pruned(
     wave2 = dtw_distances(
         wave_pairs(
             ranked.filter(F.col("lbrank") > prefilter_m)
-            .join(F.broadcast(dk), probe_col)
+            .join(F.broadcast(dk), "probe_id")
             .filter(F.col("lb") <= F.col("dk"))
-            .select(probe_col, id_col)
+            .select("probe_id", "cand_id")
         ),
-        band=band, a_col=a_col, b_col=b_col,
+        band=band,
     )
-    w_rank = W.partitionBy(probe_col).orderBy(F.asc("dtw"), F.asc(id_col))
+    w_rank = W.partitionBy("probe_id").orderBy(F.asc("dtw"), F.asc("cand_id"))
     return (
         wave1.unionByName(wave2)
         .withColumn("rank", F.row_number().over(w_rank))
@@ -624,7 +609,6 @@ def multiprobe_knn(
     planes: list[list[int]],
     k: int = 3,
     n_probe_flips: int = 3,
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """Multi-probe LSH k-NN (Lv, Josephson, Wang, Charikar & Li, VLDB
     2007): each query probes its OWN hyperplane bucket plus the
@@ -664,7 +648,7 @@ def multiprobe_knn(
     )
     bucketed = emb.withColumn("rp_bucket", rp_bucket(F.col("qvec"), planes))
     probes = bucketed.select(
-        F.col(id_col).alias("src"),
+        F.col("vec_id").alias("src"),
         F.col("qvec").alias("a_qvec"),
         F.col("qnorm").alias("a_qnorm"),
         F.explode(
@@ -673,7 +657,7 @@ def multiprobe_knn(
     )
     cands = bucketed.select(
         "rp_bucket",
-        F.col(id_col).alias("dst"),
+        F.col("vec_id").alias("dst"),
         F.col("qvec").alias("b_qvec"),
         F.col("qnorm").alias("b_qnorm"),
     )
@@ -705,11 +689,11 @@ PQ_SUB = 8  # dims per subspace
 PQ_K = 16  # codewords per subspace -> 4 bits/code, M bytes/vector << 256B fp32
 
 
-def pq_subvectors(df: DataFrame, id_col: str = "vec_id") -> DataFrame:
+def pq_subvectors(df: DataFrame) -> DataFrame:
     """Explode each quantized vector into its PQ_M subvectors:
     (id, sub_id, subv). Pure Generate + slice — map-side, no shuffle."""
     return df.select(
-        F.col(id_col),
+        F.col("vec_id"),
         F.posexplode(
             F.transform(
                 F.sequence(F.lit(0), F.lit(PQ_M - 1)),
@@ -719,7 +703,7 @@ def pq_subvectors(df: DataFrame, id_col: str = "vec_id") -> DataFrame:
     )
 
 
-def pq_codebook(df: DataFrame, id_col: str = "vec_id") -> DataFrame:
+def pq_codebook(df: DataFrame) -> DataFrame:
     """Deterministic sampled codebook: codeword c of subspace m is the
     m-th subvector of training vector ``vec_id == c`` (c < PQ_K).
 
@@ -729,16 +713,14 @@ def pq_codebook(df: DataFrame, id_col: str = "vec_id") -> DataFrame:
     SQL-expressible, so the oracle can hash-check code assignment, LUT
     construction and ADC scoring end to end. The index structure
     (codes, LUT, asymmetric distance) is identical either way."""
-    return pq_subvectors(
-        df.filter(F.col(id_col) < PQ_K), id_col
-    ).select(
-        F.col(id_col).cast("int").alias("code_id"),
+    return pq_subvectors(df.filter(F.col("vec_id") < PQ_K)).select(
+        F.col("vec_id").cast("int").alias("code_id"),
         "sub_id",
         F.col("subv").alias("cw"),
     )
 
 
-def pq_encode(df: DataFrame, id_col: str = "vec_id") -> DataFrame:
+def pq_encode(df: DataFrame) -> DataFrame:
     """PQ codes: per (vector, subspace), the L2-nearest codeword id
     (ties to the lowest code_id). One broadcast join against the
     K×M-row codebook + a partial-aggregatable min_by argmin — map-side
@@ -746,22 +728,20 @@ def pq_encode(df: DataFrame, id_col: str = "vec_id") -> DataFrame:
     encode pass scales linearly with the corpus at any cluster size."""
     from sentiflow_spark.functions.vectors import l2_sq
 
-    subs = pq_subvectors(df, id_col)
-    cb = pq_codebook(df, id_col)
+    subs = pq_subvectors(df)
+    cb = pq_codebook(df)
     scored = subs.join(F.broadcast(cb), "sub_id").select(
-        id_col,
+        "vec_id",
         "sub_id",
         "code_id",
         l2_sq(F.col("subv"), F.col("cw")).alias("d2"),
     )
-    return scored.groupBy(id_col, "sub_id").agg(
+    return scored.groupBy("vec_id", "sub_id").agg(
         F.min(F.struct("d2", "code_id")).getField("code_id").alias("code_id")
     )
 
 
-def pq_code_arr(
-    df: DataFrame, cb: DataFrame, id_col: str = "vec_id"
-) -> DataFrame:
+def pq_code_arr(df: DataFrame, cb: DataFrame) -> DataFrame:
     """PQ codes as ONE row per vector: ``code_arr[m]`` = the L2-nearest
     codeword id of subspace m (identical argmin and (d2, code_id)
     tie-break as pq_encode — pinned by test_pq_code_arr_matches_encode).
@@ -770,9 +750,9 @@ def pq_code_arr(
     (guide §2.3): the r12 array-ADC arrangement."""
     from sentiflow_spark.functions.vectors import l2_sq
 
-    subs = pq_subvectors(df, id_col)
+    subs = pq_subvectors(df)
     scored = subs.join(F.broadcast(cb), "sub_id").select(
-        id_col,
+        "vec_id",
         "sub_id",
         "code_id",
         l2_sq(F.col("subv"), F.col("cw")).alias("d2"),
@@ -784,10 +764,10 @@ def pq_code_arr(
         for m in range(PQ_M)
     ]
     return (
-        scored.groupBy(id_col)
+        scored.groupBy("vec_id")
         .agg(*aggs)
         .select(
-            id_col,
+            "vec_id",
             F.array(*[F.col(f"_c{m}") for m in range(PQ_M)]).alias(
                 "code_arr"
             ),
@@ -838,7 +818,6 @@ def pq_adc_topk(
     corpus: DataFrame,
     n_probes: int,
     k: int = 5,
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """Asymmetric-distance top-k (Jégou, Douze & Schmid, TPAMI 2011):
     probes stay exact, candidates are PQ codes; distance(probe, cand)
@@ -856,10 +835,8 @@ def pq_adc_topk(
     top-k window over k·n candidates."""
     from sentiflow_spark.functions.vectors import l2_sq
 
-    cb = pq_codebook(corpus, id_col)
-    probe_subs = pq_subvectors(
-        corpus.filter(F.col(id_col) < n_probes), id_col
-    ).select(F.col(id_col).alias("probe_id"), "sub_id", "subv")
+    cb = pq_codebook(corpus)
+    probe_subs = pq_subvectors(corpus.filter(F.col("vec_id") < n_probes)).select(F.col("vec_id").alias("probe_id"), "sub_id", "subv")
     lut_rows = probe_subs.join(F.broadcast(cb), "sub_id").select(
         "probe_id",
         "sub_id",
@@ -867,8 +844,8 @@ def pq_adc_topk(
         l2_sq(F.col("subv"), F.col("cw")).alias("d2"),
     )
     luts = pq_lut_arr(lut_rows, ("probe_id",))
-    codes = pq_code_arr(corpus, cb, id_col).select(
-        F.col(id_col).alias("cand_id"), "code_arr"
+    codes = pq_code_arr(corpus, cb).select(
+        F.col("vec_id").alias("cand_id"), "code_arr"
     )
     adc = (
         codes.join(F.broadcast(luts))
@@ -905,7 +882,7 @@ def ivf_centroids(df: DataFrame) -> DataFrame:
     )
 
 
-def ivfpq_residuals(df: DataFrame, id_col: str = "vec_id") -> DataFrame:
+def ivfpq_residuals(df: DataFrame) -> DataFrame:
     """(id, label, qvec=residual) — each vector minus its coarse-bucket
     centroid: the IVFADC arrangement (Jégou et al., TPAMI 2011 §IV):
     PQ codes the RESIDUAL, which has far less energy than the raw
@@ -913,7 +890,7 @@ def ivfpq_residuals(df: DataFrame, id_col: str = "vec_id") -> DataFrame:
     centroid table is labels × D integers — broadcast."""
     cents = ivf_centroids(df)
     return df.join(F.broadcast(cents), "label").select(
-        id_col,
+        "vec_id",
         "label",
         F.zip_with("qvec", "cent", lambda a, b: a - b).alias("qvec"),
     )
@@ -923,7 +900,6 @@ def ivfpq_adc_topk(
     corpus: DataFrame,
     n_probes: int,
     k: int = 5,
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """IVF-PQ (IVFADC) search — the production ANN index arrangement
     (what a FAISS ``IVFx,PQy`` index is): the coarse partition (label)
@@ -942,15 +918,13 @@ def ivfpq_adc_topk(
     # per-vector subtraction) has FIVE consumers below (codebook,
     # encode, two label joins, probe slice) — materializing residuals
     # once is exactly what a real IVFPQ index build does (r12)
-    resid = ivfpq_residuals(corpus, id_col).localCheckpoint(eager=False)
-    cb = pq_codebook(resid, id_col)
-    codes = pq_code_arr(resid, cb, id_col).join(
-        resid.select(id_col, "label"), id_col
+    resid = ivfpq_residuals(corpus).localCheckpoint(eager=False)
+    cb = pq_codebook(resid)
+    codes = pq_code_arr(resid, cb).join(
+        resid.select("vec_id", "label"), "vec_id"
     )
-    probe_subs = pq_subvectors(
-        resid.filter(F.col(id_col) < n_probes), id_col
-    ).join(resid.select(id_col, "label"), id_col).select(
-        F.col(id_col).alias("probe_id"), "label", "sub_id", "subv"
+    probe_subs = pq_subvectors(resid.filter(F.col("vec_id") < n_probes)).join(resid.select("vec_id", "label"), "vec_id").select(
+        F.col("vec_id").alias("probe_id"), "label", "sub_id", "subv"
     )
     lut_rows = probe_subs.join(F.broadcast(cb), "sub_id").select(
         "probe_id",
@@ -961,7 +935,7 @@ def ivfpq_adc_topk(
     )
     luts = pq_lut_arr(lut_rows, ("probe_id", "label"))
     adc = (
-        codes.select(F.col(id_col).alias("cand_id"), "label", "code_arr")
+        codes.select(F.col("vec_id").alias("cand_id"), "label", "code_arr")
         .join(F.broadcast(luts), "label")
         .filter(F.col("cand_id") != F.col("probe_id"))
         .select("probe_id", "cand_id", adc_d2_expr().alias("adc_d2"))
@@ -979,7 +953,6 @@ def ivfpq_multiprobe_topk(
     n_probes: int,
     nprobe: int,
     k: int = 5,
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """IVF-PQ search with MULTI-PROBE — the recall knob every IVF
     deployment tunes (FAISS's ``nprobe``): each query searches its own
@@ -1000,17 +973,17 @@ def ivfpq_multiprobe_topk(
     never a rerank of the full corpus."""
     from sentiflow_spark.functions.vectors import l2_sq
 
-    resid = ivfpq_residuals(corpus, id_col).localCheckpoint(eager=False)
-    cb = pq_codebook(resid, id_col)
-    codes = pq_code_arr(resid, cb, id_col).join(
-        resid.select(id_col, "label"), id_col
+    resid = ivfpq_residuals(corpus).localCheckpoint(eager=False)
+    cb = pq_codebook(resid)
+    codes = pq_code_arr(resid, cb).join(
+        resid.select("vec_id", "label"), "vec_id"
     )
     cents = ivf_centroids(corpus)
     # (multi-probe's LUTs come from probe qvec × probed-bucket
     # centroids, not from resid — so resid's consumers here are the
     # codebook, the encode pass and the label join; same pin rationale)
-    probes = corpus.filter(F.col(id_col) < n_probes).select(
-        F.col(id_col).alias("probe_id"),
+    probes = corpus.filter(F.col("vec_id") < n_probes).select(
+        F.col("vec_id").alias("probe_id"),
         F.col("label").alias("p_label"),
         F.col("qvec").alias("p_qvec"),
     )
@@ -1052,7 +1025,7 @@ def ivfpq_multiprobe_topk(
     # rows the old (label, sub, code) join + SUM aggregated
     luts = pq_lut_arr(lut_rows, ("probe_id", "label"))
     adc = (
-        codes.select(F.col(id_col).alias("cand_id"), "label", "code_arr")
+        codes.select(F.col("vec_id").alias("cand_id"), "label", "code_arr")
         .join(F.broadcast(luts), "label")
         .filter(F.col("cand_id") != F.col("probe_id"))
         .select("probe_id", "cand_id", adc_d2_expr().alias("adc_d2"))
@@ -1069,19 +1042,18 @@ def brute_force_topk_l2(
     corpus: DataFrame,
     probes: DataFrame,
     k: int = 5,
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """Exact squared-Euclidean top-k per probe — the ground truth the
     PQ recall gate compares against (PQ approximates L2, so the exact
     baseline must rank by the same metric, unlike the cosine ranking
     brute_force_topk produces)."""
     p = probes.select(
-        F.col(id_col).alias("probe_id"),
+        F.col("vec_id").alias("probe_id"),
         F.col("qvec").alias("p_qvec"),
         F.col("qnorm").alias("p_qnorm"),
     )
     c = corpus.select(
-        F.col(id_col).alias("cand_id"),
+        F.col("vec_id").alias("cand_id"),
         F.col("qvec").alias("c_qvec"),
         F.col("qnorm").alias("c_qnorm"),
     )
@@ -1109,7 +1081,6 @@ def matryoshka_rerank_topk(
     head_dims: int = 16,
     cand_k: int = 25,
     k: int = 5,
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """Two-stage adaptive retrieval over nested (Matryoshka)
     embeddings — Kusupati et al., NeurIPS 2022: unlike PQ/SQ8 (which
@@ -1129,13 +1100,13 @@ def matryoshka_rerank_topk(
     (cosine DESC, id tiebreak), so the shortlist is reproducible —
     what lets the oracle mirror it row-for-row."""
     p_head = probes.select(
-        F.col(id_col).alias("probe_id"),
+        F.col("vec_id").alias("probe_id"),
         F.slice(F.col("qvec"), 1, head_dims).alias("p_hvec"),
     ).select(
         "probe_id", "p_hvec", norm_sq(F.col("p_hvec")).alias("p_hnorm")
     )
     c_head = corpus.select(
-        F.col(id_col).alias("cand_id"),
+        F.col("vec_id").alias("cand_id"),
         F.slice(F.col("qvec"), 1, head_dims).alias("c_hvec"),
     ).select(
         "cand_id", "c_hvec", norm_sq(F.col("c_hvec")).alias("c_hnorm")
@@ -1162,12 +1133,12 @@ def matryoshka_rerank_topk(
         .select("probe_id", "cand_id")
     )
     full_c = corpus.select(
-        F.col(id_col).alias("cand_id"),
+        F.col("vec_id").alias("cand_id"),
         F.col("qvec").alias("c_qvec"),
         F.col("qnorm").alias("c_qnorm"),
     )
     full_p = probes.select(
-        F.col(id_col).alias("probe_id"),
+        F.col("vec_id").alias("probe_id"),
         F.col("qvec").alias("p_qvec"),
         F.col("qnorm").alias("p_qnorm"),
     )

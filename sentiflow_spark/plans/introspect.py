@@ -32,21 +32,14 @@ def has_pushed_filter(df: DataFrame, fragment: str) -> bool:
     )
 
 
-def scan_read_columns(df: DataFrame, table_hint: str = "") -> list[list[str]]:
+def scan_read_columns(df: DataFrame) -> list[list[str]]:
     """Top-level ReadSchema column lists for each parquet scan (column
     pruning). Splits only on depth-0 commas so nested struct columns
     (a:struct<b:int,c:int>) stay one entry."""
     out = []
-    location = ""
     for line in formatted_plan(df).splitlines():
         line = line.strip()
-        # the table path lives on the Location line preceding ReadSchema,
-        # never on the ReadSchema line itself — remember it for the hint
-        if line.startswith("Location"):
-            location = line
-        if line.startswith("ReadSchema") and (
-            not table_hint or table_hint in location
-        ):
+        if line.startswith("ReadSchema"):
             body = line.split("struct<", 1)[-1].rstrip(">")
             cols, depth, cur = [], 0, ""
             for ch in body:

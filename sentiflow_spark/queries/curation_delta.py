@@ -86,15 +86,13 @@ from sentiflow_spark.functions.text import fingerprint, token_count
 from sentiflow_spark.operators.dedup import (
     BP_MIN_DOCS,
     NUM_PERM,
-    SPAN_MERGE_GAP,
     SPAN_MIN_FPS,
-    WINNOW_K,
-    WINNOW_POS_BASE,
     _position_islands,
     boiler_segments,
     lsh_candidate_pairs,
     minhash_signatures,
     strip_with_boiler,
+    unpack_winnow_key,
     winnow_fingerprints,
 )
 from sentiflow_spark.queries.curation_dag import (
@@ -487,11 +485,6 @@ def _stale_docs(
     return prior.join(cb.select("seg"), "seg").select("doc_id").distinct()
 
 
-def _unpack_h(key):
-    b = WINNOW_POS_BASE
-    return F.expr(f"({key} + {b - 1}) DIV {b}")
-
-
 def _append_bench_hashes(
     spark: SparkSession, bench_n: DataFrame, path: str, gen: int
 ) -> None:
@@ -501,10 +494,11 @@ def _append_bench_hashes(
     generation-addressable for as-of reads). Bench docs winnow their
     RAW normalized text (one-shot parity: wsrc's bench side is
     docs_n)."""
-    fps = winnow_fingerprints(bench_n, "text", "doc_id")
+    fps = winnow_fingerprints(bench_n)
+    h, _ = unpack_winnow_key("_key")
     hs = (
         fps.select(F.explode("fps").alias("_key"))
-        .select(_unpack_h("_key").alias("h"))
+        .select(h.alias("h"))
         .distinct()
     )
     (
@@ -856,26 +850,18 @@ def publish(
 
     # decontamination from the manifests: unpack stored winnow keys,
     # flag positions whose hash is in the bench set, islands -> spans
-    b = WINNOW_POS_BASE
+    key_h, key_pos = unpack_winnow_key("_key")
     pos = (
         feat.join(s5, "doc_id", "left_semi")
         .filter(F.col("wfps").isNotNull())
         .select("doc_id", F.explode("wfps").alias("_key"))
-        .select(
-            "doc_id",
-            _unpack_h("_key").alias("h"),
-            F.expr(
-                f"((_key + {b - 1}) DIV {b}) * {b} - _key"
-            ).alias("pos"),
-        )
+        .select("doc_id", key_h.alias("h"), key_pos.alias("pos"))
         .distinct()
     )
     flagged = (
         pos.join(bench_h, "h", "left_semi").select("doc_id", "pos").distinct()
     )
-    spans = _position_islands(
-        flagged, "doc_id", WINNOW_K, SPAN_MERGE_GAP, SPAN_MIN_FPS
-    ).localCheckpoint(eager=False)
+    spans = _position_islands(flagged, SPAN_MIN_FPS).localCheckpoint(eager=False)
     spanned = spans.select("doc_id").distinct()
     cut_in = feat.join(spanned, "doc_id", "left_semi").select(
         "doc_id", F.col("text_bp").alias("text")

@@ -578,13 +578,12 @@ GOPHER_RULES_SQL = {
 GOPHER_PASS_SQL = " AND ".join(f"({e})" for e in GOPHER_RULES_SQL.values())
 
 
-def duck_gopher_m_cte(source: str = "documents", prefix: str = "") -> str:
-    """{p}gbase → {p}gm CTE chain computing the Gopher rule metrics
+def duck_gopher_m_cte(source: str = "documents") -> str:
+    """gbase → gm CTE chain computing the Gopher rule metrics
     (n_words, sum_len, n_symbols, n_alpha, n_stop) per doc of
     ``source``. The rule predicates themselves are GOPHER_RULES_SQL /
-    GOPHER_PASS_SQL over {p}gm."""
-    p = prefix
-    return f"""{p}gbase AS (
+    GOPHER_PASS_SQL over gm."""
+    return f"""gbase AS (
       SELECT doc_id,
              regexp_extract_all(text, '\\S+') AS toks,
              regexp_extract_all(lower(text), '{WORD_RE}') AS words,
@@ -593,7 +592,7 @@ def duck_gopher_m_cte(source: str = "documents", prefix: str = "") -> str:
                AS n_symbols
       FROM {source}
     ),
-    {p}gm AS (
+    gm AS (
       SELECT doc_id, n_symbols,
              CAST(len(toks) AS BIGINT) AS n_words,
              CAST(list_sum(list_transform(toks, x -> length(x))) AS BIGINT)
@@ -604,7 +603,7 @@ def duck_gopher_m_cte(source: str = "documents", prefix: str = "") -> str:
              CAST(len(list_intersect(list_distinct(words),
                     [{", ".join(f"'{w}'" for w in GOPHER_STOPWORDS)}])) AS BIGINT)
                AS n_stop
-      FROM {p}gbase
+      FROM gbase
     )"""
 
 

@@ -70,10 +70,10 @@ def _duck_shingles_cte(
 _DUCK_SHINGLES_CTE = _duck_shingles_cte()
 
 
-def _duck_sigs_cte(num_perm: int = NUM_PERM, source: str = "documents") -> str:
+def _duck_sigs_cte(source: str = "documents") -> str:
     mins = ",\n         ".join(
         f"MIN((h * {a} + {b}) % {MERSENNE_31}) AS sig_{i}"
-        for i, (a, b) in enumerate(minhash_coeffs(num_perm))
+        for i, (a, b) in enumerate(minhash_coeffs(NUM_PERM))
     )
     return (
         f"{_duck_shingles_cte(source=source)}, sigs AS "
@@ -81,27 +81,27 @@ def _duck_sigs_cte(num_perm: int = NUM_PERM, source: str = "documents") -> str:
     )
 
 
-def _duck_bands_cte(num_perm: int = NUM_PERM, band_size: int = BAND_SIZE) -> str:
-    n_bands = num_perm // band_size
-    sig_cols = ", ".join(f"sig_{i}" for i in range(num_perm))
+def _duck_bands_cte() -> str:
+    n_bands = NUM_PERM // BAND_SIZE
+    sig_cols = ", ".join(f"sig_{i}" for i in range(NUM_PERM))
     selects = [
         f"SELECT doc_id, {sig_cols}, {b} AS band_idx, "
-        f"md5(concat_ws(',', {', '.join(f'sig_{b * band_size + r}' for r in range(band_size))}))"
+        f"md5(concat_ws(',', {', '.join(f'sig_{b * BAND_SIZE + r}' for r in range(BAND_SIZE))}))"
         f" AS band_key FROM sigs"
         for b in range(n_bands)
     ]
     return ", bands AS (\n" + "\nUNION ALL\n".join(selects) + "\n)"
 
 
-def _duck_match_frac(a: str = "a", b: str = "b", num_perm: int = NUM_PERM) -> str:
+def _duck_match_frac(a: str = "a", b: str = "b") -> str:
     """est_jaccard = matching-signature fraction (shared by the pairs
     query and the survivor query so the near-pair definition cannot
     drift between them)."""
     terms = " + ".join(
         f"CASE WHEN {a}.sig_{i} = {b}.sig_{i} THEN 1 ELSE 0 END"
-        for i in range(num_perm)
+        for i in range(NUM_PERM)
     )
-    return f"({terms}) / {float(num_perm)}"
+    return f"({terms}) / {float(NUM_PERM)}"
 
 
 _DUCK_BAND_PAIRS = """

@@ -883,25 +883,6 @@ def mp4_payload(
     return F.to_binary(F.concat(ftyp, free, moov), F.lit("hex"))
 
 
-def mp4_adversarial_payload(
-    brand, timescale, dur_ticks, fake_ts, fake_ticks, free_bytes, udta_pad
-) -> F.Column:
-    """mp4_payload with the udta decoy dressed as a FULL mvhd field
-    block — 'mvhd' + version/flags + creation + modification + a FAKE
-    timescale and FAKE duration at the exact offsets a naive
-    locate('mvhd') reader would read them from. Used by the decoy
-    property test to prove the box walk reads the real header while
-    the naive scan reads the plant."""
-    decoy = F.concat(
-        F.lit(_MVHD_HEX + "00000000" + "00000000" + "00000000"),
-        _be32(fake_ts),
-        _be32(fake_ticks),
-    )
-    return mp4_payload(
-        brand, timescale, dur_ticks, free_bytes, udta_pad, decoy=decoy
-    )
-
-
 def mp4_box_pos(hx: F.Column, start, box_type_hex: str) -> F.Column:
     """1-indexed hex-char position of the named box's SIZE field, found
     by walking box sizes from ``start`` — the same bounded aggregate()

@@ -573,7 +573,7 @@ def st_neardup_alert(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id") % 10 != 0
     )
     idx_sigs = minhash_signatures(static_docs).localCheckpoint()
-    idx_bands = banded_sigs(idx_sigs, "doc_id").withColumnRenamed(
+    idx_bands = banded_sigs(idx_sigs).withColumnRenamed(
         "doc_id", "idx_doc"
     )
     idx_sig_cols = idx_sigs.select(

@@ -56,6 +56,16 @@ class TableDir:
         finally:
             reader.close()
 
+    def has_parquet(self) -> bool:
+        """True when a parquet file lies at the root or one directory
+        down. A zero-row partitioned write leaves a directory holding
+        none, which a schema-inferring read cannot open. Lists on the
+        driver: no Spark job."""
+        return any(
+            self._fs.globStatus(self._path(self._root, pattern))
+            for pattern in ("*.parquet", "*/*.parquet")
+        )
+
     def size_bytes(self) -> int:
         """Total byte size of everything under the path."""
         return self._fs.getContentSummary(self._root).getLength()

@@ -140,12 +140,12 @@ streaming_sentiment_flow = sentiment_pipeline
 
 
 def watermarked_dedup(
-    events: DataFrame, keys: list[str], ts_col: str = "ts", retention: str = "24 hours"
+    events: DataFrame, keys: list[str], retention: str = "24 hours"
 ) -> DataFrame:
     """A3/J5: the Valkey 24h dedup set as watermarked streaming state
     (RocksDB-backed at scale; key design: put the high-cardinality id in
     the key, let the watermark expire state)."""
-    return events.withWatermark(ts_col, retention).dropDuplicatesWithinWatermark(keys)
+    return events.withWatermark("ts", retention).dropDuplicatesWithinWatermark(keys)
 
 
 def read_state_store(
@@ -220,19 +220,14 @@ def count_flush_batches(
     )
 
 
-def running_user_totals(
-    stream: DataFrame,
-    key_col: str = "user_id",
-    id_col: str = "event_id",
-    value_col: str = "value",
-) -> DataFrame:
-    """Per-key running totals as a custom stateful streaming operator
-    (``applyInPandasWithState``). Each key carries (event count, cents
+def running_user_totals(stream: DataFrame) -> DataFrame:
+    """Per-``user_id`` running totals as a custom stateful streaming
+    operator (``applyInPandasWithState``). Each key carries (event count, cents
     sum) across micro-batches; every input row is emitted with its
     lifetime sequence number and cumulative cents. Monetary values go
     through integer cents (``round(value*100)``) so the running sum is
     exact and order-independent across engines. Rows are ordered by
-    ``id_col`` within a micro-batch, mirroring count_flush_batches'
+    ``event_id`` within a micro-batch, mirroring count_flush_batches'
     determinism contract.
 
     State size is 16 bytes/key — at 1B users that's 16 GB across the
@@ -244,8 +239,8 @@ def running_user_totals(
 
     out_schema = T.StructType(
         [
-            T.StructField(key_col, T.LongType()),
-            T.StructField(id_col, T.LongType()),
+            T.StructField("user_id", T.LongType()),
+            T.StructField("event_id", T.LongType()),
             T.StructField("seq", T.LongType()),
             T.StructField("cum_cents", T.LongType()),
         ]
@@ -260,21 +255,21 @@ def running_user_totals(
     def assign(key, pdfs, state: GroupState):
         n, cents = state.get if state.exists else (0, 0)
         pdf = pd.concat(list(pdfs), ignore_index=True)
-        pdf = pdf.sort_values(id_col, kind="mergesort", ignore_index=True)
-        row_cents = pdf[value_col].mul(100).round().astype("int64")
+        pdf = pdf.sort_values("event_id", kind="mergesort", ignore_index=True)
+        row_cents = pdf["value"].mul(100).round().astype("int64")
         cum = row_cents.cumsum() + cents
         seq = pd.RangeIndex(n + 1, n + 1 + len(pdf)).to_series(index=pdf.index)
         state.update((n + len(pdf), int(cum.iloc[-1]) if len(pdf) else cents))
         yield pd.DataFrame(
             {
-                key_col: pdf[key_col],
-                id_col: pdf[id_col],
+                "user_id": pdf["user_id"],
+                "event_id": pdf["event_id"],
                 "seq": seq,
                 "cum_cents": cum,
             }
         )
 
-    return stream.groupBy(key_col).applyInPandasWithState(
+    return stream.groupBy("user_id").applyInPandasWithState(
         assign,
         out_schema,
         state_schema,
@@ -283,13 +278,11 @@ def running_user_totals(
     )
 
 
-def windowed_counts(
-    events: DataFrame, window: str = "1 hour", ts_col: str = "ts"
-) -> DataFrame:
-    """W4: event-time tumbling counts with watermark-managed state."""
+def windowed_counts(events: DataFrame) -> DataFrame:
+    """W4: event-time hourly tumbling counts with watermark-managed state."""
     return (
-        events.withWatermark(ts_col, "1 hour")
-        .groupBy(F.window(ts_col, window).alias("w"), "event_type")
+        events.withWatermark("ts", "1 hour")
+        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(F.count(F.lit(1)).alias("n"))
         .select(
             F.date_format(F.col("w.start"), "yyyy-MM-dd HH:mm:ss").alias("window_start"),
@@ -299,17 +292,12 @@ def windowed_counts(
     )
 
 
-def sliding_counts(
-    events: DataFrame,
-    window: str = "2 hours",
-    slide: str = "1 hour",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """W4: sliding event-time window under streaming (each event lands
-    in window/slide windows; state per open window)."""
+def sliding_counts(events: DataFrame) -> DataFrame:
+    """W4: 2-hour event-time windows sliding by 1 hour under streaming
+    (each event lands in two windows; state per open window)."""
     return (
-        events.withWatermark(ts_col, "1 hour")
-        .groupBy(F.window(ts_col, window, slide).alias("w"))
+        events.withWatermark("ts", "1 hour")
+        .groupBy(F.window("ts", "2 hours", "1 hour").alias("w"))
         .agg(
             F.count(F.lit(1)).alias("n"),
             F.approx_count_distinct("user_id").alias("n_users_approx"),
@@ -324,14 +312,13 @@ def sliding_counts(
     )
 
 
-def session_counts(
-    events: DataFrame, gap: str = "30 minutes", ts_col: str = "ts"
-) -> DataFrame:
-    """W4: session windows (gap-merged per user) under streaming — the
-    state store merges overlapping sessions as events arrive."""
+def session_counts(events: DataFrame) -> DataFrame:
+    """W4: session windows (30-minute gap-merged per user) under
+    streaming — the state store merges overlapping sessions as events
+    arrive."""
     return (
-        events.withWatermark(ts_col, "1 hour")
-        .groupBy(F.session_window(ts_col, gap).alias("w"), "user_id")
+        events.withWatermark("ts", "1 hour")
+        .groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(
             "user_id",
@@ -347,19 +334,16 @@ def session_counts(
 def interval_join(
     events: DataFrame,
     how: str,
-    left_type: str = "click",
-    right_type: str = "error",
     interval: str = "4 hours",
-    ts_col: str = "ts",
 ) -> DataFrame:
     """Stream-stream join with an event-time interval bound: each
-    left-type event pairs with the same user's right-type events in
+    click event pairs with the same user's error events in
     [ts, ts + interval]. Both sides carry watermarks and the join
     condition bounds event time in BOTH directions, so the state store
     can expire buffered rows — the only way a stream-stream join stays
     bounded-memory at 100 TB/day.
 
-    ``how`` is the join type. With ``"left_outer"`` every left-type
+    ``how`` is the join type. With ``"left_outer"`` every click
     event is emitted, paired or once with nulls when the watermark
     proves no match can arrive. The null-side row cannot be emitted
     eagerly (a match may still come); it materializes only when the
@@ -367,20 +351,20 @@ def interval_join(
     store can discard the row. That is the semantics the oracle must
     model — see st_interval_left_outer."""
     a = (
-        events.filter(F.col("event_type") == left_type)
+        events.filter(F.col("event_type") == "click")
         .select(
             F.col("user_id"),
             F.col("event_id").alias("left_id"),
-            F.col(ts_col).alias("left_ts"),
+            F.col("ts").alias("left_ts"),
         )
         .withWatermark("left_ts", "1 hour")
     )
     b = (
-        events.filter(F.col("event_type") == right_type)
+        events.filter(F.col("event_type") == "error")
         .select(
             F.col("user_id").alias("b_user_id"),
             F.col("event_id").alias("right_id"),
-            F.col(ts_col).alias("right_ts"),
+            F.col("ts").alias("right_ts"),
         )
         .withWatermark("right_ts", "1 hour")
     )
@@ -399,7 +383,7 @@ def interval_join(
     )
 
 
-def chained_hourly_daily(events: DataFrame, ts_col: str = "ts") -> DataFrame:
+def chained_hourly_daily(events: DataFrame) -> DataFrame:
     """W4+ (Spark 3.4+ multiple stateful operators): two CHAINED
     event-time aggregations in one streaming query — hourly counts per
     event_type, re-aggregated into daily max/total — in APPEND mode,
@@ -409,8 +393,8 @@ def chained_hourly_daily(events: DataFrame, ts_col: str = "ts") -> DataFrame:
     like this; it is the streaming shape for rollup serving tables
     (raw → hourly → daily) without landing intermediates."""
     hourly = (
-        events.withWatermark(ts_col, "1 hour")
-        .groupBy(F.window(ts_col, "1 hour").alias("w"), "event_type")
+        events.withWatermark("ts", "1 hour")
+        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(F.count(F.lit(1)).alias("n"))
     )
     daily = (

@@ -137,11 +137,12 @@ def merge_upsert(
     )
     incoming = rows.withColumn("_pri", F.lit(0))
     table = TableDir(spark, table_path)
-    exists = table.exists()
+    stored = table.partition_file_columns(pcol)
     touched: set[int] = set()
     migrating = False
-    if exists:
-        stored = table.partition_file_columns(pcol)
+    # A directory holding no parquet file (what a zero-row first merge
+    # leaves) is merged into as a new table.
+    if stored is not None or table.has_parquet():
         if stored is None:
             # no partition directory yet: a legacy table, inferred
             current = spark.read.parquet(table_path)
@@ -230,16 +231,17 @@ def merge_upsert(
             table.delete(f"{pcol}={p}")
 
 
-def results_sink(table_path: str, key: str = "content_id"):
+def results_sink(table_path: str):
     """foreachBatch callable for writeStream: MERGE each micro-batch
-    into the serving table (K2), idempotent per batchId."""
+    into the serving table (K2) by ``content_id``, idempotent per
+    batchId."""
 
     def _write(batch_df: DataFrame, batch_id: int) -> None:
         merge_upsert(
             batch_df.sparkSession,
             stamp_ttl(batch_df),
             table_path,
-            key,
+            "content_id",
         )
 
     return _write

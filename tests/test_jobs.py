@@ -81,6 +81,28 @@ def test_stream_job_without_checkpoint_leaves_no_temp_dir(spark, sf_dir, monkeyp
         shutil.rmtree(d, ignore_errors=True)
 
 
+def test_stream_job_survives_empty_first_batch(spark, sf_dir):
+    """A zero-row first micro-batch leaves the serving table as a
+    directory holding no parquet file. That run reports 0 rows, and the
+    next run over the same checkpoint merges into the directory as a
+    new table instead of failing to infer a schema from it."""
+    d = tempfile.mkdtemp(prefix="sf_jobs_")
+    try:
+        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+        src = f"{d}/sf"
+        table = f"{src}/documents.parquet"
+        docs.limit(0).coalesce(1).write.parquet(table)
+        argv = ["stream", "--sf-dir", src, "--out", f"{d}/out",
+                "--checkpoint", f"{d}/ckpt"]
+        assert _run(argv)["rows"] == 0
+        docs.limit(50).coalesce(1).write.mode("append").parquet(table)
+        rs = _run(argv)
+        rb = _run(["pipeline", "--sf-dir", src, "--out", f"{d}/batch"])
+        assert rs["rows"] == rb["rows"] > 0
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
+
+
 def test_stream_job_refuses_kafka_brokers(spark, sf_dir):
     """--kafka-brokers has no Kafka source behind it in the stream job:
     the call fails and says so, instead of streaming the --sf-dir files

@@ -10,7 +10,10 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from sentiflow_spark.functions.numeric import MONEY
-from sentiflow_spark.functions.text import quality_score
+from sentiflow_spark.functions.text import (
+    quality_components,
+    quality_from_components,
+)
 from sentiflow_spark.functions.vectors import rp_bucket, rp_hyperplanes
 from sentiflow_spark.operators.skew import salted_aggregate
 
@@ -68,8 +71,16 @@ def test_salted_aggregate_equals_plain(spark, rows, n_salts):
     )
 )
 def test_quality_score_bounded(spark, texts):
+    """The two-step score the quality queries run (components in their
+    own projection, then the combination) stays in [0, 1]."""
     df = spark.createDataFrame([(t,) for t in texts], ["text"])
-    scores = [r["q"] for r in df.select(quality_score(F.col("text")).alias("q")).collect()]
+    c = df.select(
+        *[v.alias(k) for k, v in quality_components(F.col("text")).items()]
+    )
+    q = quality_from_components(
+        F.col("n_chars"), F.col("n_words"), F.col("n_punct"), F.col("n_stop")
+    )
+    scores = [r["q"] for r in c.select(q.alias("q")).collect()]
     assert all(0.0 <= s <= 1.0 for s in scores)
 
 
@@ -458,7 +469,7 @@ def test_unpacked_positions_unique(spark):
         (3, rep * 3 + " tail differs here " + rep * 3),
     ]
     df = spark.createDataFrame(docs, "doc_id long, text string")
-    pos = _unpacked_positions(df, "text", "doc_id", 5, 4)
+    pos = _unpacked_positions(df)
     total = pos.count()
     assert total > 0
     assert total == pos.distinct().count()
@@ -1837,6 +1848,31 @@ def test_mp4_header_parse_inverts_synthesis(spark, cases):
     assert got == want
 
 
+def mp4_adversarial_payload(
+    brand, timescale, dur_ticks, fake_ts, fake_ticks, free_bytes, udta_pad
+) -> F.Column:
+    """mp4_payload with the udta decoy dressed as a FULL mvhd field
+    block — 'mvhd' + version/flags + creation + modification + a FAKE
+    timescale and FAKE duration at the exact offsets a naive
+    locate('mvhd') reader would read them from, so the decoy property
+    test can show the box walk reads the real header while the naive
+    scan reads the plant."""
+    from sentiflow_spark.queries.multimodal_queries import (
+        _MVHD_HEX,
+        _be32,
+        mp4_payload,
+    )
+
+    decoy = F.concat(
+        F.lit(_MVHD_HEX + "00000000" + "00000000" + "00000000"),
+        _be32(fake_ts),
+        _be32(fake_ticks),
+    )
+    return mp4_payload(
+        brand, timescale, dur_ticks, free_bytes, udta_pad, decoy=decoy
+    )
+
+
 @SETTINGS
 @given(
     cases=st.lists(
@@ -1860,7 +1896,6 @@ def test_mp4_box_walk_skips_planted_decoy(spark, cases):
     misparse the two-level walk exists to prevent."""
     from sentiflow_spark.queries.multimodal_queries import (
         _MVHD_HEX,
-        mp4_adversarial_payload,
         parse_mp4_header,
     )
 

@@ -293,3 +293,56 @@ def test_regress_truncated_burst_offsets_fully_suppress(tmp_path):
     r = _regress(tmp_path, old, new)
     assert r.returncode == 3
     assert "BURSTY" in r.stdout and "REGRESSED" not in r.stdout
+
+
+# Defaulted parameters that stay settable with no caller setting them:
+# deployment settings of the external adapters, which an operator sets
+# per environment rather than per call.
+UNSET_PARAMS_ALLOWED = {
+    # request batching against the external LLM service
+    ("sentiflow_spark/pipeline/model_udfs.py", "extract_topics_via_llm", "batch_size"),
+    # health-probe timeout against the external model service
+    ("sentiflow_spark/pipeline/model_udfs.py", "probe_health", "timeout_s"),
+    # where a Kafka consumer starts reading
+    ("sentiflow_spark/sources/kafka_io.py", "kafka_source_options", "starting_offsets"),
+}
+
+
+def _unset_params(root):
+    r = subprocess.run(
+        [sys.executable, os.path.join(TOOLS, "unset_params.py"), str(root)],
+        capture_output=True, text=True,
+    )
+    assert r.returncode in (0, 1), r.stderr
+    return {tuple(line.split()) for line in r.stdout.splitlines()}
+
+
+def test_engine_has_no_unset_defaulted_params():
+    """Every defaulted parameter of an engine function is set by some
+    call in the repository (tools/unset_params.py, iterated to its
+    fixpoint); a parameter no call sets is the constant it always is."""
+    root = os.path.join(os.path.dirname(__file__), os.pardir)
+    assert _unset_params(root) - UNSET_PARAMS_ALLOWED == set()
+
+
+def test_unset_params_scan_follows_forwarding_aliases_and_transform(tmp_path):
+    """The scan finds a parameter only ever forwarded from an unset one,
+    and counts calls made through an import alias or
+    ``DataFrame.transform`` as setting their arguments."""
+    pkg = tmp_path / "sentiflow_spark"
+    pkg.mkdir()
+    (pkg / "m.py").write_text(
+        "def inner(df, col='a'):\n    return df\n\n"
+        "def outer(df, col='a'):\n    return inner(df, col)\n\n"
+        "def aliased(df, n=1):\n    return df\n\n"
+        "def piped(df, k=2):\n    return df\n"
+    )
+    (tmp_path / "tests").mkdir()
+    (tmp_path / "tests" / "t.py").write_text(
+        "from sentiflow_spark.m import aliased as al, outer, piped\n"
+        "outer(1)\nal(1, n=3)\nx.transform(piped, 4)\n"
+    )
+    assert _unset_params(tmp_path) == {
+        ("sentiflow_spark/m.py", "inner", "col"),
+        ("sentiflow_spark/m.py", "outer", "col"),
+    }
